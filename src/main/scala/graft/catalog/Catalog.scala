@@ -23,20 +23,11 @@ final case class Source(
     options: Map[String, String] = Map.empty,
     rawPartitions: Seq[String] = Seq("ingest_date"),
     hubPrimaryKeys: Seq[String] = Nil,
-    /** Engine extension (not in the reference's model): when set and keys
-      * exist, the HUB table is laid out in `hub_buckets` hash buckets so
-      * merges rewrite only touched buckets (HubWriter.writeBucketed).
+    /** Engine extension (not in the reference's model): a keyed HUB's hash
+      * bucket count, so merges rewrite only touched buckets
+      * (`VersionedHub.writeBucketed`). None = `Ingest.DefaultHubBuckets`.
       */
     hubBuckets: Option[Int] = None,
-    /** HUB storage layout: `"versioned"` (default for keyed sources) commits
-      * merges through the [[graft.writers.VersionedHub]] ACID log — bucketed,
-      * O(batch) per merge, time travel + CDC; `"flat"` is the plain
-      * directory-swap [[graft.writers.HubWriter]] (the reference-parity
-      * shape, and the only layout for keyless sources, whose append/overwrite
-      * quirk lives there). None = inherit `defaults.hub_layout`, then the
-      * keyed/keyless default.
-      */
-    hubLayout: Option[String] = None,
     /** The declarative form of the reference's commented-out `keep_cols`
       * scaffold (transform.py:6-8: "drop RAW-only audit columns if
       * desired"): when non-empty, the HUB table keeps ONLY these columns.
@@ -111,22 +102,39 @@ object YamlCatalog {
       throw new IllegalArgumentException(
         s"duplicate source ids in catalog: ${dupIds.mkString(", ")}")
     // RAW/HUB paths derive from (domain, entity) — two enabled sources
-    // sharing them would write the same directories (and HubWriter's swap
-    // is single-writer: concurrent ingest would corrupt the hub)
+    // sharing them would append to one RAW table and merge two sources'
+    // rows into one hub
     val dupPaths = sources.filter(_.enabled)
       .groupBy(s => (s.domain, s.entity))
       .collect { case (de, ss) if ss.size > 1 => s"$de ← ${ss.map(_.id).mkString("/")}" }
     if (dupPaths.nonEmpty)
       throw new IllegalArgumentException(
         s"multiple enabled sources target the same (domain, entity) path: ${dupPaths.mkString("; ")}")
+    defaults.get("hub_layout").foreach(checkHubLayout("defaults", _))
     SourceSystem(version, defaults, sources)
   }
+
+  /** `hub_layout` predates the single hub engine: only `versioned`, a
+    * no-op, is accepted.
+    */
+  private def checkHubLayout(where: String, layout: String): Unit =
+    require(layout == "versioned",
+      s"$where: hub_layout '$layout' is not supported — hubs are versioned only")
 
   private def parseSource(m: Map[String, AnyRef]): Source = {
     def str(k: String, dflt: String = ""): String =
       m.get(k).filter(_ != null).map(_.toString).getOrElse(dflt)
     val id = m.get("id").filter(_ != null).map(_.toString).getOrElse {
       throw new IllegalArgumentException(s"source missing required field 'id': $m")
+    }
+    m.get("hub_layout").filter(_ != null)
+      .foreach(l => checkHubLayout(s"source '$id'", l.toString))
+    val keys = toStringSeq(m.get("hub_primary_keys"), Nil)
+    val buckets = m.get("hub_buckets").filter(_ != null).map { b =>
+      require(keys.nonEmpty, s"source '$id': hub_buckets needs " +
+        "hub_primary_keys — only keyed hubs are bucketed")
+      b.toString.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"source '$id': hub_buckets must be a positive integer, got '$b'"))
     }
     Source(
       id = id,
@@ -136,13 +144,8 @@ object YamlCatalog {
       entity = str("entity"),
       options = toStringMap(m.getOrElse("options", null)),
       rawPartitions = toStringSeq(m.get("raw_partitions"), Seq("ingest_date")),
-      hubPrimaryKeys = toStringSeq(m.get("hub_primary_keys"), Nil),
-      hubBuckets = m.get("hub_buckets").filter(_ != null).map(_.toString.toInt),
-      hubLayout = m.get("hub_layout").filter(_ != null).map(_.toString).map {
-        case l @ ("flat" | "versioned") => l
-        case other => throw new IllegalArgumentException(
-          s"source '$id': hub_layout must be 'flat' or 'versioned', got '$other'")
-      },
+      hubPrimaryKeys = keys,
+      hubBuckets = buckets,
       hubKeepCols = toStringSeq(m.get("hub_keep_cols"), Nil),
       hubZorder = {
         val z = toStringSeq(m.get("hub_zorder"), Nil)

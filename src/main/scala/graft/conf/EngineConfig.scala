@@ -11,11 +11,7 @@ final case class EngineConfig(
     env: String,
     rawBase: String,
     hubBase: String,
-    checkpointBase: String,
-    /** System-wide HUB layout default (`defaults.hub_layout`); a source's own
-      * `hub_layout` overrides it. None = per-source keyed/keyless default.
-      */
-    hubLayout: Option[String] = None
+    checkpointBase: String
 )
 
 object EngineConfig {
@@ -26,7 +22,6 @@ object EngineConfig {
     env = env.orElse(sys.env.get("ENV")).getOrElse("dev"),
     rawBase = defaults.getOrElse("raw_base", "./_lake/raw"),
     hubBase = defaults.getOrElse("hub_base", "./_lake/hub"),
-    checkpointBase = defaults.getOrElse("checkpoint_base", "./_lake/_checkpoints"),
-    hubLayout = defaults.get("hub_layout")
+    checkpointBase = defaults.getOrElse("checkpoint_base", "./_lake/_checkpoints")
   )
 }

@@ -6,7 +6,7 @@ import graft.catalog.{Source, SourceSystem, YamlCatalog}
 import graft.conf.EngineConfig
 import graft.readers.Readers
 import graft.transform.Transform
-import graft.writers.{HubWriter, RawWriter, VersionedHub}
+import graft.writers.{RawWriter, VersionedHub}
 
 import org.apache.log4j.Logger
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -108,29 +108,19 @@ object Ingest {
     val hubDf = Transform.toHub(stamped, s)
     val hubPath = s"${cfg.hubBase}/${s.domain}/${s.entity}"
     val keys = s.hubPrimaryKeys
-    val layout = s.hubLayout.orElse(cfg.hubLayout)
-      .getOrElse(if (keys.nonEmpty) "versioned" else "flat")
-    log.info(s"[${s.id}] writing HUB → $hubPath (keys=${keys.mkString(",")}, layout=$layout)")
-    layout match {
-      case "versioned" if keys.nonEmpty =>
-        VersionedHub.writeBucketed(spark, hubDf, hubPath, keys,
-          s.hubBuckets.getOrElse(DefaultHubBuckets))
-      case "versioned" =>
-        VersionedHub.write(spark, hubDf, hubPath, Seq.empty) // keyless: append
-      case "flat" => s.hubBuckets match {
-        case Some(b) if keys.nonEmpty =>
-          HubWriter.writeBucketed(spark, hubDf, hubPath, keys, b)
-        case _ =>
-          HubWriter.write(spark, hubDf, hubPath, keys)
-      }
-      case other => throw new IllegalArgumentException(
-        s"[${s.id}] unknown hub_layout '$other' (expected 'flat' or 'versioned')")
-    }
+    log.info(s"[${s.id}] writing HUB → $hubPath (keys=${keys.mkString(",")})")
+    if (keys.isEmpty)
+      VersionedHub.write(spark, hubDf, hubPath, Seq.empty) // keyless: append
+    else if (VersionedHub.latest(spark, hubPath).exists(v =>
+        v.nBuckets.isEmpty && v.rows > 0))
+      // a hub adopted by VersionedHub.convert is flat: merge in its layout
+      VersionedHub.write(spark, hubDf, hubPath, keys)
+    else
+      VersionedHub.writeBucketed(spark, hubDf, hubPath, keys,
+        s.hubBuckets.getOrElse(DefaultHubBuckets))
     if (s.hubZorder.nonEmpty) {
-      require(layout == "versioned" && keys.isEmpty,
-        s"[${s.id}] hub_zorder applies only to keyless versioned hubs " +
-          s"(got layout=$layout, keys=${keys.mkString(",")}) — keyed hubs " +
-          "are bucketed; compact per bucket instead")
+      require(keys.isEmpty, s"[${s.id}] hub_zorder applies only to keyless " +
+        "hubs — keyed hubs are bucketed; compact per bucket instead")
       val Seq(za, zb) = s.hubZorder
       log.info(s"[${s.id}] z-order compaction on ($za, $zb)")
       VersionedHub.optimizeZOrder(spark, hubPath, za, zb)
@@ -147,17 +137,13 @@ object Ingest {
     */
   val DefaultHubBuckets: Int = 16
 
-  /** Layout-aware HUB read: a versioned hub (has a `_log/` manifest dir)
-    * reads its latest committed snapshot through the transaction log — a
-    * plain recursive parquet read there would see EVERY version's files at
-    * once (duplicates). Flat hubs read directly (bucket column hidden).
+  /** HUB read: the latest committed snapshot through the transaction log
+    * (a plain recursive parquet read would see EVERY version's files at
+    * once). A path holding an unversioned hub fails with the migration
+    * pointer ([[VersionedHub.read]]).
     */
-  def readHub(spark: SparkSession, path: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(path, "_log")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) VersionedHub.read(spark, path)
-    else HubWriter.readHub(spark, path)
-  }
+  def readHub(spark: SparkSession, path: String): DataFrame =
+    VersionedHub.read(spark, path)
 
   /** Audit-column stamp (framework.py:27-32): `_source_id` literal,
     * `_ingest_ts_utc` per-row current_timestamp, and `ingest_date` as ONE

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import graft.writers.HubWriter
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -10,82 +8,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * The reference plumbs `checkpoint_base` through every layer but never uses
   * it (SURVEY.md §2.9: sources.yaml:5 → config.py:10 → writer.py:18, then
-  * dropped) — this module is the streaming engine that plumbing points at:
+  * dropped) — this module is the streaming engine that plumbing points at.
+  * A plain keyed upsert stream needs no helper: `writeStream.format(
+  * "graft-hub")` ([[graft.sources.HubStreamSink]]) commits each micro-batch
+  * as one batchId-idempotent [[graft.writers.VersionedHub]] version.
   *
-  *   - [[hubUpsertStream]]: `readStream` → `foreachBatch(HubWriter.write)` —
-  *     continuous keyed merge-upsert into the HUB zone with exactly-once
-  *     progress tracked at `checkpointBase`;
+  *   - [[streamingMaterializedView]]: hub upsert + CDF-driven view refresh;
   *   - [[windowedEventCounts]]: watermarked sliding-window aggregation over
   *     an event stream (the streaming twin of the batch `q_events_hourly`
   *     query — same groupBy shape, late data bounded by the watermark).
   *
   * Scale: state size is bounded by (watermark horizon × key cardinality);
-  * the foreachBatch merge costs the same as the batch HubWriter per
-  * micro-batch and inherits its partitioning.
+  * a hub commit per micro-batch costs what the same batch commit costs.
   */
 object StreamingIngest {
-
-  /** Continuous HUB upsert: each micro-batch is merged with the same
-    * last-writer-wins semantics as the batch writer.
-    */
-  def hubUpsertStream(
-      stream: DataFrame,
-      hubPath: String,
-      keys: Seq[String],
-      checkpointPath: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        HubWriter.write(batch.sparkSession, batch, hubPath, keys)
-      }
-      .start()
-
-  /** Bucketed variant: each micro-batch merge rewrites ONLY the hash buckets
-    * it touches (HubWriter.writeBucketed) — the streaming path that stays
-    * O(batch) per trigger instead of O(table), i.e. the one that survives a
-    * 100 TB hub with a high-frequency trigger.
-    */
-  def bucketedHubUpsertStream(
-      stream: DataFrame,
-      hubPath: String,
-      keys: Seq[String],
-      nBuckets: Int,
-      checkpointPath: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        HubWriter.writeBucketed(batch.sparkSession, batch, hubPath, keys, nBuckets)
-      }
-      .start()
-
-  /** Versioned-hub streaming sink: each micro-batch commits as one hub
-    * version through [[graft.writers.VersionedHub]] with the batch id in
-    * the manifest — a replayed batch (foreachBatch is at-least-once after
-    * a crash between merge and checkpoint) short-circuits to its existing
-    * version instead of double-merging, giving an EXACTLY-ONCE table even
-    * though the sink callback is not. This is the Delta
-    * txnAppId/txnVersion idempotent-sink pattern; time travel and the
-    * change feed then work per micro-batch.
-    */
-  def versionedHubUpsertStream(
-      stream: DataFrame,
-      hubPath: String,
-      keys: Seq[String],
-      checkpointPath: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.writers.VersionedHub.write(
-          batch.sparkSession, batch, hubPath, keys, batchId = Some(id))
-        ()
-      }
-      .start()
 
   /** Streaming MATERIALIZED VIEW: each micro-batch (1) upserts into the
     * versioned hub with an idempotent batchId commit, then (2) refreshes a

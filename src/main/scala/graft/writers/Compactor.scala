@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions.col
   * the classic lakehouse small-file problem: at 100 TB, scan cost becomes
   * dominated by file-open overhead and driver file-listing, not bytes.
   *
-  * `compact` rewrites a table directory with a bounded number of records per
-  * output file, preserving the hive partition layout, then atomically swaps
-  * the directory (same single-writer contract as HubWriter). Idempotent and
-  * content-preserving by construction.
+  * `compact` rewrites a RAW table directory with a bounded number of records
+  * per output file, preserving the hive partition layout, then atomically
+  * swaps the directory (single-writer; hubs compact as committed versions
+  * instead). Idempotent and content-preserving by construction.
   */
 object Compactor {
 

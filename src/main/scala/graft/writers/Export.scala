@@ -26,8 +26,8 @@ object Export {
     * each task reads matching bucket files from both sides (verified by
     * the plan gate in PlanSpec: no Exchange under the join).
     *
-    * This is the read-side complement of HubWriter's bucketed layout: hub
-    * buckets prune MERGE rewrites; catalog buckets eliminate JOIN
+    * This is the read-side complement of the versioned hub's bucketed
+    * layout: hub buckets prune MERGE rewrites; catalog buckets eliminate JOIN
     * shuffles. At 100 TB, pre-bucketing the fact tables on their join key
     * turns every subsequent key-join into a map-side zip — the single
     * biggest recurring-query saving a lakehouse layout can buy.

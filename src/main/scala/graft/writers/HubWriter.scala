@@ -1,14 +1,13 @@
 package graft.writers
 
-import java.util.UUID
-
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** HUB-zone sink: keyed merge-upsert with schema evolution, on plain Spark.
+/** The HUB zone's merge kernel: keyed upsert with schema evolution, on
+  * plain Spark. Every hub commit goes through [[VersionedHub]]'s log and
+  * computes its snapshot with these functions.
   *
   * Reproduces the observable semantics of the reference's `write_hub`
   * (metadata_ingestion/src/ingestion_framework/writer.py:18-36), which uses
@@ -26,78 +25,16 @@ import org.apache.spark.sql.types._
   *   - schema evolution: new/missing columns are reconciled by name with type
   *     widening (`unionByName(allowMissingColumns)` + numeric/string widening),
   *     covering Delta `schema.autoMerge` (writer.py:20) plus the CSV
-  *     inferSchema drift case (int→double across runs);
-  *   - initial load keeps the reference's mode quirk: overwrite iff keyless
-  *     (writer.py:32-35).
+  *     inferSchema drift case (int→double across runs).
   *
   * Execution shape (scale): one shuffle of target∪source on the key columns
-  * (window dedup), then a full rewrite of the table. That matches Delta MERGE's
-  * worst case (it also joins and rewrites matched files); Delta's file-level
-  * pruning optimization would come back if the hub were partitioned by a key
-  * prefix. Atomicity without a transaction log is provided by write-to-tmp +
-  * directory swap — single-writer safe, not concurrent-writer safe (documented
-  * limitation vs Delta ACID).
+  * (window dedup) — or, on a bucketed hub, one shuffle on the bucket
+  * ([[mergeBucketedByRun]]) over only the touched buckets. That matches
+  * Delta MERGE's worst case (it also joins and rewrites matched files).
   */
 object HubWriter {
 
   val BucketCol = "_bucket"
-
-  /** Bucketed layout: hub partitioned by `_bucket = pmod(xxhash64(keys), B)`.
-    * A merge then (a) computes the source's bucket set (≤ B values),
-    * (b) reads ONLY those hub partitions (directory pruning), (c) rewrites
-    * ONLY those partitions via per-directory swap. Cost per merge becomes
-    * ∝ touched data, not table size — the plain-Spark analogue of Delta's
-    * file-level pruning, and the difference between O(batch) and O(100 TB)
-    * per incremental load.
-    */
-  def writeBucketed(
-      spark: SparkSession,
-      df: DataFrame,
-      path: String,
-      keys: Seq[String],
-      nBuckets: Int
-  ): Unit = {
-    require(keys.nonEmpty, "bucketed hub requires primary keys")
-    // Hash a CANONICAL representation of each key: if a key column's inferred
-    // type drifts across runs (CSV int→long or int→double — the drifts
-    // reconcileSchemas supports), the raw xxhash64 of the new type would route
-    // the same logical key to a different bucket, the merge would read only
-    // the new bucket, and the stale row would survive in the old one.
-    // canonicalKey renders 5 (int), 5L and 5.0D identically (see its doc), so
-    // both integral AND fractional widenings keep a key in its bucket.
-    val stamped = df.withColumn(BucketCol,
-      pmod(xxhash64(keys.map(k => canonicalKey(col(k), df.schema(k).dataType)): _*),
-        lit(nBuckets)).cast("int"))
-    if (!tableExists(spark, path)) {
-      stamped.write.partitionBy(BucketCol).parquet(path)
-      writeBucketMeta(spark, path, nBuckets)
-    } else {
-      // A different nBuckets (or a table from a different/unknown hash
-      // layout) re-routes keys: the merge would read only the new buckets
-      // and leave stale duplicates in the old ones. Reject rather than
-      // corrupt — a missing/mismatched sidecar means the table was not
-      // written by this layout version and must be rebuilt.
-      readBucketMeta(spark, path) match {
-        case Some(existing) =>
-          require(existing == nBuckets,
-            s"hub at $path is bucketed with nBuckets=$existing; " +
-              s"got nBuckets=$nBuckets — bucket count is immutable once written")
-        case None => throw new IllegalStateException(
-          s"hub at $path has no $BucketMetaName sidecar (layout v$LayoutVersion); " +
-            "it was written by an unknown/older bucket-hash layout — " +
-            "rebuild it (read via readHub, rewrite with writeBucketed)")
-      }
-      val srcBuckets = stamped.select(col(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).sorted.toIndexedSeq // ≤ nBuckets values: driver-safe
-      // mergeSchema: after a partial-bucket schema evolution, untouched
-      // buckets still carry the old footer schema
-      val target = spark.read.option("mergeSchema", "true").parquet(path)
-        .filter(col(BucketCol).isInCollection(srcBuckets))
-      val (t, s) = reconcileSchemas(target, stamped)
-      val merged = merge(t, s, keys)
-      replaceBuckets(spark, merged, path, srcBuckets)
-    }
-  }
 
   /** Canonical string form of a key value for bucket hashing: the SAME
     * logical value must render identically under every type the widening
@@ -123,106 +60,6 @@ object HubWriter {
         .otherwise(d.cast(StringType))
     case DateType => c.cast(TimestampType).cast(StringType)
     case _ => c.cast(StringType)
-  }
-
-  /** Bucket-layout sidecar (`_graft_buckets`): underscore-prefixed so
-    * Spark's parquet reader ignores it. Contents are `v<version>:<nBuckets>`
-    * — the version pins the bucket-hash definition (v3 = xxhash64 over
-    * [[canonicalKey]]-rendered keys), so a hash change cannot silently merge
-    * against a differently-routed table.
-    */
-  val LayoutVersion = 3
-  val BucketMetaName = "_graft_buckets"
-
-  private def bucketMetaPath(path: String) = new Path(path, BucketMetaName)
-
-  private def writeBucketMeta(spark: SparkSession, path: String, n: Int): Unit = {
-    val p = bucketMetaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(s"v$LayoutVersion:$n".getBytes("UTF-8")) finally out.close()
-  }
-
-  /** nBuckets of a hub written with the CURRENT layout version; None when
-    * the sidecar is absent or names a different hash layout.
-    */
-  def readBucketMeta(spark: SparkSession, path: String): Option[Int] = {
-    val p = bucketMetaPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        // read to EOF: a single read() may return short on HDFS/object-store
-        // streams, which would truncate the content and fail the version
-        // match with a misleading "rebuild" error on a healthy hub
-        val buf = new java.io.ByteArrayOutputStream(64)
-        val bytes = new Array[Byte](64)
-        var n = in.read(bytes)
-        while (n >= 0) { buf.write(bytes, 0, n); n = in.read(bytes) }
-        buf.toString("UTF-8").trim match {
-          case s if s.startsWith(s"v$LayoutVersion:") =>
-            Some(s.drop(s"v$LayoutVersion:".length).toInt)
-          case _ => None
-        }
-      } finally in.close()
-    }
-  }
-
-  /** Materialize `merged` (which reads the live table) into a tmp dir
-    * partitioned by bucket, then swap ONLY the touched bucket directories.
-    */
-  private def replaceBuckets(
-      spark: SparkSession,
-      merged: DataFrame,
-      path: String,
-      buckets: Seq[Int]
-  ): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val dest = new Path(path)
-    val fs = dest.getFileSystem(hconf)
-    val tmp = new Path(dest.getParent, s".${dest.getName}__tmp_${UUID.randomUUID()}")
-    merged.write.partitionBy(BucketCol).parquet(tmp.toString)
-    try {
-      buckets.foreach { b =>
-        val part = s"$BucketCol=$b"
-        val from = new Path(tmp, part)
-        val to = new Path(dest, part)
-        if (fs.exists(to) && !fs.delete(to, true))
-          throw new IllegalStateException(s"bucket swap failed: cannot remove $to")
-        if (fs.exists(from) && !fs.rename(from, to))
-          throw new IllegalStateException(s"bucket swap failed: cannot move $from")
-      }
-    } finally fs.delete(tmp, true)
-  }
-
-  /** Read a hub table, hiding the physical bucket column if present;
-    * mergeSchema covers buckets not yet rewritten since a schema evolution.
-    */
-  def readHub(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path).drop(BucketCol)
-
-  def write(
-      spark: SparkSession,
-      df: DataFrame,
-      path: String,
-      keys: Seq[String]
-  ): Unit = {
-    if (!tableExists(spark, path)) {
-      // Initial load (writer.py:32-35): "overwrite" iff keyless, else "append"
-      // — indistinguishable on a fresh path, kept for parity of intent.
-      val mode = if (keys.isEmpty) SaveMode.Overwrite else SaveMode.Append
-      df.write.mode(mode).parquet(path)
-    } else if (keys.isEmpty) {
-      // Degenerate merge condition "false" (writer.py:24): all rows insert.
-      val target = spark.read.parquet(path)
-      val (t, s) = reconcileSchemas(target, df)
-      atomicReplace(spark, t.unionByName(s), path)
-    } else {
-      val target = spark.read.parquet(path)
-      val (t, s) = reconcileSchemas(target, df)
-      atomicReplace(spark, merge(t, s, keys), path)
-    }
   }
 
   /** [[merge]] for BUCKETED commits, computed with ONE exchange instead of
@@ -365,39 +202,5 @@ object HubWriter {
       }
     case (DateType, TimestampType) | (TimestampType, DateType) => TimestampType
     case _ => StringType
-  }
-
-  /** Materialize `df` at `path` atomically for single-writer use:
-    * write to a sibling tmp dir, then swap directories. The source plan reads
-    * the current table, so it must be fully materialized (to tmp) before the
-    * old directory is removed — the tmp write provides exactly that barrier.
-    */
-  private def atomicReplace(spark: SparkSession, df: DataFrame, path: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val dest = new Path(path)
-    val fs = dest.getFileSystem(hconf)
-    val tmp = new Path(dest.getParent, s".${dest.getName}__tmp_${UUID.randomUUID()}")
-    val old = new Path(dest.getParent, s".${dest.getName}__old_${UUID.randomUUID()}")
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (!fs.rename(dest, old))
-      throw new IllegalStateException(s"hub swap failed: could not move $dest aside")
-    if (!fs.rename(tmp, dest)) {
-      fs.rename(old, dest) // roll back
-      throw new IllegalStateException(s"hub swap failed: could not move $tmp into place")
-    }
-    fs.delete(old, true)
-  }
-
-  /** "Does the hub table exist" — stands in for the reference's
-    * `DeltaTable.isDeltaTable` probe (writer.py:22), which is a filesystem
-    * check for `_delta_log`; here: path exists and contains any parquet part.
-    */
-  def tableExists(spark: SparkSession, path: String): Boolean = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      st.isDirectory || n.endsWith(".parquet")
-    }
   }
 }

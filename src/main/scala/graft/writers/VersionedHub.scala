@@ -28,8 +28,8 @@ import org.yaml.snakeyaml.constructor.SafeConstructor
   * exclusion on log record creation"):
   *
   *   1. read the latest committed version V (scan `_log`);
-  *   2. merge-upsert the batch against snapshot V (same semantics as
-  *      [[HubWriter.write]] — reuses its merge + schema-widening);
+  *   2. merge-upsert the batch against snapshot V ([[HubWriter]]'s merge
+  *      kernel: last-writer-wins on the keys + schema widening);
   *   3. write the merged snapshot to a fresh uniquely-named data dir;
   *   4. COMMIT by creating `_log/{V+1}.json` with create-exclusive
   *      (`FileSystem.create(overwrite = false)` — atomic on HDFS and on
@@ -42,8 +42,8 @@ import org.yaml.snakeyaml.constructor.SafeConstructor
   * Uncommitted/orphan data dirs are invisible (reads go through manifests
   * only) and are swept by [[vacuum]].
   *
-  * Scale: each version is a full snapshot (the HubWriter model — Delta
-  * MERGE's worst case too). At 100 TB the same log works over the bucketed
+  * Scale: each flat version is a full snapshot (Delta MERGE's worst case
+  * too). At 100 TB the same log works over the bucketed
   * layout (per-bucket data dirs in the manifest, only touched buckets
   * rewritten); the commit point — one exclusive tiny file create per
   * version — is size-independent.
@@ -190,8 +190,9 @@ object VersionedHub {
     * already in the log returns the existing version without re-merging —
     * exactly-once streaming sinks on top of at-least-once foreachBatch.
     *
-    * With no keys the merge degrades to an append (union), matching
-    * [[HubWriter.write]]'s keyless contract.
+    * With no keys the merge degrades to an append (union), the reference's
+    * keyless contract (writer.py:24); on a fresh path the first commit is
+    * exactly `df`, its overwrite-on-first-load quirk (writer.py:32-35).
     *
     * On a BUCKETED table this dispatches to [[writeBucketed]] with the
     * table's own bucket count: a bucketed version's `dataDir` is only the
@@ -534,6 +535,7 @@ object VersionedHub {
       val committed = history(spark, path)
       for (id <- batchId; v <- committed.find(_.batchId.contains(id)))
         return v.version // replayed batch: already committed
+      if (committed.isEmpty) refuseUnversioned(fs, path)
       val base = committed.lastOption
       // race guard (write() dispatches on the layout BEFORE this loop): a
       // bucketed commit landing in between would make the flat merge below a
@@ -631,6 +633,7 @@ object VersionedHub {
       val committed = history(spark, path)
       for (id <- batchId; v <- committed.find(_.batchId.contains(id)))
         return v.version
+      if (committed.isEmpty) refuseUnversioned(fs, path)
       val base = committed.lastOption
       for (v <- base; b <- v.nBuckets)
         require(b == nBuckets,
@@ -1026,8 +1029,10 @@ object VersionedHub {
     val v = version match {
       case Some(n) => readManifest(spark, path, n).getOrElse(
         throw new IllegalArgumentException(s"hub at $path has no version $n"))
-      case None => latest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path"))
+      case None => latest(spark, path).getOrElse {
+        refuseUnversioned(fileSystem(spark, path), path)
+        throw new IllegalArgumentException(s"no committed versions at $path")
+      }
     }
     if (v.buckets.nonEmpty)
       readDirs(spark, v, v.buckets.values.map(resolve(path, _)).toSeq)
@@ -2555,6 +2560,27 @@ object VersionedHub {
   }
 
   // ---------- log internals ----------
+
+  /** Refuse to start a log over an unversioned hub — visible parquet
+    * files, `_bucket=N` dirs or a `_graft_buckets` sidecar with no `_log`:
+    * a fresh v1 beside them would hide every earlier row. Callers run it
+    * only while the history is empty, so commits on a live table list
+    * nothing extra.
+    */
+  private def refuseUnversioned(fs: FileSystem, path: String): Unit = {
+    val root = new Path(path)
+    val names = if (!fs.exists(root)) Seq.empty
+      else fs.listStatus(root).toSeq.map(_.getPath.getName)
+    require(!names.exists(n =>
+        n == "_graft_buckets" || n.matches(s"$BucketCol=\\d+")),
+      s"$path holds an unversioned bucketed hub: re-land its rows " +
+        "(spark.read.parquet, drop the bucket column) through " +
+        "VersionedHub.writeBucketed at a fresh path")
+    require(!names.exists(n => n.endsWith(".parquet") &&
+        !n.startsWith("_") && !n.startsWith(".")),
+      s"$path holds an unversioned hub: adopt it with VersionedHub.convert " +
+        "(CONVERT TO HUB) first")
+  }
 
   private[graft] def latest(spark: SparkSession, path: String): Option[Version] =
     history(spark, path).lastOption

@@ -1,35 +1,34 @@
 package graft
 
-import java.io.File
+import graft.writers.{HubWriter, VersionedHub}
 
-import graft.writers.HubWriter
-
+/** Bucket routing of keyed hubs (`VersionedHub.writeBucketed`), including
+  * the [[HubWriter.canonicalKey]] hash that keeps drifting key types in
+  * their bucket.
+  */
 class BucketedHubSpec extends SparkTestBase {
   import spark.implicits._
 
-  def bucketFiles(path: String): Map[String, Set[(String, Long)]] =
-    new File(path).listFiles().filter(_.getName.startsWith("_bucket="))
-      .map { d =>
-        d.getName -> d.listFiles().filter(_.getName.endsWith(".parquet"))
-          .map(f => (f.getName, f.lastModified())).toSet
-      }.toMap
+  /** bucket → data dir of the latest version's manifest */
+  def bucketDirs(path: String): Map[Int, String] =
+    VersionedHub.history(spark, path).last.buckets
 
   test("bucketed merge rewrites only the touched buckets") {
     val path = tmpDir("bhub") + "/t"
     val v1 = (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v")
-    HubWriter.writeBucketed(spark, v1, path, Seq("id"), 8)
-    val before = bucketFiles(path)
+    VersionedHub.writeBucketed(spark, v1, path, Seq("id"), 8)
+    val before = bucketDirs(path)
     assert(before.size > 1, "rows spread across buckets")
 
     // update exactly one key → exactly one bucket may change
     val v2 = Seq((42L, "UPDATED")).toDF("id", "v")
-    HubWriter.writeBucketed(spark, v2, path, Seq("id"), 8)
-    val after = bucketFiles(path)
+    VersionedHub.writeBucketed(spark, v2, path, Seq("id"), 8)
+    val after = bucketDirs(path)
 
-    val changed = before.keySet.filter(k => before(k) != after.getOrElse(k, Set()))
+    val changed = before.keySet.filter(k => before.get(k) != after.get(k))
     assert(changed.size == 1, s"exactly one bucket rewritten, got $changed")
 
-    val out = HubWriter.readHub(spark, path).as[(Long, String)].collect().toMap
+    val out = VersionedHub.read(spark, path).as[(Long, String)].collect().toMap
     assert(out.size == 200)
     assert(out(42L) == "UPDATED" && out(43L) == "v43")
   }
@@ -37,11 +36,11 @@ class BucketedHubSpec extends SparkTestBase {
   test("bucketed merge inserts new keys and stays idempotent") {
     val path = tmpDir("bhub") + "/t"
     val v1 = (1L to 50L).map(i => (i, i * 10)).toDF("id", "x")
-    HubWriter.writeBucketed(spark, v1, path, Seq("id"), 4)
+    VersionedHub.writeBucketed(spark, v1, path, Seq("id"), 4)
     val v2 = (45L to 60L).map(i => (i, i * 100)).toDF("id", "x")
-    HubWriter.writeBucketed(spark, v2, path, Seq("id"), 4)
-    HubWriter.writeBucketed(spark, v2, path, Seq("id"), 4) // idempotent
-    val out = HubWriter.readHub(spark, path).as[(Long, Long)].collect().toMap
+    VersionedHub.writeBucketed(spark, v2, path, Seq("id"), 4)
+    VersionedHub.writeBucketed(spark, v2, path, Seq("id"), 4) // idempotent
+    val out = VersionedHub.read(spark, path).as[(Long, Long)].collect().toMap
     assert(out.size == 60)
     assert(out(44L) == 440L, "untouched key keeps v1 value")
     assert(out(45L) == 4500L && out(60L) == 6000L, "overlap + inserts take v2")
@@ -50,13 +49,13 @@ class BucketedHubSpec extends SparkTestBase {
   test("bucket routing survives key type drift (canonical string hash)") {
     val path = tmpDir("bhub") + "/t"
     val v1 = (1L to 100L).map(i => (i.toInt, s"v$i")).toDF("id", "v")
-    HubWriter.writeBucketed(spark, v1, path, Seq("id"), 8)
+    VersionedHub.writeBucketed(spark, v1, path, Seq("id"), 8)
     // same logical keys arrive as LONG (CSV inferSchema drift int→long):
     // the canonical hash must route them to the SAME buckets, so the merge
     // replaces rather than duplicates
     val v2 = (1L to 100L).map(i => (i, "DRIFTED")).toDF("id", "v")
-    HubWriter.writeBucketed(spark, v2, path, Seq("id"), 8)
-    val out = HubWriter.readHub(spark, path)
+    VersionedHub.writeBucketed(spark, v2, path, Seq("id"), 8)
+    val out = VersionedHub.read(spark, path)
     assert(out.count() == 100, "no duplicate keys after type drift")
     assert(out.filter(out("v") === "DRIFTED").count() == 100)
   }
@@ -64,14 +63,14 @@ class BucketedHubSpec extends SparkTestBase {
   test("bucket routing survives FRACTIONAL key type drift (int→double)") {
     val path = tmpDir("bhub") + "/t"
     val v1 = (1L to 100L).map(i => (i.toInt, s"v$i")).toDF("id", "v")
-    HubWriter.writeBucketed(spark, v1, path, Seq("id"), 8)
+    VersionedHub.writeBucketed(spark, v1, path, Seq("id"), 8)
     // same logical keys arrive as DOUBLE (CSV inferSchema drift int→double,
     // the case the widen ladder supports): CAST(5 AS STRING)='5' but
     // CAST(5.0D AS STRING)='5.0', so a naive string hash would re-bucket
     // every key and the merge would duplicate all 100 rows
     val v2 = (1L to 100L).map(i => (i.toDouble, "DRIFTED")).toDF("id", "v")
-    HubWriter.writeBucketed(spark, v2, path, Seq("id"), 8)
-    val out = HubWriter.readHub(spark, path)
+    VersionedHub.writeBucketed(spark, v2, path, Seq("id"), 8)
+    val out = VersionedHub.read(spark, path)
     assert(out.count() == 100, "no duplicate keys after fractional type drift")
     assert(out.filter(out("v") === "DRIFTED").count() == 100)
   }
@@ -104,24 +103,12 @@ class BucketedHubSpec extends SparkTestBase {
   test("changing nBuckets on an existing hub is rejected") {
     val path = tmpDir("bhub") + "/t"
     val v1 = (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
-    HubWriter.writeBucketed(spark, v1, path, Seq("id"), 8)
-    assert(HubWriter.readBucketMeta(spark, path).contains(8))
+    VersionedHub.writeBucketed(spark, v1, path, Seq("id"), 8)
+    assert(VersionedHub.history(spark, path).last.nBuckets.contains(8))
     val e = intercept[IllegalArgumentException] {
-      HubWriter.writeBucketed(spark, v1, path, Seq("id"), 16)
+      VersionedHub.writeBucketed(spark, v1, path, Seq("id"), 16)
     }
     assert(e.getMessage.contains("immutable"))
-  }
-
-  test("merging into a hub without a layout sidecar is rejected") {
-    val path = tmpDir("bhub") + "/t"
-    val v1 = (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
-    HubWriter.writeBucketed(spark, v1, path, Seq("id"), 8)
-    // simulate a table written by an older/unknown bucket-hash layout
-    new File(path, HubWriter.BucketMetaName).delete()
-    val e = intercept[IllegalStateException] {
-      HubWriter.writeBucketed(spark, v1, path, Seq("id"), 8)
-    }
-    assert(e.getMessage.contains("rebuild"))
   }
 
   test("bucketed merge handles schema evolution like the flat writer") {
@@ -129,10 +116,10 @@ class BucketedHubSpec extends SparkTestBase {
     // 20 keys spread over all buckets, then evolve schema via ONE key —
     // most buckets keep the old footer schema and must still read correctly
     val v1 = (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
-    HubWriter.writeBucketed(spark, v1, path, Seq("id"), 4)
-    HubWriter.writeBucketed(spark,
+    VersionedHub.writeBucketed(spark, v1, path, Seq("id"), 4)
+    VersionedHub.writeBucketed(spark,
       Seq((21L, "b", 1.5)).toDF("id", "v", "score"), path, Seq("id"), 4)
-    val out = HubWriter.readHub(spark, path)
+    val out = VersionedHub.read(spark, path)
     assert(out.columns.toSet == Set("id", "v", "score"))
     assert(out.count() == 21)
     val r21 = out.filter(out("id") === 21L).collect().head

@@ -75,6 +75,44 @@ class CatalogSpec extends AnyFunSuite {
     assert(e.getMessage.contains("duplicate source ids"))
   }
 
+  /** A one-source catalog; `defaults` and `extra` (the source's remaining
+    * lines) are spliced in verbatim.
+    */
+  private def oneSource(extra: String, defaults: String = "{}"): String =
+    s"""version: 1
+       |defaults: $defaults
+       |sources:
+       |  - id: s
+       |    type: csv
+       |$extra""".stripMargin
+
+  private def refusal(yaml: String): String =
+    intercept[IllegalArgumentException](YamlCatalog.loadString(yaml)).getMessage
+
+  test("hub_layout: versioned is a no-op; flat and unknown layouts are refused") {
+    assert(YamlCatalog.loadString(oneSource("    hub_layout: versioned\n"))
+      .sources.map(_.id) == Seq("s"))
+    assert(YamlCatalog.loadString(
+      oneSource("", defaults = "{hub_layout: versioned}")).sources.size == 1)
+    for (bad <- Seq("flat", "delta")) {
+      assert(refusal(oneSource(s"    hub_layout: $bad\n"))
+        .contains("hubs are versioned only"))
+      assert(refusal(oneSource("", defaults = s"{hub_layout: $bad}"))
+        .contains("hubs are versioned only"))
+    }
+  }
+
+  test("hub_buckets must be a positive integer on a keyed source") {
+    val keyed = "    hub_primary_keys: [k]\n"
+    assert(YamlCatalog.loadString(oneSource(keyed + "    hub_buckets: 8\n"))
+      .sources.head.hubBuckets.contains(8))
+    for (bad <- Seq("0", "-4", "eight", "2.5"))
+      assert(refusal(oneSource(keyed + s"    hub_buckets: $bad\n"))
+        .contains("positive integer"), bad)
+    assert(refusal(oneSource("    hub_buckets: 8\n"))
+      .contains("needs hub_primary_keys"))
+  }
+
   test("reference catalog itself parses") {
     val ref = YamlCatalog.load(
       "/root/reference/metadata_ingestion/metadata/sources.yaml")

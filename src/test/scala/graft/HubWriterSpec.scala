@@ -1,20 +1,26 @@
 package graft
 
-import graft.writers.HubWriter
-import org.apache.spark.sql.Row
+import graft.writers.VersionedHub
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
+
+/** The merge kernel (`HubWriter.merge` / `reconcileSchemas`) through its
+  * one flat commit path, `VersionedHub.write`.
+  */
 class HubWriterSpec extends SparkTestBase {
   import spark.implicits._
+
+  private def read(path: String): DataFrame = VersionedHub.read(spark, path)
 
   test("initial load then keyed upsert: update wins, new row inserts") {
     val path = tmpDir("hub") + "/t"
     val v1 = Seq((1, "a", "2024-01-01T00:00:00"), (2, "b", "2024-01-01T00:00:00"))
       .toDF("id", "v", "_ingest_ts_utc")
-    HubWriter.write(spark, v1, path, Seq("id"))
+    VersionedHub.write(spark, v1, path, Seq("id"))
     val v2 = Seq((2, "B", "2024-01-02T00:00:00"), (3, "c", "2024-01-02T00:00:00"))
       .toDF("id", "v", "_ingest_ts_utc")
-    HubWriter.write(spark, v2, path, Seq("id"))
-    val out = spark.read.parquet(path).select("id", "v").as[(Int, String)]
+    VersionedHub.write(spark, v2, path, Seq("id"))
+    val out = read(path).select("id", "v").as[(Int, String)]
       .collect().sortBy(_._1)
     assert(out.toSeq == Seq((1, "a"), (2, "B"), (3, "c")))
   }
@@ -22,18 +28,18 @@ class HubWriterSpec extends SparkTestBase {
   test("idempotency: re-merging the same batch leaves hub unchanged") {
     val path = tmpDir("hub") + "/t"
     val batch = Seq((1, "x"), (2, "y")).toDF("id", "v")
-    HubWriter.write(spark, batch, path, Seq("id"))
-    HubWriter.write(spark, batch, path, Seq("id"))
-    HubWriter.write(spark, batch, path, Seq("id"))
-    assert(spark.read.parquet(path).count() == 2)
+    VersionedHub.write(spark, batch, path, Seq("id"))
+    VersionedHub.write(spark, batch, path, Seq("id"))
+    VersionedHub.write(spark, batch, path, Seq("id"))
+    assert(read(path).count() == 2)
   }
 
   test("keyless merge appends everything (condition degrades to false)") {
     val path = tmpDir("hub") + "/t"
     val batch = Seq((1, "x")).toDF("id", "v")
-    HubWriter.write(spark, batch, path, Nil)
-    HubWriter.write(spark, batch, path, Nil)
-    assert(spark.read.parquet(path).count() == 2)
+    VersionedHub.write(spark, batch, path, Nil)
+    VersionedHub.write(spark, batch, path, Nil)
+    assert(read(path).count() == 2)
   }
 
   test("null keys never match: both old and new null-key rows survive") {
@@ -42,18 +48,18 @@ class HubWriterSpec extends SparkTestBase {
       StructField("id", IntegerType), StructField("v", StringType)))
     def df(rows: Seq[Row]) =
       spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
-    HubWriter.write(spark, df(Seq(Row(null, "old_null"), Row(1, "one"))), path, Seq("id"))
-    HubWriter.write(spark, df(Seq(Row(null, "new_null"), Row(1, "ONE"))), path, Seq("id"))
-    val out = spark.read.parquet(path).as[(Option[Int], String)].collect()
+    VersionedHub.write(spark, df(Seq(Row(null, "old_null"), Row(1, "one"))), path, Seq("id"))
+    VersionedHub.write(spark, df(Seq(Row(null, "new_null"), Row(1, "ONE"))), path, Seq("id"))
+    val out = read(path).as[(Option[Int], String)].collect()
     assert(out.count(_._1.isEmpty) == 2, "null-key rows always insert")
     assert(out.collect { case (Some(1), v) => v }.toSeq == Seq("ONE"))
   }
 
   test("schema evolution: new column widens hub schema, old rows null") {
     val path = tmpDir("hub") + "/t"
-    HubWriter.write(spark, Seq((1, "a")).toDF("id", "v"), path, Seq("id"))
-    HubWriter.write(spark, Seq((2, "b", 9.5)).toDF("id", "v", "score"), path, Seq("id"))
-    val out = spark.read.parquet(path)
+    VersionedHub.write(spark, Seq((1, "a")).toDF("id", "v"), path, Seq("id"))
+    VersionedHub.write(spark, Seq((2, "b", 9.5)).toDF("id", "v", "score"), path, Seq("id"))
+    val out = read(path)
     assert(out.columns.toSet == Set("id", "v", "score"))
     val byId = out.collect().map(r => r.getAs[Int]("id") -> r).toMap
     assert(byId(1).isNullAt(byId(1).fieldIndex("score")))
@@ -62,9 +68,9 @@ class HubWriterSpec extends SparkTestBase {
 
   test("type drift: int column arriving as double widens (CSV inferSchema drift)") {
     val path = tmpDir("hub") + "/t"
-    HubWriter.write(spark, Seq((1, 10)).toDF("id", "x"), path, Seq("id"))
-    HubWriter.write(spark, Seq((2, 10.5)).toDF("id", "x"), path, Seq("id"))
-    val out = spark.read.parquet(path)
+    VersionedHub.write(spark, Seq((1, 10)).toDF("id", "x"), path, Seq("id"))
+    VersionedHub.write(spark, Seq((2, 10.5)).toDF("id", "x"), path, Seq("id"))
+    val out = read(path)
     assert(out.schema("x").dataType == DoubleType)
     assert(out.count() == 2)
   }
@@ -81,9 +87,9 @@ class HubWriterSpec extends SparkTestBase {
         b.zipWithIndex.map { case ((k, v), i) =>
           (k, v, new java.sql.Timestamp(epoch * 100000L + i * 1000L))
         }.toDF("k", "v", "_ingest_ts_utc")
-      HubWriter.write(spark, mk(b1, 1), path, Seq("k"))
-      HubWriter.write(spark, mk(b2, 2), path, Seq("k"))
-      val got = spark.read.parquet(path).select("k", "v").as[(Int, Int)]
+      VersionedHub.write(spark, mk(b1, 1), path, Seq("k"))
+      VersionedHub.write(spark, mk(b2, 2), path, Seq("k"))
+      val got = read(path).select("k", "v").as[(Int, Int)]
         .collect().toMap
       // oracle: for each key, the value of the LAST occurrence across b1++b2
       val expect = (b1 ++ b2).foldLeft(Map.empty[Int, Int]) { case (m, (k, v)) =>

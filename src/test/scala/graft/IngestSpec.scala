@@ -2,6 +2,7 @@ package graft
 
 import graft.catalog.YamlCatalog
 import graft.engine.Ingest
+import graft.writers.VersionedHub
 
 class IngestSpec extends SparkTestBase {
 
@@ -119,44 +120,74 @@ class IngestSpec extends SparkTestBase {
     assert(hub.columns.contains("_ingest_ts_utc"))
   }
 
-  test("keyed sources default to the versioned bucketed hub; hub_layout: flat opts out") {
+  /** A one-source catalog over the customers sample; `extra` is appended
+    * to the source entry.
+    */
+  def customersYaml(lake: String, extra: String): String =
+    s"""version: 1
+       |defaults: {raw_base: $lake/raw, hub_base: $lake/hub, domain: sales}
+       |sources:
+       |  - id: customers
+       |    type: csv
+       |    domain: sales
+       |    entity: customers
+       |    options:
+       |      path: ${resource("/samples/customers.csv")}
+       |      header: true
+       |      inferSchema: true
+       |$extra""".stripMargin
+
+  test("keyed sources default to the versioned bucketed hub") {
     val lake = tmpDir("lake")
-    val yaml =
-      s"""version: 1
-         |defaults: {raw_base: $lake/raw, hub_base: $lake/hub, domain: sales}
-         |sources:
-         |  - id: customers_versioned
-         |    type: csv
-         |    domain: sales
-         |    entity: customers
-         |    options:
-         |      path: ${resource("/samples/customers.csv")}
-         |      header: true
-         |      inferSchema: true
-         |    hub_primary_keys: ["customer_id"]
-         |  - id: customers_flat
-         |    type: csv
-         |    domain: sales
-         |    entity: customers_flat
-         |    options:
-         |      path: ${resource("/samples/customers.csv")}
-         |      header: true
-         |      inferSchema: true
-         |    hub_primary_keys: ["customer_id"]
-         |    hub_layout: flat
-         |""".stripMargin
-    val sys = YamlCatalog.loadString(yaml)
+    val sys = YamlCatalog.loadString(
+      customersYaml(lake, """    hub_primary_keys: ["customer_id"]"""))
     Ingest.runCatalog(spark, sys)
     Ingest.runCatalog(spark, sys)
-    // default keyed path: ACID log with one version per run, O(batch) buckets
-    val hist = graft.writers.VersionedHub.history(spark, s"$lake/hub/sales/customers")
+    // ACID log with one version per run, O(batch) buckets
+    val hist = VersionedHub.history(spark, s"$lake/hub/sales/customers")
     assert(hist.map(_.version) == Seq(1, 2))
     assert(hist.forall(_.buckets.nonEmpty))
     assert(Ingest.readHub(spark, s"$lake/hub/sales/customers").count() == 3)
-    // flat opt-out: plain parquet dir, no transaction log
-    val flat = s"$lake/hub/sales/customers_flat"
-    assert(!new java.io.File(flat, "_log").exists())
-    assert(Ingest.readHub(spark, flat).count() == 3)
+  }
+
+  test("keyless sources append one versioned-hub commit per run") {
+    val lake = tmpDir("lake")
+    val sys = YamlCatalog.loadString(customersYaml(lake, ""))
+    Ingest.runCatalog(spark, sys)
+    Ingest.runCatalog(spark, sys)
+    val hub = s"$lake/hub/sales/customers"
+    val hist = VersionedHub.history(spark, hub)
+    assert(hist.map(_.version) == Seq(1, 2))
+    assert(hist.map(_.rows) == Seq(3L, 6L) && hist.forall(_.buckets.isEmpty))
+    assert(Ingest.readHub(spark, hub).count() == 6, "keyless HUB appends")
+    assert(spark.read.parquet(s"$lake/raw/sales/customers").count() == 6)
+  }
+
+  test("an unversioned hub dir is refused until VersionedHub.convert adopts it") {
+    val lake = tmpDir("lake")
+    val hub = s"$lake/hub/sales/customers"
+    import spark.implicits._
+    Seq((100, "Old"), (101, "Older")).toDF("customer_id", "first_name")
+      .write.parquet(hub)
+    val sys = YamlCatalog.loadString(
+      customersYaml(lake, """    hub_primary_keys: ["customer_id"]"""))
+    val e = intercept[IllegalArgumentException](Ingest.runCatalog(spark, sys))
+    assert(e.getMessage.contains("VersionedHub.convert"), e.getMessage)
+    val r = intercept[IllegalArgumentException](Ingest.readHub(spark, hub))
+    assert(r.getMessage.contains("VersionedHub.convert"), r.getMessage)
+    assert(!new java.io.File(hub, "_log").exists(), "no version was committed")
+    VersionedHub.convert(spark, hub)
+    Ingest.runCatalog(spark, sys)
+    val ids = Ingest.readHub(spark, hub).select("customer_id").as[Int]
+      .collect().sorted.toSeq
+    assert(ids == Seq(1, 2, 3, 100, 101), "old and new rows both present")
+    // an unversioned BUCKETED hub points at re-landing through writeBucketed
+    val bucketed = s"$lake/hub/sales/bucketed"
+    val old = Seq((7, "Old")).toDF("customer_id", "first_name")
+    old.write.parquet(s"$bucketed/_bucket=3")
+    val b = intercept[IllegalArgumentException](VersionedHub.writeBucketed(
+      spark, old, bucketed, Seq("customer_id"), 4))
+    assert(b.getMessage.contains("VersionedHub.writeBucketed"), b.getMessage)
   }
 
   test("parallel source execution produces the same lake") {
@@ -213,13 +244,12 @@ class IngestSpec extends SparkTestBase {
          |    domain: d
          |    entity: points
          |    options: {path: $csv, header: true, inferSchema: true}
-         |    hub_layout: versioned
          |    hub_zorder: [a, b]
          |""".stripMargin
     Ingest.runCatalog(spark, YamlCatalog.loadString(yaml))
     val hub = s"$lake/hub/d/points"
     // version 1 = the append, version 2 = the committed z-order rewrite
-    val hist = graft.writers.VersionedHub.history(spark, hub)
+    val hist = VersionedHub.history(spark, hub)
     assert(hist.map(_.version) == Seq(1, 2))
     assert(hist.forall(_.rows == 50))
     assert(Ingest.readHub(spark, hub).count() == 50)

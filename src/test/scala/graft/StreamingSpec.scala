@@ -7,31 +7,6 @@ import org.apache.spark.sql.functions._
 class StreamingSpec extends SparkTestBase {
   import spark.implicits._
 
-  test("streaming hub upsert via foreachBatch merges each micro-batch") {
-    val lake = tmpDir("slake")
-    val src = s"$lake/in"
-    new java.io.File(src).mkdirs()
-    // batch 1
-    Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-      .write.mode("append").parquet(src)
-    val stream = StreamingIngest.parquetStream(
-      spark, src, Seq((0L, "x")).toDF("id", "v"))
-    val q1 = StreamingIngest.hubUpsertStream(
-      stream, s"$lake/hub", Seq("id"), s"$lake/ckpt")
-    q1.awaitTermination()
-    assert(spark.read.parquet(s"$lake/hub").count() == 2)
-    // batch 2: update id=2, insert id=3; checkpoint resumes exactly-once
-    Seq((2L, "B"), (3L, "c")).toDF("id", "v")
-      .write.mode("append").parquet(src)
-    val q2 = StreamingIngest.hubUpsertStream(
-      StreamingIngest.parquetStream(spark, src, Seq((0L, "x")).toDF("id", "v")),
-      s"$lake/hub", Seq("id"), s"$lake/ckpt")
-    q2.awaitTermination()
-    val out = spark.read.parquet(s"$lake/hub").as[(Long, String)]
-      .collect().toMap
-    assert(out == Map(1L -> "a", 2L -> "B", 3L -> "c"))
-  }
-
   test("streaming incremental dedup over several micro-batches equals the batch probe") {
     import graft.operators.Dedup
     val lake = tmpDir("inc_stream")
@@ -617,24 +592,35 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("bucketed streaming upsert merges via partial-bucket rewrites") {
+    import graft.writers.VersionedHub
     val lake = tmpDir("slake4")
+    val hub = s"$lake/hub"
     val src = s"$lake/in"
     new java.io.File(src).mkdirs()
-    (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v")
-      .write.mode("append").parquet(src)
-    val schema = Seq((0L, "x")).toDF("id", "v")
-    val q1 = StreamingIngest.bucketedHubUpsertStream(
-      StreamingIngest.parquetStream(spark, src, schema),
-      s"$lake/hub", Seq("id"), 8, s"$lake/ckpt")
-    q1.awaitTermination()
+    VersionedHub.writeBucketed(spark,
+      (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v"), hub, Seq("id"), 8)
+    val before = VersionedHub.history(spark, hub).last.buckets
     Seq((42L, "UPDATED"), (101L, "new")).toDF("id", "v")
       .write.mode("append").parquet(src)
-    val q2 = StreamingIngest.bucketedHubUpsertStream(
-      StreamingIngest.parquetStream(spark, src, schema),
-      s"$lake/hub", Seq("id"), 8, s"$lake/ckpt")
-    q2.awaitTermination()
-    val out = graft.writers.HubWriter.readHub(spark, s"$lake/hub")
-      .as[(Long, String)].collect().toMap
+    // the graft-hub sink merges through the hub's recorded bucket layout
+    StreamingIngest.parquetStream(spark, src, Seq((0L, "x")).toDF("id", "v"))
+      .writeStream.format("graft-hub")
+      .option("path", hub).option("keys", "id")
+      .option("checkpointLocation", s"$lake/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    val after = VersionedHub.history(spark, hub).last
+    assert(after.version == 2 && after.nBuckets.contains(8))
+    // exactly the buckets the two keys hash to are rewritten; every other
+    // bucket dir is shared with the seed version
+    val touched = Seq(42L, 101L).toDF("id")
+      .select(pmod(xxhash64(graft.writers.HubWriter.canonicalKey(
+        $"id", org.apache.spark.sql.types.LongType)), lit(8)).cast("int"))
+      .as[Int].collect().toSet
+    val changed = (before.keySet ++ after.buckets.keySet)
+      .filter(b => before.get(b) != after.buckets.get(b))
+    assert(changed == touched, s"rewrote $changed, touched $touched")
+    val out = VersionedHub.read(spark, hub).as[(Long, String)].collect().toMap
     assert(out.size == 101)
     assert(out(42L) == "UPDATED" && out(101L) == "new" && out(43L) == "v43")
   }

@@ -109,34 +109,6 @@ class VersionedHubSpec extends SparkTestBase {
     assert(VersionedHub.history(spark, path).flatMap(_.batchId) == Seq(0L, 1L))
   }
 
-  test("streaming sink commits one version per micro-batch, exactly-once") {
-    val lake = tmpDir("vhub_stream")
-    val src = s"$lake/in"
-    new java.io.File(src).mkdirs()
-    val cp = s"$lake/cp" // SAME checkpoint across restarts
-    val hub = s"$lake/hub"
-    val schema = Seq((0, "x")).toDF("k", "v")
-    Seq((1, "a"), (2, "b")).toDF("k", "v").write.mode("append").parquet(src)
-    val q1 = graft.streaming.StreamingIngest.versionedHubUpsertStream(
-      graft.streaming.StreamingIngest.parquetStream(spark, src, schema),
-      hub, Seq("k"), cp)
-    q1.awaitTermination()
-    Seq((2, "B2"), (3, "c")).toDF("k", "v").write.mode("append").parquet(src)
-    val q2 = graft.streaming.StreamingIngest.versionedHubUpsertStream(
-      graft.streaming.StreamingIngest.parquetStream(spark, src, schema),
-      hub, Seq("k"), cp)
-    q2.awaitTermination()
-    val end = VersionedHub.read(spark, hub)
-      .select($"k", $"v").as[(Int, String)].collect().toMap
-    assert(end == Map(1 -> "a", 2 -> "B2", 3 -> "c"))
-    assert(VersionedHub.history(spark, hub).flatMap(_.batchId) == Seq(0L, 1L))
-    // crash-replay simulation: re-merging batch 1 by id is a no-op
-    val replay = VersionedHub.write(spark,
-      Seq((2, "B2"), (3, "c")).toDF("k", "v"), hub, Seq("k"), batchId = Some(1L))
-    assert(replay == 2)
-    assert(VersionedHub.history(spark, hub).map(_.version) == Seq(1, 2))
-  }
-
   test("bucketed versions rewrite only touched buckets and share the rest") {
     val path = tmpDir("vhub_bucketed")
     val v1 = VersionedHub.writeBucketed(spark,
