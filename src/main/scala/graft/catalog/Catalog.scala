@@ -136,6 +136,13 @@ object YamlCatalog {
       b.toString.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
         s"source '$id': hub_buckets must be a positive integer, got '$b'"))
     }
+    val zorder = toStringSeq(m.get("hub_zorder"), Nil)
+    require(zorder.isEmpty || zorder.size == 2,
+      s"source '$id': hub_zorder needs exactly 2 columns (Morton curve is " +
+        s"2-D), got ${zorder.size}")
+    require(zorder.isEmpty || keys.isEmpty,
+      s"source '$id': hub_zorder applies only to keyless hubs — keyed hubs " +
+        "are bucketed; compact per bucket instead")
     Source(
       id = id,
       enabled = m.get("enabled").filter(_ != null).forall(_.toString.toBoolean),
@@ -147,14 +154,7 @@ object YamlCatalog {
       hubPrimaryKeys = keys,
       hubBuckets = buckets,
       hubKeepCols = toStringSeq(m.get("hub_keep_cols"), Nil),
-      hubZorder = {
-        val z = toStringSeq(m.get("hub_zorder"), Nil)
-        if (z.nonEmpty && z.size != 2)
-          throw new IllegalArgumentException(
-            s"source '$id': hub_zorder needs exactly 2 columns (Morton " +
-              s"curve is 2-D), got ${z.size}")
-        z
-      }
+      hubZorder = zorder
     )
   }
 

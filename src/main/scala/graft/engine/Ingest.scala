@@ -118,9 +118,7 @@ object Ingest {
     else
       VersionedHub.writeBucketed(spark, hubDf, hubPath, keys,
         s.hubBuckets.getOrElse(DefaultHubBuckets))
-    if (s.hubZorder.nonEmpty) {
-      require(keys.isEmpty, s"[${s.id}] hub_zorder applies only to keyless " +
-        "hubs — keyed hubs are bucketed; compact per bucket instead")
+    if (s.hubZorder.nonEmpty) { // keyless only: YamlCatalog.load refuses keys
       val Seq(za, zb) = s.hubZorder
       log.info(s"[${s.id}] z-order compaction on ($za, $zb)")
       VersionedHub.optimizeZOrder(spark, hubPath, za, zb)

@@ -25,12 +25,16 @@ import org.yaml.snakeyaml.constructor.SafeConstructor
   * }}}
   *
   * Commit protocol (optimistic concurrency, mirroring Delta's "mutual
-  * exclusion on log record creation"):
+  * exclusion on log record creation"), run by ONE loop, [[commitLoop]],
+  * for every writer (merge, overwrite, DELETE/UPDATE, restore, ALTER,
+  * compaction):
   *
   *   1. read the latest committed version V (scan `_log`);
-  *   2. merge-upsert the batch against snapshot V ([[HubWriter]]'s merge
-  *      kernel: last-writer-wins on the keys + schema widening);
-  *   3. write the merged snapshot to a fresh uniquely-named data dir;
+  *   2. recompute the operation against snapshot V — e.g. merge-upsert the
+  *      batch ([[HubWriter]]'s merge kernel: last-writer-wins on the keys +
+  *      schema widening), picking the layout from V itself;
+  *   3. write the new snapshot (flat) or the touched buckets (bucketed) to
+  *      a fresh uniquely-named data dir — manifest-only commits skip this;
   *   4. COMMIT by creating `_log/{V+1}.json` with create-exclusive
   *      (`FileSystem.create(overwrite = false)` — atomic on HDFS and on
   *      the local FS): exactly ONE writer wins version V+1;
@@ -50,6 +54,7 @@ import org.yaml.snakeyaml.constructor.SafeConstructor
   */
 object VersionedHub {
 
+  private val logger = org.apache.log4j.Logger.getLogger(getClass)
   private val LogDir = "_log"
   private val MaxRetries = 20
   private val BucketCol = HubWriter.BucketCol
@@ -194,12 +199,13 @@ object VersionedHub {
     * keyless contract (writer.py:24); on a fresh path the first commit is
     * exactly `df`, its overwrite-on-first-load quirk (writer.py:32-35).
     *
-    * On a BUCKETED table this dispatches to [[writeBucketed]] with the
-    * table's own bucket count: a bucketed version's `dataDir` is only the
+    * On a BUCKETED table each attempt runs [[writeBucketed]]'s merge with
+    * the table's own bucket count: a bucketed version's `dataDir` is only the
     * latest commit's touched-bucket root, so merging against it flat would
     * commit a partial snapshot and silently drop every row living in bucket
     * dirs shared from earlier roots. Keyless writes cannot bucket-route and
-    * are refused loudly on a bucketed table.
+    * are refused loudly on a bucketed table. The layout is read from each
+    * attempt's base, so a retry follows the table it actually merges into.
     *
     * `deletes` (columns = exactly the merge keys) removes matching target
     * rows in the same atomic commit, BEFORE the upsert — the primitive a
@@ -216,52 +222,54 @@ object VersionedHub {
       // CHECK constraints for a TABLE-CREATING commit (atomic CREATE TABLE
       // ... CHECK); ignored once the table exists (the base's checks rule)
       checks0: Map[String, String] = Map.empty
-  ): Int = latest(spark, path) match {
-    case Some(v) if v.nBuckets.isDefined =>
-      // a keyless write on a bucketed hub may route (and merge) by the
-      // RECORDED bucket columns iff a catalog CLUSTERED BY declared them
-      // the table's keys (schema-metadata marker) — SQL INSERT then keeps
-      // the hub's keyed-upsert semantics without re-stating the keys.
-      // Tables routed by a key SUBSET (interval tables) never carry the
-      // marker: merging on the routing column alone would collapse
-      // multi-row keys, so the keyless refusal stays loud for them.
-      def declaredKeys: Seq[String] = v.bucketCols.filter(cols =>
-        v.schema.exists(sch => cols.forall(c => sch.fields.exists(f =>
-          f.name.equalsIgnoreCase(c) &&
-            f.metadata.contains(ClusteredKeyKey) &&
-            f.metadata.getBoolean(ClusteredKeyKey)))))
-        .getOrElse(Seq.empty)
-      val ks = if (keys.nonEmpty) keys else declaredKeys
-      require(ks.nonEmpty,
-        s"hub at $path is bucketed; a keyless write() cannot route rows to " +
-          "buckets — provide the hub primary keys")
-      writeBucketed(spark, df, path, ks, v.nBuckets.get, batchId,
-        bucketCols = v.bucketCols, deletes = deletes)
-    case _ =>
-      require(deletes.isEmpty || keys.nonEmpty,
-        "deletes require the hub primary keys")
-      deletes.foreach(d => require(d.columns.sorted.sameElements(keys.sorted),
-        s"deletes must carry exactly the key columns $keys, " +
-          s"got ${d.columns.toSeq}"))
-      commitLoop(spark, path, batchId, checks0) { base =>
-      base match {
-        case None => df
-        case Some(v) =>
-          // a 0-row base (e.g. a catalog CREATE TABLE's empty v1) may hold
-          // no part files at all — parquet cannot infer a schema from an
-          // empty dir, but the manifest records it
-          val target0 =
-            if (v.rows == 0L) spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              snapshotSchema(spark, path, v))
-            else readDirs(spark, v, Seq(resolve(path, v.dataDir)))
-          val target = deletes.fold(target0)(d =>
-            target0.join(d, keys, "left_anti"))
-          val (t, s) = HubWriter.reconcileSchemas(target, df)
-          if (keys.isEmpty) t.unionByName(s)
-          else HubWriter.merge(t, s, keys,
-            identitySpecs(v.schema).map(_._1.name))
-      }
+  ): Int = commitLoop(spark, path, batchId) { committed =>
+    committed.lastOption match {
+      case Some(v) if v.nBuckets.isDefined =>
+        // a keyless write on a bucketed hub may route (and merge) by the
+        // RECORDED bucket columns iff a catalog CLUSTERED BY declared them
+        // the table's keys (schema-metadata marker) — SQL INSERT then keeps
+        // the hub's keyed-upsert semantics without re-stating the keys.
+        // Tables routed by a key SUBSET (interval tables) never carry the
+        // marker: merging on the routing column alone would collapse
+        // multi-row keys, so the keyless refusal stays loud for them.
+        def declaredKeys: Seq[String] = v.bucketCols.filter(cols =>
+          v.schema.exists(sch => cols.forall(c => sch.fields.exists(f =>
+            f.name.equalsIgnoreCase(c) &&
+              f.metadata.contains(ClusteredKeyKey) &&
+              f.metadata.getBoolean(ClusteredKeyKey)))))
+          .getOrElse(Seq.empty)
+        val ks = if (keys.nonEmpty) keys else declaredKeys
+        require(ks.nonEmpty,
+          s"hub at $path is bucketed; a keyless write() cannot route rows " +
+            "to buckets — provide the hub primary keys")
+        val (n, bCols) = (v.nBuckets.get, v.bucketCols.getOrElse(ks))
+        checkBucketedArgs(ks, bCols, deletes)
+        mergeBucketed(spark, path, committed, df, ks, n, bCols, deletes,
+          optimizeWrite = true, checks0)
+      case base =>
+        require(deletes.isEmpty || keys.nonEmpty,
+          "deletes require the hub primary keys")
+        deletes.foreach(d => require(d.columns.sorted.sameElements(keys.sorted),
+          s"deletes must carry exactly the key columns $keys, " +
+            s"got ${d.columns.toSeq}"))
+        stageFlat(spark, path, base, checks0)(base match {
+          case None => df
+          case Some(v) =>
+            // a 0-row base (e.g. a catalog CREATE TABLE's empty v1) may
+            // hold no part files at all — parquet cannot infer a schema
+            // from an empty dir, but the manifest records it
+            val target0 =
+              if (v.rows == 0L) spark.createDataFrame(
+                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+                snapshotSchema(spark, path, v))
+              else readDirs(spark, v, Seq(resolve(path, v.dataDir)))
+            val target = deletes.fold(target0)(d =>
+              target0.join(d, keys, "left_anti"))
+            val (t, s) = HubWriter.reconcileSchemas(target, df)
+            if (keys.isEmpty) t.unionByName(s)
+            else HubWriter.merge(t, s, keys,
+              identitySpecs(v.schema).map(_._1.name))
+        })
     }
   }
 
@@ -513,21 +521,28 @@ object VersionedHub {
         ua.nameParts.head.toLowerCase(java.util.Locale.ROOT)
     }.toSet
 
-  /** The shared optimistic-commit loop: recompute the snapshot-to-commit
-    * from the CURRENT base on every attempt (a retry after losing the race
-    * must fold in the winner's rows — recompacting/remerging a stale base
-    * would silently drop the concurrent commit), write it to a fresh dir,
-    * and claim the next manifest exclusively.
+  /** One commit attempt's outcome, handed back to [[commitLoop]]: `Done`
+    * returns a version without committing (a no-op, a restore to the tip);
+    * `Stage` is the next version to claim, with the data dir the attempt
+    * wrote — deleted if the claim loses; None for manifest-only commits.
     */
-  private def commitLoop(
-      spark: SparkSession,
-      path: String,
-      batchId: Option[Long],
-      // CHECK constraints for the TABLE-CREATING commit only (an atomic
-      // CREATE TABLE ... CHECK); commits on an existing table always carry
-      // the base's
-      checks0: Map[String, String] = Map.empty
-  )(mkSnapshot: Option[Version] => DataFrame): Int = {
+  private sealed trait Step
+  private final case class Done(version: Int) extends Step
+  private final case class Stage(v: Version, orphan: Option[String])
+      extends Step
+
+  /** THE optimistic-commit loop every writer runs. Each attempt reads the
+    * log once, returns the version of a replayed `batchId`, refuses to
+    * start a log over an unversioned hub, and hands the CURRENT history to
+    * `stage`, which recomputes the snapshot-to-commit from that base (a
+    * retry after losing the race must fold in the winner's rows —
+    * recompacting/remerging a stale base would silently drop the
+    * concurrent commit) and picks its layout from that base. The staged
+    * manifest, stamped with `batchId`, is claimed exclusively; a loser
+    * deletes its orphan data dir and retries against the winner.
+    */
+  private def commitLoop(spark: SparkSession, path: String,
+      batchId: Option[Long] = None)(stage: Seq[Version] => Step): Int = {
     val fs = fileSystem(spark, path)
     var attempt = 0
     while (attempt < MaxRetries) {
@@ -536,54 +551,163 @@ object VersionedHub {
       for (id <- batchId; v <- committed.find(_.batchId.contains(id)))
         return v.version // replayed batch: already committed
       if (committed.isEmpty) refuseUnversioned(fs, path)
-      val base = committed.lastOption
-      // race guard (write() dispatches on the layout BEFORE this loop): a
-      // bucketed commit landing in between would make the flat merge below a
-      // partial-snapshot corruption — refuse instead
-      require(base.forall(_.nBuckets.isEmpty),
-        s"hub at $path became bucketed mid-commit; retry the write")
-      val next = base.map(_.version).getOrElse(0) + 1
-      val merged = enforceChecks(mkSnapshot(base), base, checks0)
-      // the recorded schema carries column-mapping metadata forward from
-      // the base (merge projections may have dropped it); files land under
-      // PHYSICAL names so the snapshot stays homogeneous across renames
-      val recSchema = ColumnMapping.graft(merged.schema,
-        base.flatMap(_.schema))
-      val dataDir = s"data/$next-${UUID.randomUUID().toString.take(8)}"
-      ColumnMapping.toPhysical(merged, recSchema)
-        .write.options(BloomIndex.options(recSchema))
-        .parquet(resolve(path, dataDir))
-      // ONE footer pass over the files just written serves the whole
-      // manifest audit: row count, per-file bytes, and per-file column
-      // min/max for data skipping. Small snapshots read footers driver-side
-      // with no Spark job at all; large ones run one metadata-only job.
-      val fstats = FileStats.collect(spark, fs, new Path(path),
-        new Path(resolve(path, dataDir)), identityPhys(recSchema))
-      val rows = fstats.values.map(_.rows).sum
-      // flat snapshots are self-anchoring: the new dataDir IS the whole
-      // snapshot, so the delta equals the full stats map
-      if (commit(fs, path,
-          Version(next, dataDir, System.currentTimeMillis(), rows, batchId,
-            schemaJson = Some(stampIdentityHigh(recSchema, fstats).json),
-            statsNew = fstats,
-            checks = base.fold(checks0)(_.checks))))
-        return next
-      // lost the race: drop the orphan snapshot, recompute against the winner
-      fs.delete(new Path(resolve(path, dataDir)), true)
-      failIfStuck(spark, path, next)
+      stage(committed) match {
+        case Done(version) => return version
+        case Stage(staged, orphan) =>
+          val v = if (batchId.isEmpty) staged else staged.copy(batchId = batchId)
+          if (commit(fs, path, v)) return v.version
+          orphan.foreach(d => fs.delete(new Path(resolve(path, d)), true))
+          failIfStuck(spark, path, v.version)
+      }
     }
     throw new IllegalStateException(
       s"hub at $path: lost the commit race $MaxRetries times — giving up")
   }
 
+  /** The tip of an attempt's history, or the no-table refusal. */
+  private def tip(committed: Seq[Version], path: String,
+      op: String = ""): Version = committed.lastOption.getOrElse(
+    throw new IllegalArgumentException(s"no committed versions at $path$op"))
+
+  private def freshRoot(version: Int): String =
+    s"data/$version-${UUID.randomUUID().toString.take(8)}"
+
+  /** Stage a FLAT snapshot: `snapshot` (recomputed from `base` by the
+    * caller) passes identity/generated/CHECK enforcement and lands in a
+    * fresh data dir — the whole next version.
+    */
+  private def stageFlat(spark: SparkSession, path: String,
+      base: Option[Version],
+      // CHECK constraints for the TABLE-CREATING commit only (an atomic
+      // CREATE TABLE ... CHECK); commits on an existing table always carry
+      // the base's
+      checks0: Map[String, String] = Map.empty)(snapshot: DataFrame): Stage = {
+    val next = base.map(_.version).getOrElse(0) + 1
+    val merged = enforceChecks(snapshot, base, checks0)
+    // the recorded schema carries column-mapping metadata forward from
+    // the base (merge projections may have dropped it); files land under
+    // PHYSICAL names so the snapshot stays homogeneous across renames
+    val recSchema = ColumnMapping.graft(merged.schema, base.flatMap(_.schema))
+    val dataDir = freshRoot(next)
+    ColumnMapping.toPhysical(merged, recSchema)
+      .write.options(BloomIndex.options(recSchema))
+      .parquet(resolve(path, dataDir))
+    // ONE footer pass over the files just written serves the whole
+    // manifest audit: row count, per-file bytes, and per-file column
+    // min/max for data skipping. Small snapshots read footers driver-side
+    // with no Spark job at all; large ones run one metadata-only job.
+    val fstats = FileStats.collect(spark, fileSystem(spark, path),
+      new Path(path), new Path(resolve(path, dataDir)), identityPhys(recSchema))
+    // flat snapshots are self-anchoring: the new dataDir IS the whole
+    // snapshot, so the delta equals the full stats map
+    Stage(Version(next, dataDir, System.currentTimeMillis(),
+      fstats.values.map(_.rows).sum,
+      schemaJson = Some(stampIdentityHigh(recSchema, fstats).json),
+      statsNew = fstats,
+      checks = base.fold(checks0)(_.checks)), Some(dataDir))
+  }
+
+  /** Stage a BUCKET REWRITE: write `rows` (stamped with [[BucketCol]])
+    * partitioned by bucket under a fresh root, and map the `touched`
+    * buckets to the dirs that materialized — a partitionBy write emits no
+    * dir for an empty bucket, so a bucket whose rows all went (deleted,
+    * fully deletion-vector-deleted) drops out of the manifest. Untouched
+    * buckets keep their dirs, row counts, file stats and deletion vectors
+    * from `base` (structural sharing), so the manifest records ONLY this
+    * commit's files and the audit stays O(touched buckets). Materialized
+    * buckets and per-bucket rows come from the footer pass's own file list
+    * (every materialized bucket dir holds ≥1 parquet part) — no listing of
+    * the just-written root.
+    */
+  private def stageBuckets(spark: SparkSession, path: String,
+      base: Option[Version], rows: DataFrame, touched: Seq[Int],
+      // the recorded schema; default: the base's widened by `rows`
+      schema: Option[StructType] = None,
+      // the write's physical layout over the physical-column frame
+      shape: DataFrame => DataFrame = identity,
+      // bucket count and routing; default: the base's
+      nBuckets: Option[Int] = None,
+      bucketCols: Option[Seq[String]] = None,
+      // CHECK constraints for the TABLE-CREATING commit only
+      checks0: Map[String, String] = Map.empty): Stage = {
+    val fs = fileSystem(spark, path)
+    val next = base.map(_.version).getOrElse(0) + 1
+    val root = freshRoot(next)
+    // the recorded schema is the UNION of the base's recorded schema and
+    // the rewritten rows': `rows` covers only the TOUCHED buckets, so after
+    // a schema evolution a column living solely in untouched buckets would
+    // otherwise vanish from the record
+    val snap = schema.getOrElse(
+      unionSchema(spark, path, base, rows.drop(BucketCol).schema))
+    shape(ColumnMapping.toPhysical(rows, snap))
+      .write.options(BloomIndex.options(snap))
+      .partitionBy(BucketCol).parquet(resolve(path, root))
+    val fstats = FileStats.collect(spark, fs, new Path(path),
+      new Path(resolve(path, root)), identityPhys(snap))
+    val prefix = s"$root/$BucketCol="
+    val newRows: Map[Int, Long] = fstats.toSeq.collect {
+      case (p, st) if p.startsWith(prefix) =>
+        p.substring(prefix.length, p.indexOf('/', prefix.length)).toInt ->
+          st.rows
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+    val carriedDirs = base.fold(Map.empty[Int, String])(_.buckets) -- touched
+    val carriedRows = base.fold(Map.empty[Int, Long])(_.bucketRows) -- touched
+    def countDir(rel: String): Long = {
+      val p = new Path(resolve(path, rel))
+      footerRows(fs, p).getOrElse(spark.read.parquet(p.toString).count())
+    }
+    val bucketRows: Map[Int, Long] = newRows ++ (
+      if (carriedDirs.keySet.forall(carriedRows.contains)) carriedRows
+      else // pre-bucketRows manifest underneath: count the legacy dirs once
+        carriedDirs.map { case (b, d) => b -> countDir(d) })
+    Stage(Version(next, root, System.currentTimeMillis(),
+      bucketRows.values.sum, None,
+      nBuckets.orElse(base.flatMap(_.nBuckets)),
+      carriedDirs ++ newRows.keys.map(b => b -> s"$prefix$b"),
+      bucketCols.orElse(base.flatMap(_.bucketCols)), bucketRows,
+      schemaJson = Some(stampIdentityHigh(snap, fstats).json),
+      statsNew = fstats,
+      statsCarried = () => base.fold(
+        Map.empty[String, FileStats.FileStat])(_.fileStats),
+      dvCarried = () => base.fold(Map.empty[String, Seq[Long]])(_.dvs),
+      checks = base.fold(checks0)(_.checks)), Some(root))
+  }
+
+  private def checkBucketedArgs(keys: Seq[String], bCols: Seq[String],
+      deletes: Option[DataFrame]): Unit = {
+    require(keys.nonEmpty, "bucketed versioned hub requires primary keys")
+    require(bCols.nonEmpty && bCols.forall(keys.contains),
+      s"bucket columns $bCols must be a non-empty subset of the keys $keys — " +
+        "routing by a non-key column would split one key across buckets")
+    deletes.foreach(d => require(d.columns.sorted.sameElements(keys.sorted),
+      s"deletes must carry exactly the key columns $keys, got ${d.columns.toSeq}"))
+  }
+
+  /** The live rows of `base`'s `buckets`, each tagged with its
+    * [[BucketCol]] — what a bucket rewrite reads. readDirs (not a raw
+    * scan): old generations read through the recorded schema's
+    * widening/padding AND its column mapping; buckets of a legacy manifest
+    * without a recorded schema mergeSchema-infer per dir and can drift, so
+    * they reconcile pairwise like the writers.
+    */
+  private def readBuckets(spark: SparkSession, path: String, base: Version,
+      buckets: Seq[Int]): DataFrame =
+    buckets.map { b =>
+      readDirs(spark, base, Seq(resolve(path, base.buckets(b))))
+        .withColumn(BucketCol, org.apache.spark.sql.functions.lit(b))
+    }.reduce { (a, b) =>
+      val (x, y) = HubWriter.reconcileSchemas(a, b)
+      x.unionByName(y)
+    }
+
   /** BUCKETED versioned merge — the O(batch) commit path that survives a
     * 100 TB hub: the manifest maps bucket → data dir, a merge rewrites ONLY
     * the hash buckets the batch touches, and the new manifest references
     * the untouched buckets' existing dirs (structural sharing across
-    * versions, like Delta's file-level add/remove). Commit/retry semantics
-    * and batchId idempotence are identical to [[write]]. Keys are hashed
-    * through [[HubWriter.canonicalKey]] so type-widened keys keep their
-    * bucket across runs.
+    * versions, like Delta's file-level add/remove). Commits through the
+    * same [[commitLoop]] as [[write]], batchId idempotence included. Keys
+    * are hashed through [[HubWriter.canonicalKey]] so type-widened keys
+    * keep their bucket across runs.
     *
     * `bucketCols` (default: the merge keys) routes rows to buckets by a
     * SUBSET of the keys — e.g. bucket an interval table keyed by
@@ -613,55 +737,54 @@ object VersionedHub {
       // ... CLUSTERED BY ... CHECK); ignored once the table has versions
       checks0: Map[String, String] = Map.empty
   ): Int = {
-    require(keys.nonEmpty, "bucketed versioned hub requires primary keys")
     val bCols = bucketCols.getOrElse(keys)
-    require(bCols.nonEmpty && bCols.forall(keys.contains),
-      s"bucket columns $bCols must be a non-empty subset of the keys $keys — " +
-        "routing by a non-key column would split one key across buckets")
-    deletes.foreach(d => require(d.columns.sorted.sameElements(keys.sorted),
-      s"deletes must carry exactly the key columns $keys, got ${d.columns.toSeq}"))
-    val fs = fileSystem(spark, path)
+    checkBucketedArgs(keys, bCols, deletes)
+    commitLoop(spark, path, batchId)(committed =>
+      mergeBucketed(spark, path, committed, df, keys, nBuckets, bCols,
+        deletes, optimizeWrite, checks0))
+  }
+
+  /** One attempt of [[writeBucketed]]'s merge of `df` against the tip of
+    * `committed`.
+    */
+  private def mergeBucketed(spark: SparkSession, path: String,
+      committed: Seq[Version], df: DataFrame, keys: Seq[String],
+      nBuckets: Int, bCols: Seq[String], deletes: Option[DataFrame],
+      optimizeWrite: Boolean, checks0: Map[String, String]): Stage = {
     def stamp(d: DataFrame): DataFrame = stampBuckets(d, bCols, nBuckets)
-    // the commit consumes `stamped` at least twice (touched-bucket collect,
-    // then the snapshot write) — persist so an expensive upstream (a span
-    // trim, an LSH verify) runs once per commit, not once per consumer
+    val base = committed.lastOption
+    for (v <- base; b <- v.nBuckets)
+      require(b == nBuckets,
+        s"hub at $path is bucketed with nBuckets=$b; got $nBuckets — " +
+          "bucket count is immutable once written")
+    for (v <- base; bc <- v.bucketCols)
+      require(bc == bCols,
+        s"hub at $path is bucketed by $bc; got $bCols — bucket routing " +
+          "is immutable once written")
+    // a FLAT base whose ENTIRE history never held a row (a catalog
+    // CREATE TABLE's empty v1) may adopt the bucketed layout — there is
+    // no data to mix at ANY version, so time travel/restore across the
+    // flip only ever sees empty flat snapshots, and the recorded
+    // schema/checks (identity, generated, defaults) carry into the
+    // bucketed lineage. A flat lineage with any row-bearing version —
+    // even one later emptied by a delete-all — stays refused: restoring
+    // past the flip would resurrect data under the wrong layout
+    require(base.forall(v => v.nBuckets.isDefined ||
+        committed.forall(_.rows == 0L)),
+      s"hub at $path has non-bucketed versions with rows — cannot mix " +
+        "layouts")
+    // the attempt consumes `stamped` at least twice (touched-bucket
+    // collect, then the snapshot write) — persist so an expensive upstream
+    // (a span trim, an LSH verify) runs once per attempt, not once per
+    // consumer
     val stamped = graft.operators.Dedup.persistForReuse(stamp(df))
     try {
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      attempt += 1
-      val committed = history(spark, path)
-      for (id <- batchId; v <- committed.find(_.batchId.contains(id)))
-        return v.version
-      if (committed.isEmpty) refuseUnversioned(fs, path)
-      val base = committed.lastOption
-      for (v <- base; b <- v.nBuckets)
-        require(b == nBuckets,
-          s"hub at $path is bucketed with nBuckets=$b; got $nBuckets — " +
-            "bucket count is immutable once written")
-      for (v <- base; bc <- v.bucketCols)
-        require(bc == bCols,
-          s"hub at $path is bucketed by $bc; got $bCols — bucket routing " +
-            "is immutable once written")
-      // a FLAT base whose ENTIRE history never held a row (a catalog
-      // CREATE TABLE's empty v1) may adopt the bucketed layout — there is
-      // no data to mix at ANY version, so time travel/restore across the
-      // flip only ever sees empty flat snapshots, and the recorded
-      // schema/checks (identity, generated, defaults) carry into the
-      // bucketed lineage. A flat lineage with any row-bearing version —
-      // even one later emptied by a delete-all — stays refused: restoring
-      // past the flip would resurrect data under the wrong layout
-      require(base.forall(v => v.nBuckets.isDefined ||
-          committed.forall(_.rows == 0L)),
-        s"hub at $path has non-bucketed versions with rows — cannot mix " +
-          "layouts")
-      val next = base.map(_.version).getOrElse(0) + 1
       // the touched-bucket set gates which BASE dirs the merge reads; a
       // base-less first commit reads nothing, so the collect (one full
-      // computation of `stamped`) is skipped and the manifest derives the
-      // bucket map from the dirs the write materialized
+      // computation of `stamped`) is skipped and every bucket counts as
+      // touched — the manifest maps exactly the dirs the write materialized
       val touched: IndexedSeq[Int] =
-        if (base.isEmpty) IndexedSeq.empty
+        if (base.isEmpty) 0 until nBuckets
         else (deletes match {
           case None => stamped.select(BucketCol)
           case Some(d) => stamped.select(BucketCol)
@@ -701,7 +824,6 @@ object VersionedHub {
             } else stamp(HubWriter.merge(t, s, keys, idCols))
           }
       }
-      val root = s"data/$next-${UUID.randomUUID().toString.take(8)}"
       // OPTIMIZED WRITE (Delta's optimizeWrite shape): co-locate each
       // bucket's rows into one shuffle partition before partitionBy, so a
       // commit writes ONE file per touched bucket instead of one per
@@ -713,80 +835,18 @@ object VersionedHub {
       // `optimizeWrite = false` opts out for bulk loads whose single-bucket
       // volume wants task-level write parallelism (then compactBuckets is
       // the small-file remedy, as before)
-      // the recorded schema is the UNION of the base's recorded schema and
-      // this commit's merged schema (computed BEFORE the write so the file
-      // layout can follow its column mapping): `merged` covers only the
-      // TOUCHED buckets, so after a schema evolution a column living solely
-      // in untouched buckets would otherwise vanish from the record
-      val snapSchema = unionSchema(spark, path, base,
-        merged.drop(BucketCol).schema)
       val toWrite = enforceChecks(
         if (optimizeWrite && !mergeClustered)
           merged.repartition(org.apache.spark.sql.functions.col(BucketCol))
         else merged,
         base, checks0)
-      ColumnMapping.toPhysical(toWrite, snapSchema)
-        .write.options(BloomIndex.options(snapSchema))
-        .partitionBy(BucketCol).parquet(resolve(path, root))
-      // per-bucket row counts + per-file data-skipping stats from ONE
-      // footer pass over the new root (metadata only, driver-side for small
-      // commits, one parallel job for many-file commits — see
-      // [[FileStats.collect]]); carried-over buckets reuse the base
-      // manifest's rows AND per-file stats (structural sharing) — the
-      // manifest audit stays O(touched buckets) per commit.
-      val fstatsNew = FileStats.collect(spark, fs, new Path(path),
-        new Path(resolve(path, root)), identityPhys(snapSchema))
-      // deletes can empty a bucket entirely; partitionBy writes no dir for
-      // it, so map only the bucket dirs that actually MATERIALIZED and drop
-      // the rest from the manifest. Derived from the footer pass's own
-      // file list (every materialized bucket dir holds ≥1 parquet part) —
-      // no second listing of the root per commit.
-      val bucketPrefix = s"$root/$BucketCol="
-      val writtenBSeq = fstatsNew.keysIterator.collect {
-        case p if p.startsWith(bucketPrefix) =>
-          p.substring(bucketPrefix.length, p.indexOf('/', bucketPrefix.length))
-            .toInt
-      }.toSeq.distinct
-      val writtenB = writtenBSeq.toSet
-      val touchedEff =
-        if (base.isEmpty) writtenBSeq.sorted.toIndexedSeq else touched
-      val newBuckets = (base.map(_.buckets).getOrElse(Map.empty) -- touchedEff) ++
-        touchedEff.filter(writtenB).map(b => b -> s"$root/$BucketCol=$b")
-      val carried = base.map(_.bucketRows).getOrElse(Map.empty) -- touchedEff
-      val carriedDirs = (newBuckets -- touchedEff).keySet
-      def countDir(rel: String): Long = {
-        val p = new Path(resolve(path, rel))
-        footerRows(fs, p).getOrElse(spark.read.parquet(p.toString).count())
-      }
-      val newRows: Map[Int, Long] = writtenBSeq.map { b =>
-        val prefix = s"$root/$BucketCol=$b/"
-        b -> fstatsNew.iterator
-          .collect { case (p, st) if p.startsWith(prefix) => st.rows }.sum
-      }.toMap
-      val bucketRows: Map[Int, Long] =
-        if (carriedDirs.forall(carried.contains)) carried ++ newRows
-        else // pre-bucketRows manifest underneath: count the legacy dirs once
-          newRows ++ carriedDirs.map(b => b -> countDir(newBuckets(b))).toMap
-      val rows = bucketRows.values.sum
-      // the manifest records ONLY this commit's files (statsNew); carried
-      // files reconstruct lazily from the base snapshot — manifest size and
-      // commit cost stay O(touched buckets), not O(table)
-      if (commit(fs, path, Version(next, root, System.currentTimeMillis(),
-          rows, batchId, Some(nBuckets), newBuckets, Some(bCols),
-          bucketRows,
-          schemaJson = Some(stampIdentityHigh(snapSchema, fstatsNew).json),
-          statsNew = fstatsNew,
-          statsCarried = () => base.fold(
-            Map.empty[String, FileStats.FileStat])(_.fileStats),
-          dvCarried = () => base.fold(
-            Map.empty[String, Seq[Long]])(_.dvs),
-          checks = base.fold(checks0)(_.checks))))
-        return next
-      fs.delete(new Path(resolve(path, root)), true)
-      failIfStuck(spark, path, next)
-    }
-    throw new IllegalStateException(
-      s"hub at $path: lost the commit race $MaxRetries times — giving up")
+      // the recorded schema is computed BEFORE the write (so the file layout
+      // can follow its column mapping) from the merge's own output
+      stageBuckets(spark, path, base, toWrite, touched,
+        schema = Some(unionSchema(spark, path, base,
+          merged.drop(BucketCol).schema)),
+        nBuckets = Some(nBuckets), bucketCols = Some(bCols),
+        checks0 = checks0)
     } finally stamped.unpersist()
   }
 
@@ -1229,59 +1289,25 @@ object VersionedHub {
     * and routing columns); a flat hub commits `df` as the next snapshot.
     */
   def overwrite(spark: SparkSession, df: DataFrame, path: String): Int =
-    latest(spark, path) match {
-      case Some(v0) if v0.nBuckets.isDefined =>
-        val n = v0.nBuckets.get
-        val bCols = v0.bucketCols.getOrElse(throw new IllegalStateException(
-          s"hub at $path records no bucket routing"))
-        require(bCols.forall(df.columns.contains),
-          s"overwrite batch must carry the routing columns $bCols")
-        val fs = fileSystem(spark, path)
-        var attempt = 0
-        while (attempt < MaxRetries) {
-          attempt += 1
-          val base = latest(spark, path).getOrElse(
-            throw new IllegalStateException(
-              s"hub at $path lost its versions mid-overwrite"))
-          require(base.nBuckets.contains(n) && base.bucketCols.contains(bCols),
-            s"hub at $path changed layout mid-overwrite; retry")
-          val next = base.version + 1
-          val root = s"data/$next-${UUID.randomUUID().toString.take(8)}"
-          // even a full replacement keeps the column mapping: a reader of
-          // an OLD version still needs the physical aliases, and one
-          // namespace per table is simpler than per-version forks
-          val recSchema = ColumnMapping.graft(df.schema, base.schema)
-          ColumnMapping.toPhysical(
-            enforceChecks(stampBuckets(df, bCols, n), Some(base)), recSchema)
-            .repartition(org.apache.spark.sql.functions.col(BucketCol))
-            .write.options(BloomIndex.options(recSchema))
-            .partitionBy(BucketCol).parquet(resolve(path, root))
-          val fstats = FileStats.collect(spark, fs, new Path(path),
-            new Path(resolve(path, root)), identityPhys(recSchema))
-          val writtenB = fs.listStatus(new Path(resolve(path, root))).toSeq
-            .map(_.getPath.getName)
-            .collect { case nm if nm.startsWith(s"$BucketCol=") =>
-              nm.stripPrefix(s"$BucketCol=").toInt }
-          val buckets = writtenB.map(b => b -> s"$root/$BucketCol=$b").toMap
-          val bucketRows = writtenB.map { b =>
-            val prefix = s"$root/$BucketCol=$b/"
-            b -> fstats.iterator.collect {
-              case (pp, st) if pp.startsWith(prefix) => st.rows }.sum
-          }.toMap
-          // an overwrite references ONLY the new root: delta == full
-          if (commit(fs, path, Version(next, root,
-              System.currentTimeMillis(), bucketRows.values.sum, None,
-              Some(n), buckets, Some(bCols), bucketRows,
-              schemaJson = Some(stampIdentityHigh(recSchema, fstats).json),
-              statsNew = fstats,
-              checks = base.checks)))
-            return next
-          fs.delete(new Path(resolve(path, root)), true)
-          failIfStuck(spark, path, next)
-        }
-        throw new IllegalStateException(
-          s"hub at $path: lost the commit race $MaxRetries times — giving up")
-      case _ => commitLoop(spark, path, batchId = None)(_ => df)
+    commitLoop(spark, path) { committed =>
+      committed.lastOption match {
+        case Some(base) if base.nBuckets.isDefined =>
+          val n = base.nBuckets.get
+          val bCols = base.bucketCols.getOrElse(throw new IllegalStateException(
+            s"hub at $path records no bucket routing"))
+          require(bCols.forall(df.columns.contains),
+            s"overwrite batch must carry the routing columns $bCols")
+          // every bucket counts as touched: the new root is the whole
+          // snapshot. Even a full replacement keeps the column mapping: a
+          // reader of an OLD version still needs the physical aliases, and
+          // one namespace per table is simpler than per-version forks
+          stageBuckets(spark, path, Some(base),
+            enforceChecks(stampBuckets(df, bCols, n), Some(base)),
+            0 until n,
+            schema = Some(ColumnMapping.graft(df.schema, base.schema)),
+            shape = _.repartition(org.apache.spark.sql.functions.col(BucketCol)))
+        case base => stageFlat(spark, path, base)(df)
+      }
     }
 
   /** RESTORE the table to the content of `version` as a NEW committed
@@ -1293,25 +1319,20 @@ object VersionedHub {
     * dirs alive exactly because a kept manifest references them). Flat
     * hubs rewrite the snapshot. Restoring to the current tip is a no-op.
     */
-  def restore(spark: SparkSession, path: String, version: Int): Int = {
-    val target = versionAt(spark, path, Some(version))
-    if (target.buckets.isEmpty) {
-      if (latest(spark, path).exists(_.version == version)) return version
-      commitLoop(spark, path, batchId = None)(_ =>
-        read(spark, path, Some(version)))
-    } else {
-      val fs = fileSystem(spark, path)
-      var attempt = 0
-      while (attempt < MaxRetries) {
-        attempt += 1
-        val base = latest(spark, path).getOrElse(
-          throw new IllegalStateException(
-            s"hub at $path lost its versions mid-restore"))
-        if (base.version == version) return version
-        require(base.nBuckets == target.nBuckets &&
-            base.bucketCols == target.bucketCols,
-          s"hub at $path changed bucket layout since version $version — " +
-            "cannot restore across a layout change")
+  def restore(spark: SparkSession, path: String, version: Int): Int =
+    commitLoop(spark, path) { committed =>
+      val target = committed.find(_.version == version).getOrElse(
+        throw new IllegalArgumentException(
+          s"hub at $path has no version $version"))
+      val base = committed.last
+      require(base.nBuckets == target.nBuckets &&
+          base.bucketCols == target.bucketCols,
+        s"hub at $path changed bucket layout since version $version — " +
+          "cannot restore across a layout change")
+      if (base.version == version) Done(version)
+      else if (target.nBuckets.isEmpty)
+        stageFlat(spark, path, Some(base))(read(spark, path, Some(version)))
+      else {
         val next = base.version + 1
         // SELF-ANCHORING manifest (statsNew = the full map at `version`):
         // a restore re-references dirs that intermediate commits may have
@@ -1331,22 +1352,17 @@ object VersionedHub {
         // reconstructs (pre-restriction), so tombstoning its full key set
         // minus the target's live vectors is exact.
         val foldKeys = loadCarried(spark, path, next).dvs.keySet
-        if (commit(fs, path, Version(next, target.dataDir,
-            System.currentTimeMillis(), target.rows, None,
-            target.nBuckets, target.buckets, target.bucketCols,
-            target.bucketRows, schemaJson = target.schemaJson,
-            statsNew = target.fileStats,
-            dvNew = (foldKeys -- target.dvs.keySet).iterator
-              .map(f => f -> (Seq.empty: Seq[Long])).toMap ++
-              target.dvs,
-            checks = target.checks)))
-          return next
-        failIfStuck(spark, path, next)
+        Stage(Version(next, target.dataDir,
+          System.currentTimeMillis(), target.rows, None,
+          target.nBuckets, target.buckets, target.bucketCols,
+          target.bucketRows, schemaJson = target.schemaJson,
+          statsNew = target.fileStats,
+          dvNew = (foldKeys -- target.dvs.keySet).iterator
+            .map(f => f -> (Seq.empty: Seq[Long])).toMap ++
+            target.dvs,
+          checks = target.checks), None)
       }
-      throw new IllegalStateException(
-        s"hub at $path: lost the commit race $MaxRetries times — giving up")
     }
-  }
 
   /** SHALLOW CLONE (Delta `CREATE TABLE ... SHALLOW CLONE` parity): commit
     * the source's tip snapshot as version 1 of a NEW table at `targetPath`
@@ -1441,7 +1457,7 @@ object VersionedHub {
         Map[String, FileStats.FileStat],
       label: String): Int = {
     val root = new Path(path)
-    val dataDir = s"data/1-${UUID.randomUUID().toString.take(8)}"
+    val dataDir = freshRoot(1)
     val dst = new Path(resolve(path, dataDir))
     fs.mkdirs(dst)
     val moved = new java.util.concurrent.ConcurrentLinkedQueue[(Path, String)]()
@@ -1706,35 +1722,24 @@ object VersionedHub {
         org.apache.spark.sql.types.StructType,
       renameCols: Map[String, String] = Map.empty,
       alterChecks: Map[String, String] => Map[String, String] = identity)
-      : Int = {
-    val fs = fileSystem(spark, path)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      attempt += 1
-      val base = latest(spark, path).getOrElse(
-        throw new IllegalArgumentException(s"no committed versions at $path"))
-      val newSchema = Version.nullable(alter(snapshotSchema(spark, path, base)))
-      val next = base.version + 1
-      // RENAME COLUMN of a bucket-ROUTING column renames the recorded
-      // routing too: routing is by logical name (writers and probes pass
-      // the names users see), and each manifest is self-consistent — time
-      // travel to a pre-rename version shows the old routing names
-      val bucketCols = base.bucketCols.map(_.map(c =>
-        renameCols.collectFirst {
-          case (from, to) if from.equalsIgnoreCase(c) => to
-        }.getOrElse(c)))
-      if (commit(fs, path, Version(next, base.dataDir,
-          System.currentTimeMillis(), base.rows, None, base.nBuckets,
-          base.buckets, bucketCols, base.bucketRows,
-          schemaJson = Some(newSchema.json),
-          statsCarried = () => base.fileStats,
-          dvCarried = () => base.dvs,
-          checks = alterChecks(base.checks))))
-        return next
-      failIfStuck(spark, path, next)
-    }
-    throw new IllegalStateException(
-      s"hub at $path: lost the commit race $MaxRetries times — giving up")
+      : Int = commitLoop(spark, path) { committed =>
+    val base = tip(committed, path)
+    val newSchema = Version.nullable(alter(snapshotSchema(spark, path, base)))
+    // RENAME COLUMN of a bucket-ROUTING column renames the recorded
+    // routing too: routing is by logical name (writers and probes pass
+    // the names users see), and each manifest is self-consistent — time
+    // travel to a pre-rename version shows the old routing names
+    val bucketCols = base.bucketCols.map(_.map(c =>
+      renameCols.collectFirst {
+        case (from, to) if from.equalsIgnoreCase(c) => to
+      }.getOrElse(c)))
+    Stage(Version(base.version + 1, base.dataDir,
+      System.currentTimeMillis(), base.rows, None, base.nBuckets,
+      base.buckets, bucketCols, base.bucketRows,
+      schemaJson = Some(newSchema.json),
+      statsCarried = () => base.fileStats,
+      dvCarried = () => base.dvs,
+      checks = alterChecks(base.checks)), None)
   }
 
   /** Is `from → to` a type change the PARQUET READER can apply to existing
@@ -1785,117 +1790,42 @@ object VersionedHub {
   ): Int = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val keep = !coalesce(cond, lit(false))
-    latest(spark, path) match {
-      case None => throw new IllegalArgumentException(
-        s"no committed versions at $path")
-      case Some(v0) if v0.buckets.isEmpty =>
-        commitLoop(spark, path, batchId = None) { base =>
-          val v = base.getOrElse(throw new IllegalStateException(
-            s"hub at $path lost its versions mid-delete"))
-          read(spark, path, Some(v.version)).filter(keep)
-        }
-      case Some(_) =>
-        val fs = fileSystem(spark, path)
-        var attempt = 0
-        while (attempt < MaxRetries) {
-          attempt += 1
-          val base = latest(spark, path).getOrElse(
-            throw new IllegalStateException(
-              s"hub at $path lost its versions mid-delete"))
-          require(base.buckets.nonEmpty,
-            s"hub at $path became flat mid-delete; retry")
-          val cand = candidateBuckets
-            .map(_(base).toSeq.filter(base.buckets.contains).sorted)
-            .getOrElse(base.buckets.keys.toSeq.sorted)
-          if (cand.isEmpty) return base.version
-          // DELETION-VECTOR fast path (Delta DV shape): when the matches
-          // are FEW, record their (file, row index) addresses in the
-          // manifest instead of rewriting whole buckets — a surgical
-          // delete of k rows from a 100 TB table becomes a manifest-only
-          // commit, O(k) bytes, zero data files written. Larger deletes
-          // (and any snapshot the addressing cannot be proven sound for)
-          // fall through to the bucket rewrite below; losing the commit
-          // race costs nothing (no files to clean up).
-          val dvOutcome = dvDeleteAttempt(spark, fs, path, base, cand, cond)
-          dvOutcome match {
-            case DvCommitted(n) => return n
-            case DvNoMatches => return base.version
-            case DvLostRace => // fresh base next loop iteration
-              failIfStuck(spark, path, base.version + 1)
-            case DvFallThrough => // too many matches / unprovable: rewrite
-          }
-          if (dvOutcome == DvFallThrough) {
+    commitLoop(spark, path) { committed =>
+      val base = tip(committed, path)
+      if (base.nBuckets.isEmpty)
+        stageFlat(spark, path, Some(base))(
+          read(spark, path, Some(base.version)).filter(keep))
+      else {
+        val cand = candidateBuckets
+          .map(_(base).toSeq.filter(base.buckets.contains).sorted)
+          .getOrElse(base.buckets.keys.toSeq.sorted)
+        if (cand.isEmpty) Done(base.version)
+        // DELETION-VECTOR fast path (Delta DV shape): when the matches
+        // are FEW, record their (file, row index) addresses in the
+        // manifest instead of rewriting whole buckets — a surgical
+        // delete of k rows from a 100 TB table becomes a manifest-only
+        // commit, O(k) bytes, zero data files written. Larger deletes
+        // (and any snapshot the addressing cannot be proven sound for)
+        // fall through to the bucket rewrite below; losing the commit
+        // race costs nothing (no files to clean up).
+        else dvDeleteAttempt(spark, path, base, cand, cond).getOrElse {
           // one tagged read of the candidate dirs serves both the
           // touched-bucket detection and the rewrite
           val tagged = graft.operators.Dedup.persistForReuse(
-            cand.map { b =>
-              readDirs(spark, base, Seq(resolve(path, base.buckets(b))))
-                .withColumn(BucketCol, lit(b))
-            }.reduce(_ unionByName _))
+            readBuckets(spark, path, base, cand))
           try {
             val touched = tagged.filter(cond).select(BucketCol).distinct()
               .collect().map(_.getInt(0)).sorted.toIndexedSeq
-            if (touched.isEmpty) return base.version
-            val next = base.version + 1
-            val root = s"data/$next-${UUID.randomUUID().toString.take(8)}"
-            val bSchema = base.schema.getOrElse(new StructType())
-            ColumnMapping.toPhysical(tagged
-              .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-              .filter(keep), bSchema)
-              .repartition(col(BucketCol))
-              .write.options(BloomIndex.options(bSchema))
-              .partitionBy(BucketCol).parquet(resolve(path, root))
-            val fstatsNew = FileStats.collect(spark, fs, new Path(path),
-              new Path(resolve(path, root)))
-            val writtenB = fs.listStatus(new Path(resolve(path, root))).toSeq
-              .map(_.getPath.getName)
-              .collect { case n if n.startsWith(s"$BucketCol=") =>
-                n.stripPrefix(s"$BucketCol=").toInt }.toSet
-            // a fully-emptied bucket writes no dir and drops from the map
-            val newBuckets = (base.buckets -- touched) ++
-              touched.filter(writtenB).map(b => b -> s"$root/$BucketCol=$b")
-            val newRows: Map[Int, Long] = touched.filter(writtenB).map { b =>
-              val prefix = s"$root/$BucketCol=$b/"
-              b -> fstatsNew.iterator.collect {
-                case (p, st) if p.startsWith(prefix) => st.rows }.sum
-            }.toMap
-            val bucketRows = (base.bucketRows -- touched) ++ newRows
-            if (commit(fs, path, Version(next, root,
-                System.currentTimeMillis(), bucketRows.values.sum, None,
-                base.nBuckets, newBuckets, base.bucketCols, bucketRows,
-                schemaJson = base.schemaJson,
-                statsNew = fstatsNew,
-                statsCarried = () => base.fileStats,
-                dvCarried = () => base.dvs,
-                checks = base.checks)))
-              return next
-            fs.delete(new Path(resolve(path, root)), true)
-            failIfStuck(spark, path, next)
+            if (touched.isEmpty) Done(base.version)
+            else stageBuckets(spark, path, Some(base),
+              tagged.filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
+                .filter(keep),
+              touched, shape = _.repartition(col(BucketCol)))
           } finally tagged.unpersist()
-          }
         }
-        throw new IllegalStateException(
-          s"hub at $path: lost the commit race $MaxRetries times — giving up")
+      }
     }
   }
-
-  /** The bucket values a rewrite job actually materialized under `root` —
-    * a partitionBy write emits NO dir for an empty partition, so a bucket
-    * whose live content vanished (e.g. fully deletion-vector-deleted)
-    * must be detected and dropped from the map rather than dangle.
-    */
-  private def materializedBuckets(fs: FileSystem, path: String,
-      root: String): Set[Int] =
-    fs.listStatus(new Path(resolve(path, root))).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith(s"$BucketCol=") =>
-        n.stripPrefix(s"$BucketCol=").toInt }.toSet
-
-  private sealed trait DvOutcome
-  private case class DvCommitted(version: Int) extends DvOutcome
-  private case object DvNoMatches extends DvOutcome
-  private case object DvLostRace extends DvOutcome
-  private case object DvFallThrough extends DvOutcome
 
   /** DV commits are capped at this many positions (per commit) by
     * default: beyond it, rewriting the touched buckets amortizes better
@@ -1905,27 +1835,28 @@ object VersionedHub {
     */
   private[graft] val DvMaxPositions = 50000
 
-  /** One attempt at the manifest-only DV delete against `base`. Sound
-    * only when every matched file resolves through a GLOBALLY UNIQUE
-    * basename (the [[applyDv]] join key) in the snapshot's file-stats key
-    * space — Spark part files embed a per-job UUID, so this holds for
-    * every file the hub's own writers produced; anything unprovable
-    * (legacy manifests without stats, a colliding basename) falls back
-    * to the rewrite, never guesses.
+  /** The manifest-only DV delete against `base`: `Done` when nothing
+    * matches, the DV commit's `Stage`, or None to fall through to the
+    * bucket rewrite. Sound only when every matched file resolves through a
+    * GLOBALLY UNIQUE basename (the [[applyDv]] join key) in the snapshot's
+    * file-stats key space — Spark part files embed a per-job UUID, so this
+    * holds for every file the hub's own writers produced; anything
+    * unprovable (legacy manifests without stats, a colliding basename)
+    * falls back to the rewrite, never guesses.
     */
-  private def dvDeleteAttempt(spark: SparkSession, fs: FileSystem,
+  private def dvDeleteAttempt(spark: SparkSession,
       path: String, base: Version, cand: Seq[Int],
-      cond: org.apache.spark.sql.Column): DvOutcome = {
+      cond: org.apache.spark.sql.Column): Option[Step] = {
     if (base.schema.isEmpty ||
         !spark.conf.get("spark.graft.hub.dv.enabled", "true").toBoolean)
-      return DvFallThrough
+      return None
     // tables created before the reserved-name guard may carry a column
     // in the internal __graft_* namespace the DV address columns live in;
     // the rewrite path never tags rows, so fall back rather than let
     // withColumn silently replace (and applyDv later drop) user data
     if (base.schema.exists(_.fieldNames.exists(
         _.toLowerCase(java.util.Locale.ROOT).startsWith("__graft_"))))
-      return DvFallThrough
+      return None
     // surgical deletes only: beyond an absolute position cap AND a small
     // fraction of the live table, rewriting amortizes better than letting
     // every manifest/checkpoint carry the vectors — and a delete that
@@ -1935,24 +1866,24 @@ object VersionedHub {
       spark.conf.get("spark.graft.hub.dv.maxPositions",
         DvMaxPositions.toString).toLong,
       base.rows / 10).toInt
-    if (dvMax <= 0) return DvFallThrough
+    if (dvMax <= 0) return None
     val hits = readDirsWithPos(spark, base,
         cand.map(b => resolve(path, base.buckets(b))))
       .filter(cond)
       .select(DvFileCol, DvPosCol)
       .limit(dvMax + 1)
       .collect()
-    if (hits.isEmpty) return DvNoMatches
-    if (hits.length > dvMax) return DvFallThrough
+    if (hits.isEmpty) return Some(Done(base.version))
+    if (hits.length > dvMax) return None
     // DV key → live rel path, provably unique table-wide
     val live = base.fileStats.keySet
-    if (live.isEmpty) return DvFallThrough
+    if (live.isEmpty) return None
     val byKey = live.groupBy(dvKeyOf)
-    if (byKey.exists(_._2.size > 1)) return DvFallThrough
+    if (byKey.exists(_._2.size > 1)) return None
     val matched = hits.groupBy(_.getString(0)).map { case (n, rows) =>
       n -> rows.map(_.getLong(1)).toIndexedSeq.sorted
     }
-    if (!matched.keys.forall(byKey.contains)) return DvFallThrough
+    if (!matched.keys.forall(byKey.contains)) return None
     val dvNewEntries: Map[String, Seq[Long]] = matched.map { case (n, ps) =>
       val rel = byKey(n).head
       // existing DV rows never re-match (the position read is DV-applied),
@@ -1969,18 +1900,15 @@ object VersionedHub {
       if (base.bucketRows.isEmpty) base.bucketRows
       else base.bucketRows.map { case (b, r) =>
         b -> (r - decByBucket.getOrElse(b, 0L)) }
-    val next = base.version + 1
-    if (commit(fs, path, Version(next, base.dataDir,
-        System.currentTimeMillis(), base.rows - newlyDeleted, None,
-        base.nBuckets, base.buckets, base.bucketCols, bucketRows,
-        schemaJson = base.schemaJson,
-        statsNew = Map.empty,
-        statsCarried = () => base.fileStats,
-        dvNew = dvNewEntries,
-        dvCarried = () => base.dvs,
-        checks = base.checks)))
-      DvCommitted(next)
-    else DvLostRace
+    Some(Stage(Version(base.version + 1, base.dataDir,
+      System.currentTimeMillis(), base.rows - newlyDeleted, None,
+      base.nBuckets, base.buckets, base.bucketCols, bucketRows,
+      schemaJson = base.schemaJson,
+      statsNew = Map.empty,
+      statsCarried = () => base.fileStats,
+      dvNew = dvNewEntries,
+      dvCarried = () => base.dvs,
+      checks = base.checks), None))
   }
 
   /** UPDATE the rows matching `cond` as one committed version (SQL
@@ -2007,16 +1935,17 @@ object VersionedHub {
     // post-update row — a direct SET is refused, as in Delta. The
     // generated set is CREATE-frozen (no ALTER can add one), so one
     // entry-time probe races with nothing.
-    for (v0 <- latest(spark, path)) {
-      val gen = generatedCols(v0)
-      val hit = sets.map(_._1).filter(c =>
-        gen.contains(c.toLowerCase(java.util.Locale.ROOT)))
-      require(hit.isEmpty,
-        s"cannot UPDATE generated column(s) ${hit.mkString(", ")} — they " +
+    val v0 = latest(spark, path)
+    val genSet = v0.map(generatedCols).getOrElse(Set.empty)
+    for (v <- v0) {
+      val genHit = sets.map(_._1).filter(c =>
+        genSet.contains(c.toLowerCase(java.util.Locale.ROOT)))
+      require(genHit.isEmpty,
+        s"cannot UPDATE generated column(s) ${genHit.mkString(", ")} — they " +
           "recompute from their GENERATED ALWAYS AS expression; update the " +
           "source columns instead")
       // identity values are birth-assigned and immutable (Delta parity)
-      val idCols = identitySpecs(v0.schema)
+      val idCols = identitySpecs(v.schema)
         .map(_._1.name.toLowerCase(java.util.Locale.ROOT)).toSet
       val idHit = sets.map(_._1).filter(c =>
         idCols.contains(c.toLowerCase(java.util.Locale.ROOT)))
@@ -2028,7 +1957,6 @@ object VersionedHub {
     val setMap = sets.toMap
     require(setMap.size == sets.size,
       s"duplicate SET column among ${sets.map(_._1)}")
-    val genSet = latest(spark, path).map(generatedCols).getOrElse(Set.empty)
     def applySets(df: DataFrame): DataFrame = {
       val missing = setMap.keySet -- df.columns
       require(missing.isEmpty, s"SET columns $missing not in the snapshot")
@@ -2047,84 +1975,39 @@ object VersionedHub {
         }
       }: _*)
     }
-    latest(spark, path) match {
-      case None => throw new IllegalArgumentException(
-        s"no committed versions at $path")
-      case Some(v0) if v0.buckets.isEmpty =>
-        commitLoop(spark, path, batchId = None) { base =>
-          val v = base.getOrElse(throw new IllegalStateException(
-            s"hub at $path lost its versions mid-update"))
-          applySets(read(spark, path, Some(v.version)))
-        }
-      case Some(_) =>
-        val fs = fileSystem(spark, path)
-        var attempt = 0
-        while (attempt < MaxRetries) {
-          attempt += 1
-          val base = latest(spark, path).getOrElse(
-            throw new IllegalStateException(
-              s"hub at $path lost its versions mid-update"))
-          require(base.buckets.nonEmpty,
-            s"hub at $path became flat mid-update; retry")
-          for (bc <- base.bucketCols)
-            require(!bc.exists(setMap.contains),
-              s"cannot UPDATE bucket routing column(s) " +
-                s"${bc.filter(setMap.contains).mkString(", ")} — rows would " +
-                "leave the bucket later merges of their key route to")
-          val cand = candidateBuckets
-            .map(_(base).toSeq.filter(base.buckets.contains).sorted)
-            .getOrElse(base.buckets.keys.toSeq.sorted)
-          if (cand.isEmpty) return base.version
+    commitLoop(spark, path) { committed =>
+      val base = tip(committed, path)
+      if (base.nBuckets.isEmpty)
+        stageFlat(spark, path, Some(base))(
+          applySets(read(spark, path, Some(base.version))))
+      else {
+        for (bc <- base.bucketCols)
+          require(!bc.exists(setMap.contains),
+            s"cannot UPDATE bucket routing column(s) " +
+              s"${bc.filter(setMap.contains).mkString(", ")} — rows would " +
+              "leave the bucket later merges of their key route to")
+        val cand = candidateBuckets
+          .map(_(base).toSeq.filter(base.buckets.contains).sorted)
+          .getOrElse(base.buckets.keys.toSeq.sorted)
+        if (cand.isEmpty) Done(base.version)
+        else {
           val tagged = graft.operators.Dedup.persistForReuse(
-            cand.map { b =>
-              readDirs(spark, base, Seq(resolve(path, base.buckets(b))))
-                .withColumn(BucketCol, lit(b))
-            }.reduce(_ unionByName _))
+            readBuckets(spark, path, base, cand))
           try {
             val touched = tagged.filter(cond).select(BucketCol).distinct()
               .collect().map(_.getInt(0)).sorted.toIndexedSeq
-            if (touched.isEmpty) return base.version
-            val next = base.version + 1
-            val root = s"data/$next-${UUID.randomUUID().toString.take(8)}"
-            val rewritten = enforceChecks(applySets(
-              tagged.filter(
+            if (touched.isEmpty) Done(base.version)
+            // a SET value wider than its column widens the recorded
+            // schema (the hub's documented merge behavior) — untouched
+            // buckets keep their narrower files, reads align
+            else stageBuckets(spark, path, Some(base),
+              enforceChecks(applySets(tagged.filter(
                 col(BucketCol).isin(touched.map(Integer.valueOf): _*))),
-              Some(base))
-            val bSchema = base.schema.getOrElse(new StructType())
-            ColumnMapping.toPhysical(rewritten, bSchema)
-              .repartition(col(BucketCol))
-              .write.options(BloomIndex.options(bSchema))
-              .partitionBy(BucketCol).parquet(resolve(path, root))
-            val fstatsNew = FileStats.collect(spark, fs, new Path(path),
-              new Path(resolve(path, root)))
-            val newBuckets = (base.buckets -- touched) ++
-              touched.map(b => b -> s"$root/$BucketCol=$b")
-            val newRows: Map[Int, Long] = touched.map { b =>
-              val prefix = s"$root/$BucketCol=$b/"
-              b -> fstatsNew.iterator.collect {
-                case (p, st) if p.startsWith(prefix) => st.rows }.sum
-            }.toMap
-            val bucketRows = (base.bucketRows -- touched) ++ newRows
-            // a SET value wider than its column widens the recorded schema
-            // (the hub's documented merge behavior) — untouched buckets
-            // keep their narrower files, reads align
-            val snapSchema = unionSchema(spark, path, Some(base),
-              rewritten.drop(BucketCol).schema)
-            if (commit(fs, path, Version(next, root,
-                System.currentTimeMillis(), bucketRows.values.sum, None,
-                base.nBuckets, newBuckets, base.bucketCols, bucketRows,
-                schemaJson = Some(snapSchema.json),
-                statsNew = fstatsNew,
-                statsCarried = () => base.fileStats,
-                dvCarried = () => base.dvs,
-                checks = base.checks)))
-              return next
-            fs.delete(new Path(resolve(path, root)), true)
-            failIfStuck(spark, path, next)
+                Some(base)),
+              touched, shape = _.repartition(col(BucketCol)))
           } finally tagged.unpersist()
         }
-        throw new IllegalStateException(
-          s"hub at $path: lost the commit race $MaxRetries times — giving up")
+      }
     }
   }
 
@@ -2256,12 +2139,12 @@ object VersionedHub {
       spark: SparkSession,
       path: String,
       targetFileRows: Long = 1024 * 1024
-  ): Int = commitLoop(spark, path, batchId = None) { base =>
-    val v = requireFlat(base, path, "optimize")
+  ): Int = commitLoop(spark, path) { committed =>
+    val v = requireFlat(committed, path, "optimize")
     val current = readDirs(spark, v, Seq(resolve(path, v.dataDir)))
     val nFiles = math.max(1,
       math.ceil(v.rows.toDouble / targetFileRows).toInt)
-    current.repartition(nFiles)
+    stageFlat(spark, path, Some(v))(current.repartition(nFiles))
   }
 
   /** Per-bucket small-file compaction for BUCKETED hubs — [[optimize]]'s
@@ -2272,83 +2155,35 @@ object VersionedHub {
     * every untouched bucket's dir structurally (like a Delta OPTIMIZE
     * limited to chosen partitions). Content is unchanged — only layout —
     * so readers time-traveling across the compaction see identical rows.
-    * Runs the same optimistic create-exclusive commit loop as every other
-    * writer; concurrent upserts simply win or lose the version race.
+    * Commits through [[commitLoop]]; concurrent upserts simply win or lose
+    * the version race.
     */
   def compactBuckets(
       spark: SparkSession,
       path: String,
       buckets: Option[Seq[Int]] = None
-  ): Int = {
-    val fs = fileSystem(spark, path)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      attempt += 1
-      val base = history(spark, path).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed versions at $path to compact"))
-      require(base.nBuckets.isDefined,
-        s"compactBuckets serves bucketed hubs; $path is flat — use optimize")
-      // an explicitly requested id outside the LAYOUT's range is a caller
-      // error (a typo'd maintenance target must not report clean success);
-      // a valid id whose bucket holds no live rows is a legitimate no-op
-      val n = base.nBuckets.get
-      for (req <- buckets) {
-        val unknown = req.filterNot(b => b >= 0 && b < n)
-        require(unknown.isEmpty,
-          s"bucket(s) ${unknown.mkString(", ")} are outside the layout of " +
-            s"$path (nBuckets = $n)")
-      }
-      val chosen = buckets.getOrElse(base.buckets.keys.toSeq.sorted)
-        .filter(base.buckets.contains)
-      if (chosen.isEmpty) return base.version
-      val next = base.version + 1
-      val root = s"data/$next-${UUID.randomUUID().toString.take(8)}"
-      import org.apache.spark.sql.functions.lit
-      val merged = chosen.map { b =>
-        // readDirs (not a raw scan): old generations read through the
-        // recorded schema's widening/padding AND its column mapping
-        readDirs(spark, base, Seq(resolve(path, base.buckets(b))))
-          .withColumn(BucketCol, lit(b))
-      }.reduce { (a, b) =>
-        // buckets can carry drifted schemas (only touched buckets see a
-        // widening merge; legacy manifests without a recorded schema
-        // mergeSchema-infer per dir) — reconcile pairwise like the writers
-        val (x, y) = HubWriter.reconcileSchemas(a, b)
-        x.unionByName(y)
-      }
-      val snapSchema = unionSchema(spark, path, Some(base),
-        merged.drop(BucketCol).schema)
-      // one writer task → one file per bucket dir (the compaction point)
-      ColumnMapping.toPhysical(merged, snapSchema)
-        .coalesce(1).write.options(BloomIndex.options(snapSchema))
-        .partitionBy(BucketCol)
-        .parquet(resolve(path, root))
-      // a chosen bucket whose LIVE content is empty (every row DV-deleted)
-      // writes no dir — it must drop from the map, not dangle
-      val writtenB = materializedBuckets(fs, path, root)
-      val newBuckets = (base.buckets -- chosen) ++
-        chosen.filter(writtenB).map(b => b -> s"$root/$BucketCol=$b")
-      // content unchanged: LIVE row counts, routing and the recorded
-      // snapshot schema all carry over from the base manifest (the
-      // rewrite materializes deletion vectors, which [[rows]] already
-      // excludes); per-file stats are re-read for the rewritten dirs
-      // (fewer, larger files) and carried for the untouched ones
-      val fstatsNew = FileStats.collect(spark, fs, new Path(path),
-        new Path(resolve(path, root)))
-      if (commit(fs, path, Version(next, root, System.currentTimeMillis(),
-          base.rows, None, base.nBuckets, newBuckets, base.bucketCols,
-          base.bucketRows -- chosen.filterNot(writtenB),
-          schemaJson = Some(snapSchema.json),
-          statsNew = fstatsNew, statsCarried = () => base.fileStats,
-          dvCarried = () => base.dvs,
-          checks = base.checks)))
-        return next
-      fs.delete(new Path(resolve(path, root)), true)
-      failIfStuck(spark, path, next)
+  ): Int = commitLoop(spark, path) { committed =>
+    val base = tip(committed, path, " to compact")
+    require(base.nBuckets.isDefined,
+      s"compactBuckets serves bucketed hubs; $path is flat — use optimize")
+    // an explicitly requested id outside the LAYOUT's range is a caller
+    // error (a typo'd maintenance target must not report clean success);
+    // a valid id whose bucket holds no live rows is a legitimate no-op
+    val n = base.nBuckets.get
+    for (req <- buckets) {
+      val unknown = req.filterNot(b => b >= 0 && b < n)
+      require(unknown.isEmpty,
+        s"bucket(s) ${unknown.mkString(", ")} are outside the layout of " +
+          s"$path (nBuckets = $n)")
     }
-    throw new IllegalStateException(
-      s"hub at $path: lost the commit race $MaxRetries times — giving up")
+    val chosen = buckets.getOrElse(base.buckets.keys.toSeq.sorted)
+      .filter(base.buckets.contains)
+    if (chosen.isEmpty) Done(base.version)
+    // one writer task → one file per bucket dir (the compaction point).
+    // Content is unchanged; the rewrite materializes deletion vectors, so
+    // a chosen bucket whose every row was DV-deleted drops out
+    else stageBuckets(spark, path, Some(base),
+      readBuckets(spark, path, base, chosen), chosen, shape = _.coalesce(1))
   }
 
   /** Materialize accumulated deletion vectors — Delta's
@@ -2385,8 +2220,8 @@ object VersionedHub {
     * with the manifest's per-file min/max stats, a range predicate on
     * EITHER column then skips whole files inside every bucket through the
     * DSv2 scan — the bucketed table's answer to Delta OPTIMIZE ZORDER BY.
-    * Content is unchanged (rows/schema carried); committed through the
-    * normal optimistic log.
+    * Content is unchanged (rows/schema carried); committed through
+    * [[commitLoop]].
     */
   def optimizeZOrderBuckets(
       spark: SparkSession,
@@ -2398,67 +2233,39 @@ object VersionedHub {
   ): Int = {
     require(filesPerBucket >= 1,
       s"filesPerBucket must be >= 1, got $filesPerBucket")
-    val fs = fileSystem(spark, path)
-    var attempt = 0
-    while (attempt < MaxRetries) {
-      attempt += 1
-      val base = history(spark, path).lastOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"no committed versions at $path to z-order"))
+    commitLoop(spark, path) { committed =>
+      val base = tip(committed, path, " to z-order")
       require(base.nBuckets.isDefined,
         s"optimizeZOrderBuckets serves bucketed hubs; $path is flat — " +
           "use optimizeZOrder")
       val chosen = buckets.getOrElse(base.buckets.keys.toSeq.sorted)
         .filter(base.buckets.contains)
-      if (chosen.isEmpty) return base.version
-      val next = base.version + 1
-      val root = s"data/$next-${UUID.randomUUID().toString.take(8)}"
-      import org.apache.spark.sql.functions.{col, lit}
-      val current = chosen.map { b =>
-        readDirs(spark, base, Seq(resolve(path, base.buckets(b))))
-          .withColumn(BucketCol, lit(b))
-      }.reduce(_ unionByName _)
-      val snapSchema = unionSchema(spark, path, Some(base),
-        current.drop(BucketCol).schema)
-      ColumnMapping.toPhysical(
-          graft.functions.ZOrder.withBinnedZ(current, colA, colB)
+      if (chosen.isEmpty) Done(base.version)
+      else {
+        import org.apache.spark.sql.functions.col
+        stageBuckets(spark, path, Some(base),
+          graft.functions.ZOrder.withBinnedZ(
+            readBuckets(spark, path, base, chosen), colA, colB)
             .repartitionByRange(chosen.size * filesPerBucket,
               col(BucketCol), col("_z"))
             .sortWithinPartitions(col(BucketCol), col("_z"))
-            .drop("_z"), snapSchema)
-        .write.options(BloomIndex.options(snapSchema))
-        .partitionBy(BucketCol).parquet(resolve(path, root))
-      val fstats = FileStats.collect(spark, fs, new Path(path),
-        new Path(resolve(path, root)))
-      val writtenB = materializedBuckets(fs, path, root)
-      val newBuckets = (base.buckets -- chosen) ++
-        chosen.filter(writtenB).map(b => b -> s"$root/$BucketCol=$b")
-      if (commit(fs, path, Version(next, root, System.currentTimeMillis(),
-          base.rows, None, base.nBuckets, newBuckets, base.bucketCols,
-          base.bucketRows -- chosen.filterNot(writtenB),
-          schemaJson = Some(snapSchema.json),
-          statsNew = fstats, statsCarried = () => base.fileStats,
-          dvCarried = () => base.dvs,
-          checks = base.checks)))
-        return next
-      fs.delete(new Path(resolve(path, root)), true)
-      failIfStuck(spark, path, next)
+            .drop("_z"),
+          chosen)
+      }
     }
-    throw new IllegalStateException(
-      s"hub at $path: lost the commit race $MaxRetries times — giving up")
   }
 
   /** optimize/optimizeZOrder commit FLAT snapshots; running them against a
     * bucketed hub would fold only the latest version's touched-bucket dirs
     * (dataDir is not the whole snapshot there) and then mix layouts —
-    * refuse loudly instead. Bucketed tables compact per bucket via
-    * [[compactBuckets]].
+    * refuse loudly instead, emptied bucketed hubs included. Bucketed
+    * tables compact per bucket via [[compactBuckets]].
     */
-  private def requireFlat(base: Option[Version], path: String, op: String): Version = {
-    val v = base.getOrElse(throw new IllegalArgumentException(
-      s"no committed versions at $path to $op"))
-    require(v.buckets.isEmpty,
-      s"$op supports flat hubs only; $path is bucketed (nBuckets=${v.nBuckets.getOrElse(-1)})")
+  private def requireFlat(committed: Seq[Version], path: String,
+      op: String): Version = {
+    val v = tip(committed, path, s" to $op")
+    require(v.nBuckets.isEmpty,
+      s"$op supports flat hubs only; $path is bucketed (nBuckets=${v.nBuckets.get})")
     v
   }
 
@@ -2474,12 +2281,13 @@ object VersionedHub {
       colA: String,
       colB: String,
       targetFileRows: Long = 1024 * 1024
-  ): Int = commitLoop(spark, path, batchId = None) { base =>
-    val v = requireFlat(base, path, "optimizeZOrder")
+  ): Int = commitLoop(spark, path) { committed =>
+    val v = requireFlat(committed, path, "optimizeZOrder")
     val current = readDirs(spark, v, Seq(resolve(path, v.dataDir)))
     val nFiles = math.max(1,
       math.ceil(v.rows.toDouble / targetFileRows).toInt)
-    graft.functions.ZOrder.zOrderByBinned(current, colA, colB, nFiles)
+    stageFlat(spark, path, Some(v))(
+      graft.functions.ZOrder.zOrderByBinned(current, colA, colB, nFiles))
   }
 
   /** The audit log as a DataFrame (DESCRIBE HISTORY's shape). */
@@ -2689,8 +2497,8 @@ object VersionedHub {
           "(conditional PUT / external lock) for this scheme, or stage the " +
           s"hub on hdfs:///file:// and replicate. Path: $path")
     else if (!AtomicCreateSchemes.contains(scheme) && warnedSchemes.add(scheme))
-      System.err.println(
-        s"[graft] WARNING: VersionedHub commit atomicity on '$scheme://' " +
+      logger.warn(
+        s"VersionedHub commit atomicity on '$scheme://' " +
           "is unverified — it holds only if FileSystem.create(overwrite = " +
           "false) is atomic on this filesystem. Validate before running " +
           s"concurrent writers. Path: $path")
@@ -2762,7 +2570,7 @@ object VersionedHub {
     if (won && v.version % CheckpointInterval == 0) {
       try writeCheckpoint(fs, path, v)
       catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft] WARNING: checkpoint at $path " +
+        logger.warn(s"checkpoint at $path " +
           s"v${v.version} failed (readers fold deltas instead): $e")
       }
     }

@@ -113,6 +113,16 @@ class CatalogSpec extends AnyFunSuite {
       .contains("needs hub_primary_keys"))
   }
 
+  test("hub_zorder takes two columns on a keyless source") {
+    assert(YamlCatalog.loadString(oneSource("    hub_zorder: [a, b]\n"))
+      .sources.head.hubZorder == Seq("a", "b"))
+    assert(refusal(oneSource("    hub_zorder: [a]\n"))
+      .contains("exactly 2 columns"))
+    assert(refusal(oneSource(
+      "    hub_primary_keys: [k]\n    hub_zorder: [a, b]\n"))
+      .contains("hub_zorder applies only to keyless hubs"))
+  }
+
   test("reference catalog itself parses") {
     val ref = YamlCatalog.load(
       "/root/reference/metadata_ingestion/metadata/sources.yaml")

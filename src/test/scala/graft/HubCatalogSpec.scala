@@ -1223,7 +1223,7 @@ class HubCatalogSpec extends SparkTestBase {
         "ALTER TABLE hubrnr.default.t RENAME COLUMN zz TO yy"))
       assert(nope.getMessage.contains("does not exist") ||
         nope.getMessage.contains("UNRESOLVED_COLUMN"), nope.getMessage)
-      // a FLAT table renames too (commitLoop's write seam)
+      // a FLAT table renames too (the flat snapshot write seam)
       spark.sql("ALTER TABLE hubrnr.default.t RENAME COLUMN b TO label")
       spark.sql("INSERT INTO hubrnr.default.t VALUES (2, 'y')")
       assert(spark.table("hubrnr.default.t").orderBy("a")

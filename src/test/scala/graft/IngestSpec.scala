@@ -266,5 +266,8 @@ class IngestSpec extends SparkTestBase {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e => e.getMessage +: msgs(e.getCause))
     assert(msgs(ex).exists(m => m != null && m.contains("hub_zorder")), ex)
+    // refused at catalog load: no source ran, so nothing landed
+    assert(!new java.io.File(s"$lake/raw").exists(),
+      "a misconfigured catalog must fail before any RAW write")
   }
 }

@@ -704,14 +704,140 @@ class VersionedHubSpec extends SparkTestBase {
     VersionedHub.writeBucketed(spark,
       Seq.empty[(Int, String)].toDF("k", "v"), path, Seq("k"), 4,
       deletes = Some(Seq(1, 2, 3).toDF("k")))
+    // every other bucket-rewriting commit kind audits the same way
+    VersionedHub.updateWhere(spark, path, $"k" <= 10, Seq("v" -> lit("U")))
+    // 51 matches > rows / 10: past the DV cap, so the buckets are rewritten
+    VersionedHub.deleteWhere(spark, path, $"k" > 50)
+    VersionedHub.compactBuckets(spark, path)
+    VersionedHub.optimizeZOrderBuckets(spark, path, "k", "k", 2)
+    VersionedHub.overwrite(spark,
+      (1 to 30).map(i => (i, s"o$i")).toDF("k", "v"), path)
+    VersionedHub.restore(spark, path, 3)
     val hist = VersionedHub.history(spark, path)
-    assert(hist.map(_.rows) == Seq(100L, 101L, 98L), s"${hist.map(_.rows)}")
+    assert(hist.map(_.rows) ==
+      Seq(100L, 101L, 98L, 98L, 47L, 47L, 47L, 30L, 98L),
+      s"${hist.map(_.rows)}")
+    assert(hist.drop(3).forall(_.dvs.isEmpty), "the DELETE took the DV path")
     // per-bucket counts in each manifest sum to the total and match disk
     hist.foreach { v =>
       assert(v.bucketRows.values.sum == v.rows, s"v${v.version}")
       assert(v.bucketRows.keySet == v.buckets.keySet, s"v${v.version}")
+      assert(VersionedHub.read(spark, path, Some(v.version)).count() == v.rows,
+        s"v${v.version}")
     }
     assert(VersionedHub.read(spark, path).count() == 98L)
+  }
+
+  test("an emptied bucketed hub keeps serving row-level commands and restore") {
+    val path = tmpDir("vhub_emptied")
+    VersionedHub.writeBucketed(spark,
+      (1 to 100).map(i => (i, s"v$i")).toDF("k", "v"), path, Seq("k"), 4)
+    assert(VersionedHub.deleteWhere(spark, path, lit(true)) == 2)
+    val emptied = VersionedHub.history(spark, path).last
+    assert(emptied.rows == 0L && emptied.buckets.isEmpty &&
+      emptied.nBuckets.contains(4))
+    // nothing left to match: both commands are no-ops on the emptied tip
+    assert(VersionedHub.deleteWhere(spark, path, $"k" === 1) == 2)
+    assert(VersionedHub.updateWhere(spark, path, lit(true),
+      Seq("v" -> lit("x"))) == 2)
+    // still bucketed, so the flat-only compaction refuses it loudly
+    val e = intercept[IllegalArgumentException](
+      VersionedHub.optimize(spark, path))
+    assert(e.getMessage.contains("supports flat hubs only"), e.getMessage)
+    assert(VersionedHub.restore(spark, path, 1) == 3)
+    assert(VersionedHub.read(spark, path).count() == 100L)
+    assert(VersionedHub.restore(spark, path, 2) == 4)
+    val tip = VersionedHub.history(spark, path).last
+    assert(tip.rows == 0L && tip.nBuckets.contains(4))
+    assert(VersionedHub.read(spark, path).count() == 0L)
+    // and the emptied tip takes new merges in its bucketed layout
+    assert(VersionedHub.writeBucketed(spark, kv(7 -> "seven"), path,
+      Seq("k"), 4) == 5)
+    assert(VersionedHub.read(spark, path).select("k", "v")
+      .as[(Int, String)].collect().toSeq == Seq(7 -> "seven"))
+  }
+
+  test("every commit kind survives a lost race: the retry folds in the winner, the orphan goes") {
+    import graft.writers.CommitStore
+    def rows(path: String, version: Option[Int] = None): Map[Int, String] =
+      VersionedHub.read(spark, path, version).select("k", "v")
+        .as[(Int, String)].collect().toMap
+    val seed = (1 to 40).map(i => i -> s"v$i")
+    val winner = Seq(41 -> "w", 1 -> "W")
+    def flat(p: String): Unit =
+      VersionedHub.write(spark, kv(seed: _*), p, Seq("k"))
+    def bucketed(p: String): Unit =
+      VersionedHub.writeBucketed(spark, kv(seed: _*), p, Seq("k"), 4)
+    val afterWinner = seed.toMap ++ winner
+    // (name, setup, op, expected rows at the tip)
+    val cases: Seq[(String, String => Unit, String => Int, Map[Int, String])] =
+      Seq(
+        ("write", flat,
+          p => VersionedHub.write(spark, kv(50 -> "op"), p, Seq("k")),
+          afterWinner + (50 -> "op")),
+        ("writeBucketed", bucketed,
+          p => VersionedHub.writeBucketed(spark, kv(50 -> "op", 41 -> "op"),
+            p, Seq("k"), 4),
+          afterWinner + (50 -> "op") + (41 -> "op")),
+        ("overwrite flat", flat,
+          p => VersionedHub.overwrite(spark, kv(60 -> "o"), p),
+          Map(60 -> "o")),
+        ("overwrite bucketed", bucketed,
+          p => VersionedHub.overwrite(spark, kv(60 -> "o"), p),
+          Map(60 -> "o")),
+        ("restore bucketed", p => {
+            bucketed(p)
+            VersionedHub.writeBucketed(spark, kv(2 -> "two"), p, Seq("k"), 4)
+          },
+          p => VersionedHub.restore(spark, p, 1),
+          seed.toMap),
+        ("alterSchema", bucketed,
+          p => VersionedHub.alterSchema(spark, p,
+            _.add("extra", org.apache.spark.sql.types.IntegerType)),
+          afterWinner),
+        ("compactBuckets", bucketed,
+          p => VersionedHub.compactBuckets(spark, p), afterWinner),
+        ("optimizeZOrderBuckets", bucketed,
+          p => VersionedHub.optimizeZOrderBuckets(spark, p, "k", "k", 2),
+          afterWinner),
+        ("optimize", flat,
+          p => VersionedHub.optimize(spark, p), afterWinner))
+    for ((name, setup, op, expected) <- cases) {
+      val path = tmpDir("vhub_race")
+      setup(path)
+      val before = VersionedHub.history(spark, path).last.version
+      // the op's first claim loses to a concurrent upsert that lands first
+      @volatile var fired = false
+      CommitStore.register("file", new CommitStore {
+        override def putIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
+            p: org.apache.hadoop.fs.Path, content: Array[Byte]): Boolean = {
+          if (!fired) {
+            fired = true
+            VersionedHub.write(spark, kv(winner: _*), path, Seq("k"))
+          }
+          CommitStore.CreateExclusive.putIfAbsent(fs, p, content)
+        }
+      })
+      val committed =
+        try op(path) finally CommitStore.unregister("file")
+      assert(fired, name)
+      val hist = VersionedHub.history(spark, path)
+      assert(committed == before + 2 && hist.last.version == before + 2,
+        s"$name: ${hist.map(_.version)}")
+      assert(rows(path, Some(before + 1)) == afterWinner ++
+        (if (name.startsWith("restore")) Map(2 -> "two") else Map.empty),
+        s"$name: the winner's version")
+      assert(rows(path) == expected, name)
+      if (name == "alterSchema")
+        assert(VersionedHub.read(spark, path).columns.contains("extra"))
+      // no data dir is left that no manifest names: the loser's orphan
+      // was deleted
+      val named = hist.flatMap(v => v.buckets.values.toSeq :+ v.dataDir)
+        .map(_.stripPrefix("data/").takeWhile(_ != '/')).toSet
+      val onDisk = new java.io.File(path, "data").listFiles
+        .filter(_.isDirectory).map(_.getName).toSet
+      assert(onDisk.subsetOf(named), s"$name: orphans ${onDisk -- named}")
+    }
   }
 
   test("optimize commits a compacted snapshot as a new version, content-identical") {
