@@ -422,16 +422,16 @@ object HubDataSource {
   }
 
   /** The parquet dirs a scan must read: all of the snapshot's dirs, or only
-    * the pruned buckets' dirs. Relative to the table root.
+    * the pruned groups' dirs. Relative to the table root.
     */
   private[graft] def scanDirRels(v: VersionedHub.Version,
-      buckets: Option[Set[Int]]): Seq[String] =
-    if (v.buckets.isEmpty) Seq(v.dataDir)
-    else {
-      val ids = buckets.fold(v.buckets.keys.toSeq.sorted)(bs =>
-        bs.toSeq.sorted.filter(v.buckets.contains))
-      ids.flatMap(v.buckets.get)
-    }
+      groups: Option[Set[Int]]): Seq[String] =
+    groups.fold(v.groups.keys.toSeq)(_.toSeq.filter(v.groups.contains))
+      .sorted.flatMap(v.groups)
+
+  /** Each data dir of `v` → the file group that reads it. */
+  private[graft] def dirGroups(v: VersionedHub.Version): Map[String, Int] =
+    v.groups.flatMap { case (g, ds) => ds.map(_ -> g) }
 
   /** The planned physical read set after bucket pruning AND file-level
     * stats skipping: `survivors` are individually-listed files with
@@ -618,10 +618,10 @@ object HubDataSource {
     val dirRels = scanDirRels(base,
       prunedBuckets(spark, fullSchema, base, filters))
     val plan = planFiles(base, dirRels, filters, fullSchema)
-    val dirToBucket = base.buckets.map(_.swap)
+    val dirToGroup = dirGroups(base)
     val survivorDirs = plan.survivors.map { case (p, _) =>
       p.substring(0, p.lastIndexOf('/')) }.toSet
-    (survivorDirs ++ plan.uncoveredDirs).flatMap(dirToBucket.get).toSet
+    (survivorDirs ++ plan.uncoveredDirs).flatMap(dirToGroup.get).toSet
   }
 
   /** [[candidateBucketsFn]] against the hub's tip schema — the public
@@ -891,7 +891,7 @@ private[graft] class HubScanBuilder(path: String,
     else {
       val dirRels = HubDataSource.scanDirRels(v, pruned)
       val plan = HubDataSource.planFiles(v, dirRels, pushed.toSeq, fullSchema)
-      val totalDirs = if (v.buckets.isEmpty) 1 else v.buckets.size
+      val totalDirs = v.dirs.size
       new HubScan(path, v, fullSchema, required, plan, pushed.toSeq,
         dirsScanned = dirRels.size, totalDirs = totalDirs)
     }
@@ -949,19 +949,17 @@ private[sources] class HubScan(path: String, v: VersionedHub.Version,
     * legacy manifests (predating per-file stats) fall back to a listing.
     */
   override def estimateStatistics(): Statistics = {
-    val dirToBucket: Map[String, Int] = v.buckets.map(_.swap)
+    // a group's live rows are recorded only as a whole: known when every
+    // dir of each uncovered group is uncovered
+    val uncovered = plan.uncoveredDirs.toSet
+    val rs = plan.uncoveredDirs.flatMap(HubDataSource.dirGroups(v).get)
+      .distinct.map(g =>
+        v.groupRows.get(g).filter(_ => v.groups(g).forall(uncovered)))
     val uncoveredRows: Option[Long] =
-      if (plan.uncoveredDirs.isEmpty) Some(0L)
-      else if (v.buckets.isEmpty)
-        if (plan.uncoveredDirs == Seq(v.dataDir)) Some(v.rows) else None
-      else {
-        val rs = plan.uncoveredDirs.map(d =>
-          dirToBucket.get(d).flatMap(v.bucketRows.get))
-        if (rs.forall(_.isDefined)) Some(rs.flatten.sum) else None
-      }
+      if (rs.forall(_.isDefined)) Some(rs.flatten.sum) else None
     // per-file stats count PHYSICAL rows; subtract the files' deletion
     // vectors so the planner sees live cardinality (uncovered dirs come
-    // from bucketRows, which DV commits already decrement)
+    // from the group rows, which DV commits already decrement)
     val coveredDvRows: Long =
       if (v.dvs.isEmpty) 0L
       else plan.survivors.map(s =>

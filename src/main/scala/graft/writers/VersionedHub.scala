@@ -21,8 +21,18 @@ import org.yaml.snakeyaml.constructor.SafeConstructor
   * Layout:
   * {{{
   *   <path>/_log/00000001.json       // one manifest per committed version
-  *   <path>/data/<version>-<uuid>/   // that version's full snapshot
+  *   <path>/data/<version>-<uuid>/   // the data dir one commit wrote
   * }}}
+  *
+  * A version maps each FILE GROUP to the list of data dirs it reads. A
+  * flat table is the one group [[FlatGroup]] with no routing; a bucketed
+  * table has one group per hash bucket (`_bucket=N` dirs under a commit's
+  * root). A keyless append stages only its batch and adds that dir to the
+  * flat group, a DELETE of few rows records deletion vectors, a RESTORE
+  * re-references the target's dirs, and an ALTER re-references the base's:
+  * none of them copies the table. Merges, UPDATE and compaction rewrite
+  * the groups they touch into one dir each; untouched groups (and every
+  * dir a version still names) are shared structurally across versions.
   *
   * Commit protocol (optimistic concurrency, mirroring Delta's "mutual
   * exclusion on log record creation"), run by ONE loop, [[commitLoop]],
@@ -33,7 +43,7 @@ import org.yaml.snakeyaml.constructor.SafeConstructor
   *   2. recompute the operation against snapshot V — e.g. merge-upsert the
   *      batch ([[HubWriter]]'s merge kernel: last-writer-wins on the keys +
   *      schema widening), picking the layout from V itself;
-  *   3. write the new snapshot (flat) or the touched buckets (bucketed) to
+  *   3. write the batch (keyless append) or the rewritten file groups to
   *      a fresh uniquely-named data dir — manifest-only commits skip this;
   *   4. COMMIT by creating `_log/{V+1}.json` with create-exclusive
   *      (`FileSystem.create(overwrite = false)` — atomic on HDFS and on
@@ -46,11 +56,12 @@ import org.yaml.snakeyaml.constructor.SafeConstructor
   * Uncommitted/orphan data dirs are invisible (reads go through manifests
   * only) and are swept by [[vacuum]].
   *
-  * Scale: each flat version is a full snapshot (Delta MERGE's worst case
-  * too). At 100 TB the same log works over the bucketed
-  * layout (per-bucket data dirs in the manifest, only touched buckets
-  * rewritten); the commit point — one exclusive tiny file create per
-  * version — is size-independent.
+  * Scale: a commit writes O(batch) bytes for appends, O(k) manifest bytes
+  * for a k-row DV delete and O(touched groups) for merges — the LSM shape
+  * (Luo & Carey, VLDB 2019) and Delta's add/remove file log. A flat group
+  * gains one dir per append until a rewrite folds it (`num_dirs` in
+  * [[detailDF]] shows when [[optimize]] is due); the commit point — one
+  * exclusive tiny file create per version — is size-independent.
   */
 object VersionedHub {
 
@@ -59,12 +70,19 @@ object VersionedHub {
   private val MaxRetries = 20
   private val BucketCol = HubWriter.BucketCol
 
+  /** The one file group of a flat (unrouted) table. */
+  val FlatGroup = 0
+
   final case class Version(
-      version: Int, dataDir: String, ts: Long, rows: Long,
+      version: Int, ts: Long, rows: Long,
       batchId: Option[Long] = None,
       nBuckets: Option[Int] = None,
-      buckets: Map[Int, String] = Map.empty,
+      // file group → the data dirs it reads (relative to the table root,
+      // or fully qualified for a clone's references): [[FlatGroup]] alone
+      // on a flat table, one group per bucket on a bucketed one
+      groups: Map[Int, Seq[String]] = Map.empty,
       bucketCols: Option[Seq[String]] = None,
+      // live rows per bucket (bucketed only: the flat group's are `rows`)
       bucketRows: Map[Int, Long] = Map.empty,
       schemaJson: Option[String] = None,
       statsNew: Map[String, FileStats.FileStat] = Map.empty,
@@ -108,12 +126,23 @@ object VersionedHub {
         org.apache.spark.sql.types.DataType.fromJson(s)
           .asInstanceOf[org.apache.spark.sql.types.StructType]))
 
+    /** Every data dir this snapshot reads, in group order. */
+    def dirs: Seq[String] = groups.toSeq.sortBy(_._1).flatMap(_._2)
+
+    /** The bucket → dirs view of a bucketed snapshot; empty when flat. */
+    def buckets: Map[Int, Seq[String]] =
+      if (nBuckets.isDefined) groups else Map.empty
+
+    /** Live rows per file group, when the manifest records them. */
+    private[graft] def groupRows: Map[Int, Long] =
+      if (nBuckets.isDefined) bucketRows
+      else groups.map { case (g, _) => g -> rows }
+
     /** The data dir rels (trailing `/`) this snapshot references — the
       * path space its live files inhabit.
       */
     private[writers] def referencedDirRels: Set[String] =
-      if (buckets.nonEmpty) buckets.values.map(_ + "/").toSet
-      else Set(dataDir + "/")
+      dirs.map(_ + "/").toSet
 
     /** FULL-snapshot per-file data-skipping stats, reconstructed LAZILY:
       * the manifest itself carries only this commit's new files
@@ -150,12 +179,6 @@ object VersionedHub {
         dirs.exists(p.startsWith) }
       (carried ++ dvNew).filter(_._2.nonEmpty)
     }
-
-    /** Live (post-DV) row count of the snapshot — [[rows]] already
-      * accounts for DV deletions at commit time, so this is just `rows`;
-      * kept as a named accessor to document the invariant.
-      */
-    def liveRows: Long = rows
   }
 
   object Version {
@@ -195,15 +218,14 @@ object VersionedHub {
     * already in the log returns the existing version without re-merging —
     * exactly-once streaming sinks on top of at-least-once foreachBatch.
     *
-    * With no keys the merge degrades to an append (union), the reference's
-    * keyless contract (writer.py:24); on a fresh path the first commit is
-    * exactly `df`, its overwrite-on-first-load quirk (writer.py:32-35).
+    * With no keys the merge degrades to an append, the reference's keyless
+    * contract (writer.py:24): only the batch is written, into a fresh dir
+    * the flat group gains ([[appendable]]); on a fresh path the first
+    * commit is exactly `df`, its overwrite-on-first-load quirk
+    * (writer.py:32-35).
     *
     * On a BUCKETED table each attempt runs [[writeBucketed]]'s merge with
-    * the table's own bucket count: a bucketed version's `dataDir` is only the
-    * latest commit's touched-bucket root, so merging against it flat would
-    * commit a partial snapshot and silently drop every row living in bucket
-    * dirs shared from earlier roots. Keyless writes cannot bucket-route and
+    * the table's own bucket count. Keyless writes cannot bucket-route and
     * are refused loudly on a bucketed table. The layout is read from each
     * attempt's base, so a retry follows the table it actually merges into.
     *
@@ -252,26 +274,53 @@ object VersionedHub {
         deletes.foreach(d => require(d.columns.sorted.sameElements(keys.sorted),
           s"deletes must carry exactly the key columns $keys, " +
             s"got ${d.columns.toSeq}"))
-        stageFlat(spark, path, base, checks0)(base match {
-          case None => df
+        base match {
+          case Some(v) if keys.isEmpty && appendable(v, df.schema) =>
+            // the batch alone, aligned to the widened record (missing
+            // columns NULL, base metadata kept) so identity, generated
+            // columns and CHECK see full rows; an emptied base's dirs go
+            import org.apache.spark.sql.functions.{col, lit}
+            val merged = mergeStruct(v.schema.get, Version.nullable(df.schema))
+            val batch = df.select(merged.fields.toIndexedSeq.map { f =>
+              (if (df.columns.contains(f.name)) col(f.name).cast(f.dataType)
+               else lit(null).cast(f.dataType)).as(f.name, f.metadata)
+            }: _*)
+            stageGroups(spark, path, base, enforceChecks(batch, base),
+              Seq(FlatGroup), append = v.rows > 0L)
+          case None => stageGroups(spark, path, None,
+            enforceChecks(df, None, checks0), Seq(FlatGroup),
+            checks0 = checks0)
           case Some(v) =>
             // a 0-row base (e.g. a catalog CREATE TABLE's empty v1) may
             // hold no part files at all — parquet cannot infer a schema
             // from an empty dir, but the manifest records it
             val target0 =
-              if (v.rows == 0L) spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-                snapshotSchema(spark, path, v))
-              else readDirs(spark, v, Seq(resolve(path, v.dataDir)))
+              if (v.rows == 0L) emptyFrame(spark, snapshotSchema(spark, path, v))
+              else readDirs(spark, v, v.dirs.map(resolve(path, _)))
             val target = deletes.fold(target0)(d =>
               target0.join(d, keys, "left_anti"))
             val (t, s) = HubWriter.reconcileSchemas(target, df)
-            if (keys.isEmpty) t.unionByName(s)
-            else HubWriter.merge(t, s, keys,
-              identitySpecs(v.schema).map(_._1.name))
-        })
+            val merged =
+              if (keys.isEmpty) t.unionByName(s)
+              else HubWriter.merge(t, s, keys,
+                identitySpecs(v.schema).map(_._1.name))
+            stageGroups(spark, path, base, enforceChecks(merged, base),
+              Seq(FlatGroup))
+        }
     }
   }
+
+  /** A keyless batch APPENDS to flat `v` (a new dir in its group) when `v`
+    * records a schema and no base column changes type beyond what the
+    * parquet reader widens in old files ([[isZeroCopyWidening]]).
+    */
+  private def appendable(v: Version, batch: StructType): Boolean =
+    v.schema.exists { bs =>
+      val merged = mergeStruct(bs, Version.nullable(batch))
+      bs.fields.zip(merged.fields).forall { case (a, b) =>
+        a.dataType == b.dataType || isZeroCopyWidening(a.dataType, b.dataType)
+      }
+    }
 
   /** Plant a codegen'd [[CheckInvariant]] over `ok` resolved against `df`
     * (the predicate is planted in a throwaway filter and its ANALYZED
@@ -572,55 +621,20 @@ object VersionedHub {
   private def freshRoot(version: Int): String =
     s"data/$version-${UUID.randomUUID().toString.take(8)}"
 
-  /** Stage a FLAT snapshot: `snapshot` (recomputed from `base` by the
-    * caller) passes identity/generated/CHECK enforcement and lands in a
-    * fresh data dir — the whole next version.
+  /** Stage a REWRITE of the `touched` file groups (or, with `append`, an
+    * addition to them): write `rows` under a fresh root — partitioned by
+    * [[BucketCol]] on a bucketed table, as one dir on a flat one — and map
+    * each touched group to what materialized (a partitionBy write emits no
+    * dir for an empty bucket, so a bucket whose rows all went drops out;
+    * the flat group always keeps its dir). Untouched groups, and every
+    * still-referenced dir's file stats and deletion vectors, carry from
+    * `base` (structural sharing), so the manifest records ONLY this
+    * commit's files. Materialized groups and their rows come from the
+    * footer pass's own file list — no listing of the just-written root.
     */
-  private def stageFlat(spark: SparkSession, path: String,
-      base: Option[Version],
-      // CHECK constraints for the TABLE-CREATING commit only (an atomic
-      // CREATE TABLE ... CHECK); commits on an existing table always carry
-      // the base's
-      checks0: Map[String, String] = Map.empty)(snapshot: DataFrame): Stage = {
-    val next = base.map(_.version).getOrElse(0) + 1
-    val merged = enforceChecks(snapshot, base, checks0)
-    // the recorded schema carries column-mapping metadata forward from
-    // the base (merge projections may have dropped it); files land under
-    // PHYSICAL names so the snapshot stays homogeneous across renames
-    val recSchema = ColumnMapping.graft(merged.schema, base.flatMap(_.schema))
-    val dataDir = freshRoot(next)
-    ColumnMapping.toPhysical(merged, recSchema)
-      .write.options(BloomIndex.options(recSchema))
-      .parquet(resolve(path, dataDir))
-    // ONE footer pass over the files just written serves the whole
-    // manifest audit: row count, per-file bytes, and per-file column
-    // min/max for data skipping. Small snapshots read footers driver-side
-    // with no Spark job at all; large ones run one metadata-only job.
-    val fstats = FileStats.collect(spark, fileSystem(spark, path),
-      new Path(path), new Path(resolve(path, dataDir)), identityPhys(recSchema))
-    // flat snapshots are self-anchoring: the new dataDir IS the whole
-    // snapshot, so the delta equals the full stats map
-    Stage(Version(next, dataDir, System.currentTimeMillis(),
-      fstats.values.map(_.rows).sum,
-      schemaJson = Some(stampIdentityHigh(recSchema, fstats).json),
-      statsNew = fstats,
-      checks = base.fold(checks0)(_.checks)), Some(dataDir))
-  }
-
-  /** Stage a BUCKET REWRITE: write `rows` (stamped with [[BucketCol]])
-    * partitioned by bucket under a fresh root, and map the `touched`
-    * buckets to the dirs that materialized — a partitionBy write emits no
-    * dir for an empty bucket, so a bucket whose rows all went (deleted,
-    * fully deletion-vector-deleted) drops out of the manifest. Untouched
-    * buckets keep their dirs, row counts, file stats and deletion vectors
-    * from `base` (structural sharing), so the manifest records ONLY this
-    * commit's files and the audit stays O(touched buckets). Materialized
-    * buckets and per-bucket rows come from the footer pass's own file list
-    * (every materialized bucket dir holds ≥1 parquet part) — no listing of
-    * the just-written root.
-    */
-  private def stageBuckets(spark: SparkSession, path: String,
+  private def stageGroups(spark: SparkSession, path: String,
       base: Option[Version], rows: DataFrame, touched: Seq[Int],
+      append: Boolean = false,
       // the recorded schema; default: the base's widened by `rows`
       schema: Option[StructType] = None,
       // the write's physical layout over the physical-column frame
@@ -633,38 +647,51 @@ object VersionedHub {
     val fs = fileSystem(spark, path)
     val next = base.map(_.version).getOrElse(0) + 1
     val root = freshRoot(next)
+    val n = nBuckets.orElse(base.flatMap(_.nBuckets))
     // the recorded schema is the UNION of the base's recorded schema and
-    // the rewritten rows': `rows` covers only the TOUCHED buckets, so after
-    // a schema evolution a column living solely in untouched buckets would
-    // otherwise vanish from the record
+    // the written rows': `rows` covers only the TOUCHED groups (or only the
+    // batch), so after a schema evolution a column living solely in
+    // carried dirs would otherwise vanish from the record
     val snap = schema.getOrElse(
       unionSchema(spark, path, base, rows.drop(BucketCol).schema))
-    shape(ColumnMapping.toPhysical(rows, snap))
-      .write.options(BloomIndex.options(snap))
+    val shaped = shape(ColumnMapping.toPhysical(rows, snap))
+    if (n.isDefined) shaped.write.options(BloomIndex.options(snap))
       .partitionBy(BucketCol).parquet(resolve(path, root))
+    else shaped.drop(BucketCol).write.options(BloomIndex.options(snap))
+      .parquet(resolve(path, root))
+    // ONE footer pass over the files just written serves the whole
+    // manifest audit: row counts, per-file bytes, and per-file column
+    // min/max for data skipping. Small commits read footers driver-side
+    // with no Spark job at all; large ones run one metadata-only job.
     val fstats = FileStats.collect(spark, fs, new Path(path),
       new Path(resolve(path, root)), identityPhys(snap))
     val prefix = s"$root/$BucketCol="
-    val newRows: Map[Int, Long] = fstats.toSeq.collect {
-      case (p, st) if p.startsWith(prefix) =>
-        p.substring(prefix.length, p.indexOf('/', prefix.length)).toInt ->
-          st.rows
-    }.groupMapReduce(_._1)(_._2)(_ + _)
-    val carriedDirs = base.fold(Map.empty[Int, String])(_.buckets) -- touched
-    val carriedRows = base.fold(Map.empty[Int, Long])(_.bucketRows) -- touched
-    def countDir(rel: String): Long = {
-      val p = new Path(resolve(path, rel))
-      footerRows(fs, p).getOrElse(spark.read.parquet(p.toString).count())
-    }
-    val bucketRows: Map[Int, Long] = newRows ++ (
-      if (carriedDirs.keySet.forall(carriedRows.contains)) carriedRows
-      else // pre-bucketRows manifest underneath: count the legacy dirs once
-        carriedDirs.map { case (b, d) => b -> countDir(d) })
-    Stage(Version(next, root, System.currentTimeMillis(),
-      bucketRows.values.sum, None,
-      nBuckets.orElse(base.flatMap(_.nBuckets)),
-      carriedDirs ++ newRows.keys.map(b => b -> s"$prefix$b"),
-      bucketCols.orElse(base.flatMap(_.bucketCols)), bucketRows,
+    val (newRows, newDir): (Map[Int, Long], Int => String) =
+      if (n.isEmpty) (Map(FlatGroup -> fstats.values.map(_.rows).sum), _ => root)
+      else (fstats.toSeq.collect {
+        case (p, st) if p.startsWith(prefix) =>
+          p.substring(prefix.length, p.indexOf('/', prefix.length)).toInt ->
+            st.rows
+      }.groupMapReduce(_._1)(_._2)(_ + _), b => s"$prefix$b")
+    // a base of another layout (the empty flat v1 a bucketed hub adopts)
+    // carries nothing
+    val same = base.filter(_.nBuckets == n)
+    val oldDirs = same.fold(Map.empty[Int, Seq[String]])(_.groups)
+    val oldRows = same.fold(Map.empty[Int, Long])(_.groupRows)
+    // a manifest from before per-bucket rows underneath: count its legacy
+    // dirs once (the new manifest records them)
+    def rowsOf(g: Int): Long = oldRows.getOrElse(g,
+      spark.read.parquet(oldDirs(g).map(resolve(path, _)): _*).count())
+    val carried = if (append) oldDirs else oldDirs -- touched
+    val groups = carried ++ newRows.keys.map(g => g ->
+      (carried.getOrElse(g, Nil) :+ newDir(g)))
+    val groupRows = carried.map { case (g, _) => g -> rowsOf(g) } ++
+      newRows.map { case (g, r) =>
+        g -> (r + (if (carried.contains(g)) rowsOf(g) else 0L)) }
+    Stage(Version(next, System.currentTimeMillis(),
+      groupRows.values.sum, None, n,
+      groups, bucketCols.orElse(base.flatMap(_.bucketCols)),
+      if (n.isDefined) groupRows else Map.empty,
       schemaJson = Some(stampIdentityHigh(snap, fstats).json),
       statsNew = fstats,
       statsCarried = () => base.fold(
@@ -683,18 +710,18 @@ object VersionedHub {
       s"deletes must carry exactly the key columns $keys, got ${d.columns.toSeq}"))
   }
 
-  /** The live rows of `base`'s `buckets`, each tagged with its
-    * [[BucketCol]] — what a bucket rewrite reads. readDirs (not a raw
+  /** The live rows of `base`'s file `groups`, each tagged with its group
+    * id in [[BucketCol]] — what a group rewrite reads. readDirs (not a raw
     * scan): old generations read through the recorded schema's
-    * widening/padding AND its column mapping; buckets of a legacy manifest
-    * without a recorded schema mergeSchema-infer per dir and can drift, so
-    * they reconcile pairwise like the writers.
+    * widening/padding AND its column mapping; groups of a legacy manifest
+    * without a recorded schema mergeSchema-infer per group and can drift,
+    * so they reconcile pairwise like the writers.
     */
-  private def readBuckets(spark: SparkSession, path: String, base: Version,
-      buckets: Seq[Int]): DataFrame =
-    buckets.map { b =>
-      readDirs(spark, base, Seq(resolve(path, base.buckets(b))))
-        .withColumn(BucketCol, org.apache.spark.sql.functions.lit(b))
+  private def readGroups(spark: SparkSession, path: String, base: Version,
+      groups: Seq[Int]): DataFrame =
+    groups.map { g =>
+      readDirs(spark, base, base.groups(g).map(resolve(path, _)))
+        .withColumn(BucketCol, org.apache.spark.sql.functions.lit(g))
     }.reduce { (a, b) =>
       val (x, y) = HubWriter.reconcileSchemas(a, b)
       x.unionByName(y)
@@ -799,7 +826,8 @@ object VersionedHub {
       val merged = base match {
         case None => stamped
         case Some(v) =>
-          val dirs = touched.flatMap(v.buckets.get).map(resolve(path, _))
+          val dirs = touched.flatMap(v.buckets.get).flatten
+            .map(resolve(path, _))
           if (dirs.isEmpty) stamped
           else {
             val read = readDirs(spark, v, dirs)
@@ -840,11 +868,7 @@ object VersionedHub {
           merged.repartition(org.apache.spark.sql.functions.col(BucketCol))
         else merged,
         base, checks0)
-      // the recorded schema is computed BEFORE the write (so the file layout
-      // can follow its column mapping) from the merge's own output
-      stageBuckets(spark, path, base, toWrite, touched,
-        schema = Some(unionSchema(spark, path, base,
-          merged.drop(BucketCol).schema)),
+      stageGroups(spark, path, base, toWrite, touched,
         nBuckets = Some(nBuckets), bucketCols = Some(bCols),
         checks0 = checks0)
     } finally stamped.unpersist()
@@ -860,7 +884,7 @@ object VersionedHub {
       written: org.apache.spark.sql.types.StructType
   ): org.apache.spark.sql.types.StructType =
     base.map(v => v.schema.getOrElse(read(spark, path, Some(v.version)).schema))
-      .fold(written)(bs => mergeStruct(bs, written))
+      .fold(written)(bs => mergeStruct(bs, Version.nullable(written)))
 
   private def mergeStruct(a: org.apache.spark.sql.types.StructType,
       b: org.apache.spark.sql.types.StructType
@@ -905,8 +929,8 @@ object VersionedHub {
     * without a recorded schema fall back to mergeSchema inference.
     */
   private[graft] def readDirs(spark: SparkSession, v: Version,
-      dirs: Seq[String]): DataFrame = {
-    val raw = v.schema match {
+      dirs: Seq[String]): DataFrame =
+    v.schema match {
       case Some(s) =>
         // column mapping: files spell renamed columns by their frozen
         // PHYSICAL names — scan with those, alias back to the logical view
@@ -918,8 +942,6 @@ object VersionedHub {
       case None => applyDv(spark,
         spark.read.option("mergeSchema", "true").parquet(dirs: _*), v.dvs)
     }
-    raw
-  }
 
   /** Schema-metadata marker on columns a [[convertPartitioned]] adoption
     * materialized into FILE NAMES instead of file contents: the adopted
@@ -932,11 +954,6 @@ object VersionedHub {
     * injection is a `coalesce(physical, parsed)` and physical wins.
     */
   private[graft] val PathColKey = "graft.pathCol"
-
-  private[graft] def hasPathCols(
-      s: org.apache.spark.sql.types.StructType): Boolean =
-    s.fields.exists(f => f.metadata.contains(PathColKey) &&
-      f.metadata.getBoolean(PathColKey))
 
   /** Fill every [[PathColKey]]-marked column from the scanned file's NAME
     * when the file does not carry it physically (adopted hive-partition
@@ -1068,22 +1085,21 @@ object VersionedHub {
     val v = version.orElse(latest(spark, path)).getOrElse(
       throw new IllegalArgumentException(s"no committed versions at $path"))
     require(v.nBuckets.isDefined, s"hub at $path is not bucketed")
-    if (v.buckets.isEmpty) return read(spark, path, Some(v.version)).limit(0)
     for (bc <- v.bucketCols) require(bc == cols,
       s"hub at $path is bucketed by $bc, probed by $cols")
     val n = v.nBuckets.getOrElse(v.buckets.keys.max + 1)
     val ids = stampBuckets(probe.select(cols.map(col): _*).distinct(), cols, n)
       .select(BucketCol).distinct()
       .collect().map(_.getInt(0)).toIndexedSeq // ≤ nBuckets values
-    val dirs = ids.sorted.flatMap(v.buckets.get).map(resolve(path, _))
+    val dirs = ids.sorted.flatMap(v.buckets.get).flatten.map(resolve(path, _))
     if (dirs.isEmpty) read(spark, path, Some(v.version)).limit(0)
     else readDirs(spark, v, dirs)
   }
 
   /** Snapshot read. `version = None` reads the latest committed version;
-    * `Some(v)` time-travels to exactly version v. Bucketed versions read
-    * the union of their manifest's bucket dirs (only dirs the manifest
-    * references — orphans and older bucket generations are invisible).
+    * `Some(v)` time-travels to exactly version v: the union of every dir
+    * its manifest's file groups name (orphans and older generations are
+    * invisible).
     */
   def read(spark: SparkSession, path: String, version: Option[Int] = None): DataFrame = {
     val v = version match {
@@ -1094,11 +1110,13 @@ object VersionedHub {
         throw new IllegalArgumentException(s"no committed versions at $path")
       }
     }
-    if (v.buckets.nonEmpty)
-      readDirs(spark, v, v.buckets.values.map(resolve(path, _)).toSeq)
-    else if (v.schema.isDefined) readDirs(spark, v, Seq(resolve(path, v.dataDir)))
-    else spark.read.parquet(resolve(path, v.dataDir))
+    if (v.dirs.isEmpty) emptyFrame(spark, v.schema.getOrElse(new StructType()))
+    else readDirs(spark, v, v.dirs.map(resolve(path, _)))
   }
+
+  private def emptyFrame(spark: SparkSession, s: StructType): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
 
   /** All committed versions, ascending — the audit/time-travel index. */
   def history(spark: SparkSession, path: String): Seq[Version] = {
@@ -1183,12 +1201,9 @@ object VersionedHub {
         CommitStore.forScheme(schemeOf(path)).releaseClaim(fs, manifest)
       }
     }
-    // roots still referenced: a plain version references its dataDir; a
-    // bucketed version references (dirs under) the roots its buckets map to
-    val referencedRoots = keep.flatMap { v =>
-      if (v.buckets.isEmpty) Seq(rootName(v.dataDir))
-      else v.buckets.values.map(rootName).toSeq
-    }.toSet
+    // roots still referenced: the roots of (or above) every dir a kept
+    // version's file groups name
+    val referencedRoots = keep.flatMap(_.dirs.map(rootName)).toSet
     val dataRoot = new Path(path, "data")
     val sweepBefore = System.currentTimeMillis() - math.max(retainMs, 0L)
     val swept = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -1216,15 +1231,16 @@ object VersionedHub {
     * `fromVersion` side (and its appearance alone marks rows as updates
     * only when values actually differ).
     */
-  /** The two snapshots a change feed diffs, PRUNED to the buckets that can
-    * differ: structural sharing means a bucket dir carried unchanged from
-    * `fromVersion` to `toVersion` holds bit-identical rows on both sides
-    * and contributes nothing to the diff — so when both versions are
-    * bucketed with the same layout, only the bucket dirs that DIFFER
-    * between the two manifests are read. This turns the CDF's full-outer
-    * join from O(hub) into O(touched buckets) per version step — the shape
-    * that keeps incremental view maintenance affordable over a 100 TB hub
-    * with small streaming commits. Flat (or layout-mismatched) versions
+  /** The two snapshots a change feed diffs, PRUNED to the file groups
+    * that can differ: structural sharing means a group carried unchanged
+    * from `fromVersion` to `toVersion` holds bit-identical rows on both
+    * sides and contributes nothing to the diff — so when both versions
+    * share a layout, only the groups whose dirs (or deletion vectors)
+    * DIFFER between the two manifests are read. This turns the CDF's
+    * full-outer join from O(hub) into O(touched buckets) per version step
+    * — the shape that keeps incremental view maintenance affordable over a
+    * 100 TB hub with small streaming commits. A flat hub is one group, so
+    * any change reads both snapshots whole; layout-mismatched versions
     * fall back to the full snapshot reads.
     *
     * Schema evolution: each pruned side is aligned to its version's
@@ -1245,40 +1261,31 @@ object VersionedHub {
     def v(n: Int): Version = hist.find(_.version == n).getOrElse(
       throw new IllegalArgumentException(s"hub at $path has no version $n"))
     val (a, b) = (v(fromVersion), v(toVersion))
-    val prunable = a.buckets.nonEmpty && b.buckets.nonEmpty &&
+    val prunable = a.groups.nonEmpty && b.groups.nonEmpty &&
       a.nBuckets == b.nBuckets && a.bucketCols == b.bucketCols &&
       a.schema.isDefined && b.schema.isDefined
     if (!prunable)
       (read(spark, path, Some(fromVersion)), read(spark, path, Some(toVersion)))
     else {
       val (sa, sb) = (a.schema.get, b.schema.get)
-      // a bucket differs when its DIR changed — or, same dir, when its
+      // a group differs when its DIRS changed — or, same dirs, when their
       // DELETION VECTORS changed: a DV commit rewrites nothing yet still
-      // changes the live rows the dir contributes
+      // changes the live rows the dirs contribute
       def dvOf(ver: Version, k: Int): Map[String, Seq[Long]] =
-        ver.buckets.get(k)
-          .map(d => ver.dvs.filter(_._1.startsWith(d + "/")))
+        ver.groups.get(k)
+          .map(ds => ver.dvs.filter(f => ds.exists(d => f._1.startsWith(d + "/"))))
           .getOrElse(Map.empty)
-      val diff = (a.buckets.keySet ++ b.buckets.keySet)
-        .filter(k => a.buckets.get(k) != b.buckets.get(k) ||
+      val diff = (a.groups.keySet ++ b.groups.keySet)
+        .filter(k => a.groups.get(k) != b.groups.get(k) ||
           dvOf(a, k) != dvOf(b, k)).toSeq.sorted
-      def dirs(ver: Version): Seq[String] =
-        diff.flatMap(ver.buckets.get).map(resolve(path, _))
-      def rd(ver: Version, ds: Seq[String]): DataFrame =
-        readDirs(spark, ver, ds)
-      def emptyOf(s: org.apache.spark.sql.types.StructType): DataFrame =
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-      val (da, db) = (dirs(a), dirs(b))
-      (da.nonEmpty, db.nonEmpty) match {
-        case (true, true) => (alignTo(rd(a, da), sa), alignTo(rd(b, db), sb))
-        // every changed bucket is new to (or gone from) one side: that
-        // side is schema-shaped empty
-        case (false, true) => (emptyOf(sa), alignTo(rd(b, db), sb))
-        case (true, false) => (alignTo(rd(a, da), sa), emptyOf(sb))
-        // no bucket differs at all: the diff is empty by construction
-        case (false, false) => (emptyOf(sa), emptyOf(sb))
-      }
+      // a side none of the changed groups exist on (or no group differs
+      // at all) is schema-shaped empty
+      def side(ver: Version, s: StructType): DataFrame =
+        diff.flatMap(ver.groups.get).flatten.map(resolve(path, _)) match {
+          case Seq() => emptyFrame(spark, s)
+          case ds => alignTo(readDirs(spark, ver, ds), s)
+        }
+      (side(a, sa), side(b, sb))
     }
   }
 
@@ -1290,34 +1297,41 @@ object VersionedHub {
     */
   def overwrite(spark: SparkSession, df: DataFrame, path: String): Int =
     commitLoop(spark, path) { committed =>
-      committed.lastOption match {
-        case Some(base) if base.nBuckets.isDefined =>
-          val n = base.nBuckets.get
-          val bCols = base.bucketCols.getOrElse(throw new IllegalStateException(
-            s"hub at $path records no bucket routing"))
+      val base = committed.lastOption
+      val n = base.flatMap(_.nBuckets)
+      // every group counts as touched: the new root is the whole snapshot
+      val (rows, touched) = n match {
+        case Some(nb) =>
+          val bCols = base.flatMap(_.bucketCols).getOrElse(
+            throw new IllegalStateException(
+              s"hub at $path records no bucket routing"))
           require(bCols.forall(df.columns.contains),
             s"overwrite batch must carry the routing columns $bCols")
-          // every bucket counts as touched: the new root is the whole
-          // snapshot. Even a full replacement keeps the column mapping: a
-          // reader of an OLD version still needs the physical aliases, and
-          // one namespace per table is simpler than per-version forks
-          stageBuckets(spark, path, Some(base),
-            enforceChecks(stampBuckets(df, bCols, n), Some(base)),
-            0 until n,
-            schema = Some(ColumnMapping.graft(df.schema, base.schema)),
-            shape = _.repartition(org.apache.spark.sql.functions.col(BucketCol)))
-        case base => stageFlat(spark, path, base)(df)
+          (stampBuckets(df, bCols, nb), 0 until nb)
+        case None => (df, Seq(FlatGroup))
       }
+      val checked = enforceChecks(rows, base)
+      // the record is the new rows' schema, column mapping kept: a reader
+      // of an OLD version still needs the physical aliases
+      stageGroups(spark, path, base, checked, touched, shape = clustered(n),
+        schema = Some(ColumnMapping.graft(checked.drop(BucketCol).schema,
+          base.flatMap(_.schema))))
     }
+
+  /** One file per bucket dir (a flat group has no routing to cluster by:
+    * its rewrite keeps the scan's own parallelism). */
+  private def clustered(n: Option[Int]): DataFrame => DataFrame =
+    if (n.isDefined) _.repartition(org.apache.spark.sql.functions.col(BucketCol))
+    else identity
 
   /** RESTORE the table to the content of `version` as a NEW committed
     * version (Delta RESTORE semantics): history is preserved — the
     * restored state becomes the tip, every intermediate version stays
-    * time-travelable. A bucketed hub restores by MANIFEST ONLY: the new
-    * commit references the old version's data dirs structurally, so ZERO
-    * data is rewritten no matter the table size (and vacuum keeps those
-    * dirs alive exactly because a kept manifest references them). Flat
-    * hubs rewrite the snapshot. Restoring to the current tip is a no-op.
+    * time-travelable. Restore is MANIFEST ONLY on every layout: the new
+    * commit references the old version's data dirs and deletion vectors
+    * structurally, so ZERO data is rewritten no matter the table size (and
+    * vacuum keeps those dirs alive exactly because a kept manifest
+    * references them). Restoring to the current tip is a no-op.
     */
   def restore(spark: SparkSession, path: String, version: Int): Int =
     commitLoop(spark, path) { committed =>
@@ -1330,8 +1344,6 @@ object VersionedHub {
         s"hub at $path changed bucket layout since version $version — " +
           "cannot restore across a layout change")
       if (base.version == version) Done(version)
-      else if (target.nBuckets.isEmpty)
-        stageFlat(spark, path, Some(base))(read(spark, path, Some(version)))
       else {
         val next = base.version + 1
         // SELF-ANCHORING manifest (statsNew = the full map at `version`):
@@ -1343,7 +1355,7 @@ object VersionedHub {
         //
         // DV tombstones must cover every file key a reader's carried fold
         // can still contain — NOT just base.dvs: Version.dvs restricts to
-        // the base's referenced dirs, so a vector on a file whose bucket
+        // the base's referenced dirs, so a vector on a file whose
         // dir a later rewrite dropped (the rewrite materialized the
         // delete) has left base.dvs yet still rides the dvDelta fold. A
         // restore to a version that re-references that dir would re-apply
@@ -1352,9 +1364,9 @@ object VersionedHub {
         // reconstructs (pre-restriction), so tombstoning its full key set
         // minus the target's live vectors is exact.
         val foldKeys = loadCarried(spark, path, next).dvs.keySet
-        Stage(Version(next, target.dataDir,
+        Stage(Version(next,
           System.currentTimeMillis(), target.rows, None,
-          target.nBuckets, target.buckets, target.bucketCols,
+          target.nBuckets, target.groups, target.bucketCols,
           target.bucketRows, schemaJson = target.schemaJson,
           statsNew = target.fileStats,
           dvNew = (foldKeys -- target.dvs.keySet).iterator
@@ -1491,8 +1503,9 @@ object VersionedHub {
         pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
       }
       val fstats = augment(FileStats.collect(spark, fs, root, dst))
-      if (!commit(fs, path, Version(1, dataDir,
+      if (!commit(fs, path, Version(1,
           System.currentTimeMillis(), fstats.values.map(_.rows).sum,
+          groups = Map(FlatGroup -> Seq(dataDir)),
           schemaJson = Some(Version.nullable(schema).json),
           statsNew = fstats, checks = Map.empty))) {
         rollback()
@@ -1689,9 +1702,9 @@ object VersionedHub {
       s"clone target $targetPath already has committed versions")
     def abs(rel: String): String =
       sfs.makeQualified(new Path(resolve(sourcePath, rel))).toString
-    val v = Version(1, abs(src.dataDir), System.currentTimeMillis(),
+    val v = Version(1, System.currentTimeMillis(),
       src.rows, None, src.nBuckets,
-      src.buckets.map { case (b, d) => b -> abs(d) },
+      src.groups.map { case (g, ds) => g -> ds.map(abs) },
       src.bucketCols, src.bucketRows,
       schemaJson = src.schemaJson,
       statsNew = src.fileStats.map { case (f, st) => abs(f) -> st },
@@ -1733,9 +1746,9 @@ object VersionedHub {
       renameCols.collectFirst {
         case (from, to) if from.equalsIgnoreCase(c) => to
       }.getOrElse(c)))
-    Stage(Version(base.version + 1, base.dataDir,
+    Stage(Version(base.version + 1,
       System.currentTimeMillis(), base.rows, None, base.nBuckets,
-      base.buckets, bucketCols, base.bucketRows,
+      base.groups, bucketCols, base.bucketRows,
       schemaJson = Some(newSchema.json),
       statsCarried = () => base.fileStats,
       dvCarried = () => base.dvs,
@@ -1769,9 +1782,10 @@ object VersionedHub {
 
   /** DELETE the rows matching `cond` as one committed version (SQL
     * `DELETE FROM ... WHERE` semantics: rows where `cond` is TRUE go; rows
-    * where it is FALSE or NULL stay). Flat hubs rewrite the snapshot;
-    * bucketed hubs rewrite ONLY the buckets that actually contain matches
-    * (everything else shares structurally) — and `candidateBuckets`, when
+    * where it is FALSE or NULL stay). A few matches become deletion
+    * vectors ([[dvDeleteAttempt]]); otherwise ONLY the file groups that
+    * contain matches are rewritten (everything else shares structurally)
+    * — and `candidateBuckets` (candidate groups), when
     * supplied by a caller that can consult a manifest's file stats (the
     * DSv2 connector), bounds even the detection scan. It is a FUNCTION of
     * the base version, not a precomputed set: the commit-retry loop
@@ -1792,43 +1806,56 @@ object VersionedHub {
     val keep = !coalesce(cond, lit(false))
     commitLoop(spark, path) { committed =>
       val base = tip(committed, path)
-      if (base.nBuckets.isEmpty)
-        stageFlat(spark, path, Some(base))(
-          read(spark, path, Some(base.version)).filter(keep))
-      else {
-        val cand = candidateBuckets
-          .map(_(base).toSeq.filter(base.buckets.contains).sorted)
-          .getOrElse(base.buckets.keys.toSeq.sorted)
-        if (cand.isEmpty) Done(base.version)
-        // DELETION-VECTOR fast path (Delta DV shape): when the matches
-        // are FEW, record their (file, row index) addresses in the
-        // manifest instead of rewriting whole buckets — a surgical
-        // delete of k rows from a 100 TB table becomes a manifest-only
-        // commit, O(k) bytes, zero data files written. Larger deletes
-        // (and any snapshot the addressing cannot be proven sound for)
-        // fall through to the bucket rewrite below; losing the commit
-        // race costs nothing (no files to clean up).
-        else dvDeleteAttempt(spark, path, base, cand, cond).getOrElse {
-          // one tagged read of the candidate dirs serves both the
-          // touched-bucket detection and the rewrite
-          val tagged = graft.operators.Dedup.persistForReuse(
-            readBuckets(spark, path, base, cand))
-          try {
-            val touched = tagged.filter(cond).select(BucketCol).distinct()
-              .collect().map(_.getInt(0)).sorted.toIndexedSeq
-            if (touched.isEmpty) Done(base.version)
-            else stageBuckets(spark, path, Some(base),
-              tagged.filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-                .filter(keep),
-              touched, shape = _.repartition(col(BucketCol)))
-          } finally tagged.unpersist()
-        }
-      }
+      val cand = candidates(base, candidateBuckets)
+      if (cand.isEmpty) Done(base.version)
+      // DELETION-VECTOR fast path (Delta DV shape): when the matches are
+      // FEW, record their (file, row index) addresses in the manifest
+      // instead of rewriting whole groups — a surgical delete of k rows
+      // from a 100 TB table becomes a manifest-only commit, O(k) bytes,
+      // zero data files written. Larger deletes (and any snapshot the
+      // addressing cannot be proven sound for) fall through to the group
+      // rewrite; losing the commit race costs nothing (no files to clean
+      // up).
+      else dvDeleteAttempt(spark, path, base, cand, cond).getOrElse(
+        rewriteMatching(spark, path, base, cand, cond)(_.filter(keep)))
     }
   }
 
+  /** The candidate file groups of `base` for a row-level command, sorted:
+    * the caller's stats-pruned set, or every group.
+    */
+  private def candidates(base: Version,
+      candidateGroups: Option[Version => Set[Int]]): Seq[Int] =
+    candidateGroups.fold(base.groups.keys.toSeq)(
+      _(base).toSeq.filter(base.groups.contains)).sorted
+
+  /** Rewrite, through `rewrite`, the candidate groups of `base` holding a
+    * row matching `cond`; one tagged read serves detection and rewrite. A
+    * lone candidate skips the detection job, so a miss there commits an
+    * unchanged rewrite.
+    */
+  private def rewriteMatching(spark: SparkSession, path: String,
+      base: Version, cand: Seq[Int], cond: org.apache.spark.sql.Column)(
+      rewrite: DataFrame => DataFrame): Step = {
+    import org.apache.spark.sql.functions.col
+    def stage(rows: DataFrame, touched: Seq[Int]): Stage =
+      stageGroups(spark, path, Some(base), rewrite(rows), touched,
+        shape = clustered(base.nBuckets))
+    if (cand.size == 1) return stage(readGroups(spark, path, base, cand), cand)
+    val tagged = graft.operators.Dedup.persistForReuse(
+      readGroups(spark, path, base, cand))
+    try {
+      val touched = tagged.filter(cond).select(BucketCol).distinct()
+        .collect().map(_.getInt(0)).sorted.toIndexedSeq
+      if (touched.isEmpty) Done(base.version)
+      else stage(
+        tagged.filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*)),
+        touched)
+    } finally tagged.unpersist()
+  }
+
   /** DV commits are capped at this many positions (per commit) by
-    * default: beyond it, rewriting the touched buckets amortizes better
+    * default: beyond it, rewriting the touched groups amortizes better
     * than letting manifests and checkpoints carry ever-larger vectors.
     * Tune with `spark.graft.hub.dv.maxPositions`; disable DVs entirely
     * with `spark.graft.hub.dv.enabled = false`.
@@ -1837,7 +1864,7 @@ object VersionedHub {
 
   /** The manifest-only DV delete against `base`: `Done` when nothing
     * matches, the DV commit's `Stage`, or None to fall through to the
-    * bucket rewrite. Sound only when every matched file resolves through a
+    * group rewrite. Sound only when every matched file resolves through a
     * GLOBALLY UNIQUE basename (the [[applyDv]] join key) in the snapshot's
     * file-stats key space — Spark part files embed a per-job UUID, so this
     * holds for every file the hub's own writers produced; anything
@@ -1867,21 +1894,29 @@ object VersionedHub {
         DvMaxPositions.toString).toLong,
       base.rows / 10).toInt
     if (dvMax <= 0) return None
-    val hits = readDirsWithPos(spark, base,
-        cand.map(b => resolve(path, base.buckets(b))))
-      .filter(cond)
-      .select(DvFileCol, DvPosCol)
-      .limit(dvMax + 1)
-      .collect()
+    // ONE job (a limit-collect scans growing partition batches in
+    // successive jobs): each task ships at most dvMax + 1 positions
+    val hits = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    var over = false
+    spark.sparkContext.runJob(
+      readDirsWithPos(spark, base,
+          cand.flatMap(base.groups(_)).map(resolve(path, _)))
+        .filter(cond).select(DvFileCol, DvPosCol).rdd
+        .map(r => (r.getString(0), r.getLong(1))),
+      (it: Iterator[(String, Long)]) => it.take(dvMax + 1).toArray,
+      (_: Int, part: Array[(String, Long)]) => if (!over) {
+        hits ++= part
+        over = hits.size > dvMax
+      })
+    if (over) return None
     if (hits.isEmpty) return Some(Done(base.version))
-    if (hits.length > dvMax) return None
     // DV key → live rel path, provably unique table-wide
     val live = base.fileStats.keySet
     if (live.isEmpty) return None
     val byKey = live.groupBy(dvKeyOf)
     if (byKey.exists(_._2.size > 1)) return None
-    val matched = hits.groupBy(_.getString(0)).map { case (n, rows) =>
-      n -> rows.map(_.getLong(1)).toIndexedSeq.sorted
+    val matched = hits.groupBy(_._1).map { case (n, ps) =>
+      n -> ps.map(_._2).toIndexedSeq.sorted
     }
     if (!matched.keys.forall(byKey.contains)) return None
     val dvNewEntries: Map[String, Seq[Long]] = matched.map { case (n, ps) =>
@@ -1890,19 +1925,18 @@ object VersionedHub {
       // so old ∪ new is a disjoint union
       rel -> ((base.dvs.getOrElse(rel, Seq.empty) ++ ps).sorted: Seq[Long])
     }
-    val newlyDeleted = hits.length.toLong
+    val newlyDeleted = hits.size.toLong
     val decByBucket: Map[Int, Long] = matched.toSeq.flatMap { case (n, ps) =>
       val rel = byKey(n).head
       base.buckets.collectFirst {
-        case (b, d) if rel.startsWith(d + "/") => b -> ps.size.toLong }
+        case (b, ds) if ds.exists(d => rel.startsWith(d + "/")) =>
+          b -> ps.size.toLong }
     }.groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2).sum }
-    val bucketRows =
-      if (base.bucketRows.isEmpty) base.bucketRows
-      else base.bucketRows.map { case (b, r) =>
-        b -> (r - decByBucket.getOrElse(b, 0L)) }
-    Some(Stage(Version(base.version + 1, base.dataDir,
+    val bucketRows = base.bucketRows.map { case (b, r) =>
+      b -> (r - decByBucket.getOrElse(b, 0L)) }
+    Some(Stage(Version(base.version + 1,
       System.currentTimeMillis(), base.rows - newlyDeleted, None,
-      base.nBuckets, base.buckets, base.bucketCols, bucketRows,
+      base.nBuckets, base.groups, base.bucketCols, bucketRows,
       schemaJson = base.schemaJson,
       statsNew = Map.empty,
       statsCarried = () => base.fileStats,
@@ -1914,9 +1948,10 @@ object VersionedHub {
   /** UPDATE the rows matching `cond` as one committed version (SQL
     * `UPDATE ... SET ... WHERE` semantics: every assignment evaluates
     * against the PRE-update row — one projection, not a fold — and rows
-    * where `cond` is FALSE or NULL keep their values). Flat hubs rewrite
-    * the snapshot; bucketed hubs rewrite ONLY the buckets holding matches,
-    * with `candidateBuckets` (a function of the fresh base, recomputed per
+    * where `cond` is FALSE or NULL keep their values). ONLY the file
+    * groups holding matches are rewritten — a flat hub's one group folds
+    * its dirs into one — with `candidateBuckets` (candidate groups, a
+    * function of the fresh base, recomputed per
     * commit retry exactly like [[deleteWhere]]) bounding even the
     * detection scan. Updating a bucket-ROUTING column is refused: the
     * rewrite keeps rows in their dirs, and a re-routed value would strand
@@ -1977,49 +2012,30 @@ object VersionedHub {
     }
     commitLoop(spark, path) { committed =>
       val base = tip(committed, path)
-      if (base.nBuckets.isEmpty)
-        stageFlat(spark, path, Some(base))(
-          applySets(read(spark, path, Some(base.version))))
-      else {
-        for (bc <- base.bucketCols)
-          require(!bc.exists(setMap.contains),
-            s"cannot UPDATE bucket routing column(s) " +
-              s"${bc.filter(setMap.contains).mkString(", ")} — rows would " +
-              "leave the bucket later merges of their key route to")
-        val cand = candidateBuckets
-          .map(_(base).toSeq.filter(base.buckets.contains).sorted)
-          .getOrElse(base.buckets.keys.toSeq.sorted)
-        if (cand.isEmpty) Done(base.version)
-        else {
-          val tagged = graft.operators.Dedup.persistForReuse(
-            readBuckets(spark, path, base, cand))
-          try {
-            val touched = tagged.filter(cond).select(BucketCol).distinct()
-              .collect().map(_.getInt(0)).sorted.toIndexedSeq
-            if (touched.isEmpty) Done(base.version)
-            // a SET value wider than its column widens the recorded
-            // schema (the hub's documented merge behavior) — untouched
-            // buckets keep their narrower files, reads align
-            else stageBuckets(spark, path, Some(base),
-              enforceChecks(applySets(tagged.filter(
-                col(BucketCol).isin(touched.map(Integer.valueOf): _*))),
-                Some(base)),
-              touched, shape = _.repartition(col(BucketCol)))
-          } finally tagged.unpersist()
-        }
-      }
+      for (bc <- base.bucketCols)
+        require(!bc.exists(setMap.contains),
+          s"cannot UPDATE bucket routing column(s) " +
+            s"${bc.filter(setMap.contains).mkString(", ")} — rows would " +
+            "leave the bucket later merges of their key route to")
+      val cand = candidates(base, candidateBuckets)
+      if (cand.isEmpty) Done(base.version)
+      // a SET value wider than its column widens the recorded schema (the
+      // hub's documented merge behavior) — untouched groups keep their
+      // narrower files, reads align
+      else rewriteMatching(spark, path, base, cand, cond)(rows =>
+        enforceChecks(applySets(rows), Some(base)))
     }
   }
 
   /** The rows a stream tailing this hub receives for the version step
     * (fromVersion, toVersion]: content AS OF toVersion of every data dir
     * toVersion's manifest references that fromVersion's does not —
-    * O(changed buckets) per step via structural sharing
-    * ([[graft.sources.HubStreamSource]]'s batch body). Falls back to the
-    * full toVersion snapshot when the step cannot be proven incremental
-    * (flat layouts, layout changes, vacuumed fromVersion manifest, no
-    * recorded schema) — a superset re-delivery, safe for upsert/dedupe
-    * consumers.
+    * O(changed groups) per step via structural sharing, and just the batch
+    * after a keyless append ([[graft.sources.HubStreamSource]]'s batch
+    * body). Falls back to the full toVersion snapshot when the step cannot
+    * be proven incremental (layout changes, an empty side, vacuumed
+    * fromVersion manifest, no recorded schema) — a superset re-delivery,
+    * safe for upsert/dedupe consumers.
     */
   def changedDirsRead(
       spark: SparkSession,
@@ -2033,19 +2049,14 @@ object VersionedHub {
     val aOpt = if (fromVersion <= 0) None
       else hist.find(_.version == fromVersion)
     val incremental = aOpt.exists(a =>
-      a.buckets.nonEmpty && b.buckets.nonEmpty &&
+      a.groups.nonEmpty && b.groups.nonEmpty &&
         a.nBuckets == b.nBuckets && a.bucketCols == b.bucketCols &&
         b.schema.isDefined)
     if (!incremental) read(spark, path, Some(toVersion))
     else {
-      val a = aOpt.get
       val sb = b.schema.get
-      val changed = b.buckets.collect {
-        case (k, d) if !a.buckets.get(k).contains(d) => d
-      }.toSeq.sorted
-      if (changed.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sb)
+      val changed = b.dirs.filterNot(aOpt.get.dirs.toSet)
+      if (changed.isEmpty) emptyFrame(spark, sb)
       else alignTo(readDirs(spark, b, changed.map(resolve(path, _))), sb)
     }
   }
@@ -2057,6 +2068,20 @@ object VersionedHub {
       fromVersion: Int,
       toVersion: Int
   ): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val (joined, _, nonKey) = changedKeys(spark, path, keys, fromVersion,
+      toVersion)
+    joined.select(keys.map(col) ++
+      nonKey.map(c => coalesce(col(s"_new.$c"), col(s"_old.$c")).as(c)) :+
+      col("_ct").as("_change_type"): _*)
+  }
+
+  /** (keys whose state differs — `_old`/`_new` images, `_ct` ∈ insert |
+    * delete | update —, columns, non-key columns): [[changes]]' join.
+    */
+  private def changedKeys(spark: SparkSession, path: String,
+      keys: Seq[String], fromVersion: Int, toVersion: Int)
+      : (DataFrame, Seq[String], Seq[String]) = {
     require(keys.nonEmpty, "change feed requires hub primary keys")
     import org.apache.spark.sql.functions._
     val (ra, rb) = changedSnapshots(spark, path, fromVersion, toVersion)
@@ -2067,17 +2092,14 @@ object VersionedHub {
       keys.map(col) :+ struct(cols.map(col): _*).as("_old"): _*)
     val newSide = b.select(
       keys.map(col) :+ struct(cols.map(col): _*).as("_new"): _*)
-    oldSide.join(newSide, keys, "full_outer")
-      .withColumn("_change_type",
+    (oldSide.join(newSide, keys, "full_outer")
+      .withColumn("_ct",
         when(col("_old").isNull, lit("insert"))
           .when(col("_new").isNull, lit("delete"))
           .when(nonKey.map(c => !(col(s"_new.$c") <=> col(s"_old.$c")))
             .reduceOption(_ || _).getOrElse(lit(false)), lit("update"))
           .otherwise(lit("unchanged")))
-      .filter(col("_change_type") =!= "unchanged")
-      .select(keys.map(col) ++
-        nonKey.map(c => coalesce(col(s"_new.$c"), col(s"_old.$c")).as(c)) :+
-        col("_change_type"): _*)
+      .filter(col("_ct") =!= "unchanged"), cols, nonKey)
   }
 
   /** Delta-CDF-style change feed (`readChangeFeed` analogue): like
@@ -2096,24 +2118,9 @@ object VersionedHub {
       fromVersion: Int,
       toVersion: Int
   ): DataFrame = {
-    require(keys.nonEmpty, "change feed requires hub primary keys")
     import org.apache.spark.sql.functions._
-    val (ra, rb) = changedSnapshots(spark, path, fromVersion, toVersion)
-    val (a, b) = HubWriter.reconcileSchemas(ra, rb)
-    val cols = b.columns.toSeq
-    val nonKey = cols.filterNot(keys.contains)
-    val oldSide = a.select(
-      keys.map(col) :+ struct(cols.map(col): _*).as("_old"): _*)
-    val newSide = b.select(
-      keys.map(col) :+ struct(cols.map(col): _*).as("_new"): _*)
-    val joined = oldSide.join(newSide, keys, "full_outer")
-      .withColumn("_ct",
-        when(col("_old").isNull, lit("insert"))
-          .when(col("_new").isNull, lit("delete"))
-          .when(nonKey.map(c => !(col(s"_new.$c") <=> col(s"_old.$c")))
-            .reduceOption(_ || _).getOrElse(lit(false)), lit("update"))
-          .otherwise(lit("unchanged")))
-      .filter(col("_ct") =!= "unchanged")
+    val (joined, cols, _) = changedKeys(spark, path, keys, fromVersion,
+      toVersion)
     val expanded = joined.select(explode(
       when(col("_ct") === "insert",
         array(struct(col("_new").as("row"), lit("insert").as("t"))))
@@ -2129,11 +2136,12 @@ object VersionedHub {
   }
 
   /** Compaction as a COMMITTED version (Delta OPTIMIZE's shape): rewrite
-    * the latest snapshot into ≈`targetFileRows`-row files and commit the
-    * result through the normal log, so readers never see a half-compacted
-    * table and time travel to pre-compaction versions still works. Runs
-    * through the same optimistic protocol — a concurrent upsert simply
-    * wins or loses the version race.
+    * the flat group — every dir its appends added — into one dir of
+    * ≈`targetFileRows`-row files and commit the result through the normal
+    * log, so readers never see a half-compacted table and time travel to
+    * pre-compaction versions still works. Runs through the same
+    * optimistic protocol — a concurrent upsert simply wins or loses the
+    * version race.
     */
   def optimize(
       spark: SparkSession,
@@ -2141,11 +2149,20 @@ object VersionedHub {
       targetFileRows: Long = 1024 * 1024
   ): Int = commitLoop(spark, path) { committed =>
     val v = requireFlat(committed, path, "optimize")
-    val current = readDirs(spark, v, Seq(resolve(path, v.dataDir)))
     val nFiles = math.max(1,
       math.ceil(v.rows.toDouble / targetFileRows).toInt)
-    stageFlat(spark, path, Some(v))(current.repartition(nFiles))
+    rewriteGroups(spark, path, v, v.groups.keys.toSeq, _.repartition(nFiles))
   }
+
+  /** Stage a layout-only rewrite of `base`'s `chosen` groups through
+    * `shape`, one dir per group: content unchanged, deletion vectors
+    * materialized (a group whose every row was DV-deleted drops out).
+    */
+  private def rewriteGroups(spark: SparkSession, path: String, base: Version,
+      chosen: Seq[Int], shape: DataFrame => DataFrame): Step =
+    if (chosen.isEmpty) Done(base.version)
+    else stageGroups(spark, path, Some(base),
+      readGroups(spark, path, base, chosen), chosen, shape = shape)
 
   /** Per-bucket small-file compaction for BUCKETED hubs — [[optimize]]'s
     * counterpart (which serves flat hubs only). High-frequency streaming
@@ -2153,10 +2170,8 @@ object VersionedHub {
     * task per trigger; this rewrites the selected buckets' current
     * contents into single-file dirs under a new COMMITTED version, sharing
     * every untouched bucket's dir structurally (like a Delta OPTIMIZE
-    * limited to chosen partitions). Content is unchanged — only layout —
-    * so readers time-traveling across the compaction see identical rows.
-    * Commits through [[commitLoop]]; concurrent upserts simply win or lose
-    * the version race.
+    * limited to chosen partitions). Commits through [[commitLoop]];
+    * concurrent upserts simply win or lose the version race.
     */
   def compactBuckets(
       spark: SparkSession,
@@ -2176,22 +2191,22 @@ object VersionedHub {
         s"bucket(s) ${unknown.mkString(", ")} are outside the layout of " +
           s"$path (nBuckets = $n)")
     }
-    val chosen = buckets.getOrElse(base.buckets.keys.toSeq.sorted)
-      .filter(base.buckets.contains)
-    if (chosen.isEmpty) Done(base.version)
-    // one writer task → one file per bucket dir (the compaction point).
-    // Content is unchanged; the rewrite materializes deletion vectors, so
-    // a chosen bucket whose every row was DV-deleted drops out
-    else stageBuckets(spark, path, Some(base),
-      readBuckets(spark, path, base, chosen), chosen, shape = _.coalesce(1))
+    // one writer task → one file per bucket dir (the compaction point)
+    rewriteGroups(spark, path, base, chosenGroups(base, buckets),
+      _.coalesce(1))
   }
 
+  /** The requested groups `base` holds (default: all of them), sorted. */
+  private def chosenGroups(base: Version, req: Option[Seq[Int]]): Seq[Int] =
+    req.getOrElse(base.groups.keys.toSeq.sorted).filter(base.groups.contains)
+
   /** Materialize accumulated deletion vectors — Delta's
-    * `REORG TABLE ... APPLY (PURGE)` shape: rewrite ONLY the buckets whose
-    * live files carry vectors (the rewrite drops the dead rows, and the
-    * new manifest's DV map no longer references the replaced files), while
-    * every untouched bucket keeps its existing dir (structural sharing —
-    * O(dv'd buckets), not O(table)). The complement of the surgical DV
+    * `REORG TABLE ... APPLY (PURGE)` shape: rewrite ONLY the file groups
+    * whose live files carry vectors (the rewrite drops the dead rows, and
+    * the new manifest's DV map no longer references the replaced files),
+    * while every untouched group keeps its dirs (structural sharing —
+    * O(dv'd groups), not O(table)). A flat hub's one group folds into a
+    * single dir, as [[optimize]] does. The complement of the surgical DV
     * DELETE: vectors make the delete O(k), purge amortizes them away once
     * enough accumulate (`t$files.dv_rows` shows where). No-op returning
     * the current version when no vectors exist. Best-effort under races
@@ -2204,24 +2219,20 @@ object VersionedHub {
         s"no committed versions at $path to purge"))
     val dvKeys = base.dvs.keySet
     if (dvKeys.isEmpty) return base.version
-    // DVs are minted only on bucketed hubs (dvDeleteAttempt); a flat
-    // snapshot rewrite materializes them wholesale anyway
-    val chosen = base.buckets.collect {
-      case (b, dir) if dvKeys.exists(_.startsWith(dir + "/")) => b
+    val chosen = base.groups.collect {
+      case (g, ds) if ds.exists(d => dvKeys.exists(_.startsWith(d + "/"))) => g
     }.toSeq.sorted
-    compactBuckets(spark, path, Some(chosen))
+    if (base.nBuckets.isEmpty) optimize(spark, path)
+    else compactBuckets(spark, path, Some(chosen))
   }
 
   /** Z-order compaction for BUCKETED hubs — [[optimizeZOrder]]'s
     * counterpart: rewrite every (or the chosen) bucket's current content
     * along the Morton curve of (colA, colB), `filesPerBucket` contiguous
-    * curve segments per bucket dir, in ONE shuffle + ONE write job
-    * (range-partition on (bucket, z) then partitionBy bucket). Combined
-    * with the manifest's per-file min/max stats, a range predicate on
-    * EITHER column then skips whole files inside every bucket through the
-    * DSv2 scan — the bucketed table's answer to Delta OPTIMIZE ZORDER BY.
-    * Content is unchanged (rows/schema carried); committed through
-    * [[commitLoop]].
+    * curve segments per bucket dir. Combined with the manifest's per-file
+    * min/max stats, a range predicate on EITHER column then skips whole
+    * files inside every bucket through the DSv2 scan — the bucketed
+    * table's answer to Delta OPTIMIZE ZORDER BY.
     */
   def optimizeZOrderBuckets(
       spark: SparkSession,
@@ -2238,28 +2249,29 @@ object VersionedHub {
       require(base.nBuckets.isDefined,
         s"optimizeZOrderBuckets serves bucketed hubs; $path is flat — " +
           "use optimizeZOrder")
-      val chosen = buckets.getOrElse(base.buckets.keys.toSeq.sorted)
-        .filter(base.buckets.contains)
-      if (chosen.isEmpty) Done(base.version)
-      else {
-        import org.apache.spark.sql.functions.col
-        stageBuckets(spark, path, Some(base),
-          graft.functions.ZOrder.withBinnedZ(
-            readBuckets(spark, path, base, chosen), colA, colB)
-            .repartitionByRange(chosen.size * filesPerBucket,
-              col(BucketCol), col("_z"))
-            .sortWithinPartitions(col(BucketCol), col("_z"))
-            .drop("_z"),
-          chosen)
-      }
+      val chosen = chosenGroups(base, buckets)
+      zOrderGroups(spark, path, base, chosen, colA, colB,
+        chosen.size * filesPerBucket)
     }
   }
 
-  /** optimize/optimizeZOrder commit FLAT snapshots; running them against a
-    * bucketed hub would fold only the latest version's touched-bucket dirs
-    * (dataDir is not the whole snapshot there) and then mix layouts —
-    * refuse loudly instead, emptied bucketed hubs included. Bucketed
-    * tables compact per bucket via [[compactBuckets]].
+  /** Stage the z-order rewrite of `base`'s `chosen` groups in ONE shuffle
+    * + ONE write job: `nParts` contiguous (group, z) curve segments.
+    */
+  private def zOrderGroups(spark: SparkSession, path: String, base: Version,
+      chosen: Seq[Int], colA: String, colB: String, nParts: Int): Step = {
+    import org.apache.spark.sql.functions.col
+    rewriteGroups(spark, path, base, chosen, rows =>
+      graft.functions.ZOrder.withBinnedZ(rows, colA, colB)
+        .repartitionByRange(nParts, col(BucketCol), col("_z"))
+        .sortWithinPartitions(col(BucketCol), col("_z"))
+        .drop("_z"))
+  }
+
+  /** optimize/optimizeZOrder serve FLAT hubs; on a bucketed hub they would
+    * fold every bucket into one unrouted dir and mix layouts — refuse
+    * loudly instead, emptied bucketed hubs included. Bucketed tables
+    * compact per bucket via [[compactBuckets]].
     */
   private def requireFlat(committed: Seq[Version], path: String,
       op: String): Version = {
@@ -2270,7 +2282,7 @@ object VersionedHub {
   }
 
   /** Z-order compaction (Delta OPTIMIZE ZORDER BY analogue): rewrite the
-    * latest snapshot along the Morton curve of two columns so every file
+    * flat group along the Morton curve of two columns so every file
     * carries a narrow min/max range on BOTH — parquet zone-map pruning then
     * works for predicates on either column. Committed through the normal
     * log like [[optimize]].
@@ -2283,21 +2295,19 @@ object VersionedHub {
       targetFileRows: Long = 1024 * 1024
   ): Int = commitLoop(spark, path) { committed =>
     val v = requireFlat(committed, path, "optimizeZOrder")
-    val current = readDirs(spark, v, Seq(resolve(path, v.dataDir)))
     val nFiles = math.max(1,
       math.ceil(v.rows.toDouble / targetFileRows).toInt)
-    stageFlat(spark, path, Some(v))(
-      graft.functions.ZOrder.zOrderByBinned(current, colA, colB, nFiles))
+    zOrderGroups(spark, path, v, v.groups.keys.toSeq, colA, colB, nFiles)
   }
 
   /** The audit log as a DataFrame (DESCRIBE HISTORY's shape). */
   def historyDF(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     history(spark, path)
-      .map(v => (v.version, v.dataDir, v.ts, v.rows, v.batchId,
-        v.nBuckets, v.buckets.size))
-      .toDF("version", "data_dir", "ts", "rows", "batch_id",
-        "n_buckets", "n_bucket_dirs")
+      .map(v => (v.version, v.dirs, v.ts, v.rows, v.batchId,
+        v.nBuckets, v.dirs.size))
+      .toDF("version", "data_dirs", "ts", "rows", "batch_id",
+        "n_buckets", "n_dirs")
   }
 
   /** The live-file inventory of a snapshot (Iceberg `.files` / Delta
@@ -2338,7 +2348,9 @@ object VersionedHub {
     * [[filesDF]]. `size_in_bytes`/`num_files` are the LIVE tip set
     * (what a full scan would read), `num_dv_rows` the deletions the tip's
     * deletion vectors hide, `path_cols` the hive-partition columns a
-    * [[convertPartitioned]] adoption materialized into file names.
+    * [[convertPartitioned]] adoption materialized into file names, and
+    * `num_dirs` the data dirs a read opens — one per keyless append on a
+    * flat hub until [[optimize]] folds them.
     */
   def detailDF(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
@@ -2360,11 +2372,13 @@ object VersionedHub {
       schema.exists(ColumnMapping.hasMapping),
       pathCols,
       v.dvs.size.toLong,
-      v.dvs.valuesIterator.map(_.size.toLong).sum
+      v.dvs.valuesIterator.map(_.size.toLong).sum,
+      v.dirs.size.toLong
     )).toDF("format", "location", "version", "created_at",
       "last_commit_at", "num_versions", "rows", "num_files",
       "size_in_bytes", "n_buckets", "bucket_cols", "num_checks",
-      "column_mapping", "path_cols", "num_dv_files", "num_dv_rows")
+      "column_mapping", "path_cols", "num_dv_files", "num_dv_rows",
+      "num_dirs")
   }
 
   // ---------- log internals ----------
@@ -2515,9 +2529,13 @@ object VersionedHub {
     fs.mkdirs(log)
     val manifest = new Path(log, f"${v.version}%08d.json")
     val batchField = v.batchId.map(id => s""", "batchId": $id""").getOrElse("")
+    // file group → its dirs; manifests before the group model carried a
+    // flat `dataDir` or a bucketed `buckets` map instead (readManifest
+    // parses all three)
+    val groupsField = v.groups.toSeq.sortBy(_._1).map { case (g, ds) =>
+      s""""$g": ${ds.map(d => s""""${jsonEscape(d)}"""").mkString("[", ", ", "]")}"""
+    }.mkString(""", "groups": {""", ", ", "}")
     val bucketFields = v.nBuckets.map { n =>
-      val m = v.buckets.toSeq.sortBy(_._1)
-        .map { case (b, d) => s""""$b": "$d"""" }.mkString("{", ", ", "}")
       val bc = v.bucketCols.map(cs =>
         s""", "bucketCols": ${cs.map(c => s""""$c"""").mkString("[", ", ", "]")}""")
         .getOrElse("")
@@ -2526,7 +2544,7 @@ object VersionedHub {
         else v.bucketRows.toSeq.sortBy(_._1)
           .map { case (b, r) => s""""$b": $r""" }
           .mkString(""", "bucketRows": {""", ", ", "}")
-      s""", "nBuckets": $n, "buckets": $m$bc$br"""
+      s""", "nBuckets": $n$bc$br"""
     }.getOrElse("")
     val schemaField = v.schemaJson
       .map(s => s""", "schema": "${jsonEscape(s)}"""").getOrElse("")
@@ -2555,7 +2573,7 @@ object VersionedHub {
           s""""${jsonEscape(n)}": "${jsonEscape(sql)}"""" }
         .mkString(""", "checks": {""", ", ", "}")
     val content =
-      s"""{"version": ${v.version}, "dataDir": "${v.dataDir}", "ts": ${v.ts}, "rows": ${v.rows}$batchField$bucketFields$schemaField$statsField$dvField$checksField}"""
+      s"""{"version": ${v.version}, "ts": ${v.ts}, "rows": ${v.rows}$batchField$groupsField$bucketFields$schemaField$statsField$dvField$checksField}"""
         .getBytes("UTF-8")
     val won = CommitStore.forScheme(schemeOf(path)).putIfAbsent(
       fs, manifest, content)
@@ -2895,9 +2913,6 @@ object VersionedHub {
     else Right(None)
   }
 
-  private def parseManifestOnce(fs: FileSystem, manifest: Path): Option[scala.collection.Map[String, AnyRef]] =
-    parseManifestAttempt(fs, manifest).getOrElse(None)
-
   /** A commit loser whose winning version number has an UNREADABLE manifest
     * is racing a ghost: the winner crashed between the create-exclusive
     * claim and the content write, and no retry can ever succeed. Fail now
@@ -3009,10 +3024,17 @@ object VersionedHub {
     // window is an infrastructure fault, not an in-flight commit — loud
     for (io <- lastIo if m == null) throw io
     if (m == null) return None // in-flight too long or corrupt: treat as absent
-    val buckets = m.get("buckets") match {
-      case Some(bm: java.util.Map[_, _]) =>
-        bm.asScala.map { case (k, v) => k.toString.toInt -> v.toString }.toMap
-      case _ => Map.empty[Int, String]
+    val groups: Map[Int, Seq[String]] = (m.get("groups"), m.get("buckets")) match {
+      case (Some(gm: java.util.Map[_, _]), _) =>
+        gm.asScala.map { case (k, ds) => k.toString.toInt ->
+          ds.asInstanceOf[java.util.List[_]].asScala.map(_.toString).toSeq
+        }.toMap
+      // manifests before the group model: bucket → its one dir ...
+      case (_, Some(bm: java.util.Map[_, _])) =>
+        bm.asScala.map { case (k, d) => k.toString.toInt -> Seq(d.toString) }
+          .toMap
+      // ... or a flat table's one snapshot dir
+      case _ => Map(FlatGroup -> Seq(m("dataDir").toString))
     }
     val bucketCols = m.get("bucketCols") match {
       case Some(l: java.util.List[_]) => Some(l.asScala.map(_.toString).toSeq)
@@ -3044,12 +3066,11 @@ object VersionedHub {
     }
     val parsed = Version(
       version,
-      m("dataDir").toString,
       m("ts").toString.toLong,
       m("rows").toString.toLong,
       m.get("batchId").map(_.toString.toLong),
       m.get("nBuckets").map(_.toString.toInt),
-      buckets,
+      groups,
       bucketCols,
       bucketRows,
       m.get("schema").map(_.toString),
@@ -3065,35 +3086,6 @@ object VersionedHub {
       legacyStats = m.get("statsDelta").isEmpty)
     manifestCache.put(cacheKey, parsed)
     Some(parsed)
-  }
-
-  /** Row count of every parquet file under `dir`, summed from the footers
-    * on the DRIVER — no Spark job. Returns None when the dir holds more
-    * than `maxFiles` files (a driver-side sequential footer loop would
-    * serialize what a parallel scan job does better); callers fall back to
-    * a Spark metadata count then. Small streaming commits — the
-    * high-frequency case where per-job launch overhead dominates — stay
-    * job-free.
-    */
-  private def footerRows(fs: FileSystem, dir: Path,
-      maxFiles: Int = 64): Option[Long] = {
-    val it = fs.listFiles(dir, /* recursive = */ true)
-    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.LocatedFileStatus]
-    var nParquet = 0 // running count: the listing loop stays O(entries)
-    while (it.hasNext) {
-      val st = it.next()
-      files += st
-      if (st.getPath.getName.endsWith(".parquet")) {
-        nParquet += 1
-        if (nParquet > maxFiles) return None
-      }
-    }
-    val conf = fs.getConf
-    Some(files.filter(_.getPath.getName.endsWith(".parquet")).map { st =>
-      val fr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
-      try fr.getRecordCount finally fr.close()
-    }.sum)
   }
 
   private[graft] def resolve(path: String, rel: String): String =

@@ -10,7 +10,7 @@ class BucketedHubSpec extends SparkTestBase {
   import spark.implicits._
 
   /** bucket → data dir of the latest version's manifest */
-  def bucketDirs(path: String): Map[Int, String] =
+  def bucketDirs(path: String): Map[Int, Seq[String]] =
     VersionedHub.history(spark, path).last.buckets
 
   test("bucketed merge rewrites only the touched buckets") {

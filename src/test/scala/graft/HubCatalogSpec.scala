@@ -1890,7 +1890,7 @@ class HubCatalogSpec extends SparkTestBase {
       assert(v1.rows == 50L && v1.nBuckets.isEmpty)
       // zero-copy: the adopted files are the SAME files, renamed in place
       val afterNames = new java.io.File(
-        s"$base/t/${v1.dataDir}").listFiles()
+        s"$base/t/${v1.dirs.head}").listFiles()
         .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet
       assert(afterNames == beforeNames, "adoption must rename, not rewrite")
       // the full lifecycle works immediately on the adopted table
@@ -1948,7 +1948,7 @@ class HubCatalogSpec extends SparkTestBase {
       val v1 = VersionedHub.history(spark, s"$base/t").last
       assert(v1.rows == 60L)
       // zero-copy: same files, renamed with the value-folding prefix
-      val adopted = new java.io.File(s"$base/t/${v1.dataDir}").listFiles()
+      val adopted = new java.io.File(s"$base/t/${v1.dirs.head}").listFiles()
         .map(_.getName).filter(_.endsWith(".parquet"))
         .filterNot(_.startsWith(".")).toSet
       assert(adopted.map(_.replaceFirst("^ingest_date=[^;]*;", ""))

@@ -278,7 +278,7 @@ class HubDataSourceSpec extends SparkTestBase {
     val path = mkHub("dsv2_inner")
     val v = VersionedHub.versionAt(spark, path, None)
     val schema = VersionedHub.read(spark, path).schema
-    val dirs = v.buckets.values.map(d =>
+    val dirs = v.dirs.map(d =>
       graft.writers.VersionedHub.resolve(path, d)).toSeq
     // the exact DataFrame buildScan hands to the V1 bridge: the pushed
     // predicates must appear as PushedFilters on its FileSourceScan, so

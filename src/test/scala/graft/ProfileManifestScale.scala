@@ -54,7 +54,8 @@ object ProfileManifestScale {
         .createTempDirectory(s"ck_scale_$n").toString
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
-      val v = VersionedHub.Version(10, "data", 0L, n.toLong,
+      val v = VersionedHub.Version(10, 0L, n.toLong,
+        groups = Map(0 -> Seq("data")),
         statsNew = synthStats(n), checks = Map.empty)
       VersionedHub.writeCheckpoint(fs, path, v)
       val log = new org.apache.hadoop.fs.Path(s"$path/_log")

@@ -559,10 +559,8 @@ class StreamingSpec extends SparkTestBase {
       // storage bounded too: every surviving data root is referenced by a
       // kept manifest (orphans swept), and compaction left single-file dirs
       val roots = new java.io.File(hub, "data").listFiles().map(_.getName).toSet
-      val referenced = hist.flatMap(v =>
-        if (v.buckets.isEmpty) Seq(v.dataDir.stripPrefix("data/"))
-        else v.buckets.values.map(_.stripPrefix("data/").takeWhile(_ != '/')))
-        .toSet
+      val referenced = hist.flatMap(_.dirs.map(
+        _.stripPrefix("data/").takeWhile(_ != '/'))).toSet
       assert(roots.forall(referenced.contains),
         s"$hub unswept orphan roots: ${roots.diff(referenced)}")
     }

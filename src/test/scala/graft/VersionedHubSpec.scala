@@ -227,7 +227,7 @@ class VersionedHubSpec extends SparkTestBase {
     val (m1, m2) = (hist.head, hist.last)
     val changedDirs = (m1.buckets.keySet ++ m2.buckets.keySet)
       .filter(b => m1.buckets.get(b) != m2.buckets.get(b))
-      .flatMap(b => Seq(m1.buckets.get(b), m2.buckets.get(b)).flatten)
+      .flatMap(b => Seq(m1.buckets.get(b), m2.buckets.get(b)).flatten.flatten)
     assert(changedDirs.size <= 4, s"2 keys touch ≤2 buckets: $changedDirs")
     val cdf = VersionedHub.changesCDF(spark, path, Seq("k"), 1, 2)
     // pruning evidence: every scanned file lives under a CHANGED bucket dir
@@ -387,7 +387,7 @@ class VersionedHubSpec extends SparkTestBase {
     assert(tip.version == 13)
     val fs = new HPath(path).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    val truth = tip.buckets.values.toSeq.flatMap(rel =>
+    val truth = tip.dirs.flatMap(rel =>
       graft.writers.FileStats.collect(spark, fs, new HPath(path),
         new HPath(s"$path/$rel"))).toMap
     assert(tip.fileStats.keySet == truth.keySet,
@@ -430,7 +430,7 @@ class VersionedHubSpec extends SparkTestBase {
     val sStats = synth(50)
     val sDvs = Map(sStats.keys.head -> Seq(1L, 5L, 9L))
     VersionedHub.writeCheckpoint(fs, small, VersionedHub.Version(
-      10, "data", 0L, 0L, statsNew = sStats, dvNew = sDvs, checks = Map.empty))
+      10, 0L, 0L, groups = Map(0 -> Seq("data")), statsNew = sStats, dvNew = sDvs, checks = Map.empty))
     assert(new java.io.File(s"$small/_log/00000010.checkpoint.json").isFile)
     val sBack = VersionedHub.loadCarried(spark, small, 10)
     assert(sBack.stats == sStats && sBack.dvs == sDvs)
@@ -440,7 +440,7 @@ class VersionedHubSpec extends SparkTestBase {
       // a DV on a file with NO recorded stats must survive the round-trip
       "data/9-zz/bucket=0/ghost.parquet" -> Seq(7L))
     VersionedHub.writeCheckpoint(fs, big, VersionedHub.Version(
-      10, "data", 0L, 0L, statsNew = bStats, dvNew = bDvs, checks = Map.empty))
+      10, 0L, 0L, groups = Map(0 -> Seq("data")), statsNew = bStats, dvNew = bDvs, checks = Map.empty))
     assert(new java.io.File(s"$big/_log/00000010.checkpoint.parquet")
       .isDirectory, "a big checkpoint must land as a parquet dir")
     val bBack = VersionedHub.loadCarried(spark, big, 10)
@@ -448,7 +448,7 @@ class VersionedHubSpec extends SparkTestBase {
     // a corrupt/torn parquet checkpoint falls back to a JSON sibling...
     val mixed = tmpDir("vhub_ck_mixed")
     VersionedHub.writeCheckpoint(fs, mixed, VersionedHub.Version(
-      10, "data", 0L, 0L, statsNew = sStats, checks = Map.empty))
+      10, 0L, 0L, groups = Map(0 -> Seq("data")), statsNew = sStats, checks = Map.empty))
     val junk = new java.io.File(s"$mixed/_log/00000010.checkpoint.parquet")
     assert(junk.mkdirs())
     java.nio.file.Files.write(
@@ -467,7 +467,7 @@ class VersionedHubSpec extends SparkTestBase {
     // re-writing the mixed fixture's checkpoint makes the parquet form
     // parse again, superseding the JSON fallback
     VersionedHub.writeCheckpoint(fs, mixed, VersionedHub.Version(
-      10, "data", 0L, 0L, statsNew = bStats, checks = Map.empty))
+      10, 0L, 0L, groups = Map(0 -> Seq("data")), statsNew = bStats, checks = Map.empty))
     val repaired = VersionedHub.loadCarried(spark, mixed, 10)
     assert(repaired.stats == bStats,
       "re-writing a checkpoint over a torn one must replace it cleanly")
@@ -578,8 +578,8 @@ class VersionedHubSpec extends SparkTestBase {
     val fdf = VersionedHub.filesDF(spark, path)
       .agg(sum("rows"), sum("dv_rows")).as[(Long, Long)].head()
     assert(fdf._2 == 3L && fdf._1 - fdf._2 == 997L, fdf.toString)
-    val dvDirs = tip.buckets.filter { case (_, d) =>
-      tip.dvs.keySet.exists(_.startsWith(d + "/")) }.keySet
+    val dvDirs = tip.buckets.filter { case (_, ds) =>
+      ds.exists(d => tip.dvs.keySet.exists(_.startsWith(d + "/"))) }.keySet
     val untouched = tip.buckets -- dvDirs
     assert(VersionedHub.purge(spark, path) == 3)
     val after = VersionedHub.history(spark, path).last
@@ -832,7 +832,7 @@ class VersionedHubSpec extends SparkTestBase {
         assert(VersionedHub.read(spark, path).columns.contains("extra"))
       // no data dir is left that no manifest names: the loser's orphan
       // was deleted
-      val named = hist.flatMap(v => v.buckets.values.toSeq :+ v.dataDir)
+      val named = hist.flatMap(_.dirs)
         .map(_.stripPrefix("data/").takeWhile(_ != '/')).toSet
       val onDisk = new java.io.File(path, "data").listFiles
         .filter(_.isDirectory).map(_.getName).toSet
@@ -972,7 +972,7 @@ class VersionedHubSpec extends SparkTestBase {
     def filesIn(rel: String) =
       new java.io.File(path, rel).listFiles()
         .count(f => f.getName.endsWith(".parquet"))
-    assert(before.buckets.values.exists(d => filesIn(d) > 1),
+    assert(before.dirs.exists(d => filesIn(d) > 1),
       "expected small-file accumulation before compaction")
     val rows = VersionedHub.read(spark, path)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -980,7 +980,7 @@ class VersionedHubSpec extends SparkTestBase {
     val v = VersionedHub.compactBuckets(spark, path)
     val after = VersionedHub.history(spark, path).last
     assert(after.version == v && v == before.version + 1)
-    assert(after.buckets.values.forall(d => filesIn(d) == 1),
+    assert(after.dirs.forall(d => filesIn(d) == 1),
       "every compacted bucket dir must hold exactly one file")
     assert(after.rows == before.rows)
     val rowsAfter = VersionedHub.read(spark, path)
@@ -1094,8 +1094,9 @@ class VersionedHubSpec extends SparkTestBase {
       .as[(Long, Long, Long)].collect().toSet == before)
     assert(after.rows == 4096 && after.nBuckets.contains(4))
     // multiple z-segment files per bucket, all stats-recorded
-    for ((b, d) <- after.buckets) {
-      val files = after.fileStats.keys.filter(_.startsWith(d + "/"))
+    for ((b, ds) <- after.buckets) {
+      val files = after.fileStats.keys.filter(f =>
+        ds.exists(d => f.startsWith(d + "/")))
       assert(files.nonEmpty, s"bucket $b has no recorded files")
       assert(files.forall(after.fileStats(_).cols.contains("a")))
     }
@@ -1342,7 +1343,7 @@ class VersionedHubSpec extends SparkTestBase {
     VersionedHub.writeBucketed(spark,
       Seq((1L, "V1", -9.0)).toDF("k", "v", "d"), path, Seq("k"), 4)
     val v2 = VersionedHub.history(spark, path).last
-    val untouched = (v2.buckets.toSet intersect v1.buckets.toSet).map(_._2)
+    val untouched = (v2.buckets.toSet intersect v1.buckets.toSet).flatMap(_._2)
     assert(untouched.nonEmpty)
     for (d <- untouched) {
       val olds = v1.fileStats.filter(_._1.startsWith(d + "/"))
