@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * $SPARK_GRAFT_SF_DIR and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -14,26 +12,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // optional args = query-name filter (profiling aid); no args = full run
-    val only: Set[String] = args.toSet
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"unknown quer${if (unknown.size == 1) "y" else "ies"}: " +
-        unknown.toSeq.sorted.mkString(", "))
-    def selected = if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only).toMap
+    val selected = SparkEntry.select(args.toSeq).toMap
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.DefaultCores
+    val spark = GraftSession.build()
 
     def execute(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -48,7 +30,7 @@ object Bench {
       System.gc()
       Thread.sleep(50)
       val t0 = System.nanoTime()
-      execute(spark.range(0L, 400000000L, 1L, cpus.toInt)
+      execute(spark.range(0L, 400000000L, 1L, cpus)
         .selectExpr("sum(id * (id % 7)) AS v"))
       (System.nanoTime() - t0) / 1e9
     }
@@ -66,7 +48,7 @@ object Bench {
     // Measured reps deliberately KEEP their caches — reps share warm
     // intermediates via the plan-keyed CacheManager, and sweeping between
     // reps would change what every historical round's `min` measured.
-    graft.operators.Dedup.releaseReuseCaches()
+    GraftSession.releaseReuseCaches()
     // prime the target-SF file index (directory listing + schema inference
     // is per-session infrastructure, shared by all queries — don't bill it
     // to whichever query alphabetically touches a table first)
@@ -114,7 +96,7 @@ object Bench {
       scala.collection.mutable.ArrayBuffer[(Double, Double)]]
     val calibReps = scala.collection.mutable.ArrayBuffer.empty[Double]
     def measurePass(qnames: Seq[String]): Unit = {
-      if (sweep) graft.operators.Dedup.releaseReuseCaches()
+      if (sweep) GraftSession.releaseReuseCaches()
       calibReps += calibrate()
       val probe = calibReps.last
       for (name <- qnames) {

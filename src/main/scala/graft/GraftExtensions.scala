@@ -11,9 +11,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *
   *   SELECT dot_product(a.vec, b.vec), word_shingles(text, 3) FROM ...
   *
-  * Activate with
-  * `.config("spark.sql.extensions", "graft.GraftExtensions")` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * [[GraftSession.build]] activates them through
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`; another
+  * builder can call `.withExtensions(new GraftExtensions)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,7 +1,6 @@
 package graft
 
 import graft.engine.Ingest
-import org.apache.spark.sql.SparkSession
 
 /** CLI entrypoint.
   *
@@ -47,27 +46,5 @@ object Main {
           s"(${e.failures.map(_.id).mkString(", ")}).")
         sys.exit(1)
     } finally spark.stop()
-  }
-}
-
-/** Shared local SparkSession builder with scale-appropriate defaults. */
-object GraftSession {
-  def build(
-      master: String = sys.env.getOrElse("SPARK_MASTER", "local[*]"),
-      shufflePartitions: Int =
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-  ): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 }

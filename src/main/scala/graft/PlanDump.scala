@@ -2,43 +2,28 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round evidence dump: `.explain("formatted")` output for
   * named SparkEntry queries, one file per query, for plans/r{N}/ before /
   * after comparisons.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <query...>
   *
-  * The session mirrors Bench's configuration (local[32], shuffle
-  * partitions = cores, AQE on) so the dumped initial plans match what the
-  * bench executes. Lifecycle queries run their side-effecting setup while
-  * the DataFrame is built; only the returned frame's plan is dumped.
+  * The session is [[GraftSession.build]]'s, the one Bench runs on, so the
+  * dumped initial plans match what the bench executes. Lifecycle queries
+  * run their side-effecting setup while the DataFrame is built; only the
+  * returned frame's plan is dumped.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <sfDir> <outDir> <query...>")
     val sfDir = args(0)
     val outDir = args(1)
-    val names = args.drop(2).toSeq
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val selected = SparkEntry.select(args.drop(2).toSeq)
+    val spark = GraftSession.build()
     Files.createDirectories(Paths.get(outDir))
-    names.foreach { name =>
+    selected.foreach { case (name, fn) =>
       spark.sparkContext.setJobDescription(s"plandump: $name")
-      val df = SparkEntry.queries(name)(spark, sfDir)
+      val df = fn(spark, sfDir)
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(outDir, s"$name.txt"), formatted)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps the executed (AQE-final) physical plans of the headline queries to
   * PLANS.md — the artifact to eyeball for pushdown/broadcast/codegen
   * regressions and for plan review at scale.
@@ -52,7 +50,7 @@ object Plans {
     "q_ivf_index_hub",
     // round 17
     "q_ivf_adc_residual", "q_ann_ivf_seeded", "q_quality_learn_multi",
-    "q_tfidf_top_terms", "q_pq_encode", "q_adc_index_hub",
+    "q_pq_encode", "q_adc_index_hub",
     // round 18
     "q_html_extract", "q_bpe_index_hub", "q_ann_ivf_kpp",
     "q_curation_multiclass", "q_pq_topk", "q_line_dedup",
@@ -67,16 +65,8 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val selected = SparkEntry.select(headline)
+    val spark = GraftSession.build()
     val sb = new StringBuilder
     sb.append("# Executed physical plans (headline queries)\n\n")
     sb.append(s"Generated by `runMain graft.Plans` on `$sfDir`. AQE-final plans ")
@@ -84,8 +74,8 @@ object Plans {
     sb.append("PushedFilters reach the FileScan, ReadSchema is pruned, small\n")
     sb.append("dims use BroadcastHashJoin, aggs are partial+final, no\n")
     sb.append("CartesianProduct outside the intended broadcast NL joins.\n")
-    headline.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    selected.foreach { case (name, fn) =>
+      val df = fn(spark, sfDir)
       df.write.format("noop").mode("overwrite").save()
       sb.append(s"\n## $name\n\n```\n")
       sb.append(df.queryExecution.executedPlan.toString

@@ -21,6 +21,17 @@ object SparkEntry {
       CorpusQueries.all ++ IngestQueries.all ++ BehaviorQueries.all ++
       GraphQueries.all
 
+  /** The named queries in the order given (each once), or every query
+    * when `names` is empty; an unknown name fails before any query is
+    * built. */
+  def select(names: Seq[String])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = names.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    if (names.isEmpty) all.toSeq else names.distinct.map(n => n -> all(n))
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Byte-pair-encoding tokenizer APPLY (Sennrich, Haddow & Birch, "Neural
   * Machine Translation of Rare Words with Subword Units", ACL 2016 — the
   * public algorithm every modern LLM tokenizer descends from): words start
@@ -514,8 +516,8 @@ object Bpe {
     * bounded at `topK` rows, and [[selectBatch]] accepts up to `maxBatch`
     * provably-sequential merges per round, dividing the number of Spark
     * rounds by the batch width. Vocab lineage is truncated per round via
-    * [[Dedup.materialize]] (the CC-round pattern); driver state is the
-    * merge table itself — O(nMerges), never corpus- or vocab-sized.
+    * [[GraftSession.materialize]] (the CC-round pattern); driver state is
+    * the merge table itself — O(nMerges), never corpus- or vocab-sized.
     *
     * Symbols must stay single codepoints, so input text must not contain
     * the private-use outputs [U+E000, U+E000+nMerges) — the same PUA
@@ -545,7 +547,7 @@ object Bpe {
     import spark.implicits._
     // single-symbol words can never participate in a merge — drop them
     // here and after every rewrite (pure pruning: they contribute no pairs)
-    var vocab = Dedup.materialize(
+    var vocab = GraftSession.materialize(
       df.select(explode(split(trim(col(textCol)), "\\s+")).as("word"))
         .filter(length(col("word")) >= 2)
         .groupBy("word").agg(count(lit(1)).cast("long").as("freq")))
@@ -572,7 +574,7 @@ object Bpe {
           merges += ((l, r, o, c))
           (cpStr(l) + cpStr(r), cpStr(o))
         }
-        vocab = Dedup.materialize(
+        vocab = GraftSession.materialize(
           vocab.as[(String, Long)]
             .map { case (w, f) =>
               (reps.foldLeft(w)((acc, p) => acc.replace(p._1, p._2)), f)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Dedup.persistForReuse
+import graft.GraftSession.persistForReuse
 
 /** Distributed graph analytics over edge DataFrames — the link-graph verbs a
   * web-corpus pipeline runs (page quality via PageRank, community density via

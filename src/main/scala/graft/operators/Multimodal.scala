@@ -7,6 +7,8 @@ import javax.imageio.ImageIO
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** Multimodal-column plumbing: image/audio/video as opaque `binary` columns
   * with typed metadata, processed batch-wise.
   *
@@ -261,7 +263,7 @@ object Multimodal {
     */
   def syntheticVideos(df: DataFrame, idCol: String): Dataset[MediaRow] = {
     import df.sparkSession.implicits._
-    Dedup.fanOutNarrow(df.select(col(idCol).cast("long")))
+    GraftSession.fanOutNarrow(df.select(col(idCol).cast("long")))
       .as[Long].mapPartitions { ids =>
       ids.map { a =>
         val nFrames = (2 + (a % 3)).toInt
@@ -485,7 +487,7 @@ object Multimodal {
     */
   def syntheticMp4s(df: DataFrame, idCol: String): Dataset[MediaRow] = {
     import df.sparkSession.implicits._
-    Dedup.fanOutNarrow(df.select(col(idCol).cast("long")))
+    GraftSession.fanOutNarrow(df.select(col(idCol).cast("long")))
       .as[Long].mapPartitions { ids =>
       ids.map { a =>
         val tracks = Seq(("vide", "avc1", (10 + a % 7).toInt)) ++
@@ -577,7 +579,7 @@ object Multimodal {
     * amplitude = 1000 + (id % 20)·500; half-period = 2 + (id % 4) samples;
     * n = 800 + (id % 10)·80 samples @ 8 kHz.
     *
-    * Deliberately NOT fanned out ([[graft.operators.Dedup.fanOutNarrow]]):
+    * Deliberately NOT fanned out ([[graft.GraftSession.fanOutNarrow]]):
     * `javax.sound.sampled.AudioSystem` resolves codecs through a
     * synchronized provider registry, so 32 same-JVM threads contend and
     * measure SLOWER than one warm serial task (A/B at sf0.1: 1.6 s serial

@@ -292,7 +292,7 @@ object Similarity {
       s"samplePermille must be in [1, 1000], got $samplePermille")
     val base = corpus.select(col("id"),
       col("vec").cast("array<double>").as("vec"))
-    val smp = graft.operators.Dedup.persistForReuse(
+    val smp = graft.GraftSession.persistForReuse(
       if (samplePermille >= 1000) base
       else Sampling.hashSample(base, col("id"), lit(samplePermille)))
     withAqeOff(corpus) {
@@ -311,7 +311,7 @@ object Similarity {
     // pick — is bit-identical. The pick job doubles as the materialize job
     // for the round's updated column; the previous round's frame is
     // released only after that materialization (`prevF`).
-    var cur = graft.operators.Dedup.persistForReuse(
+    var cur = graft.GraftSession.persistForReuse(
       smp.select(col("id"), col("vec"),
         sqDist(col("vec"), typedLit(first.head._2)).as("_md")))
     var prevF: Option[DataFrame] = None
@@ -333,7 +333,7 @@ object Similarity {
           s"(${seeds.size} found) — lower k or raise samplePermille")
       seeds = seeds :+ ((next.head._1, next.head._2))
       if (seeds.size < k) {
-        val upd = graft.operators.Dedup.persistForReuse(
+        val upd = graft.GraftSession.persistForReuse(
           cur.select(col("id"), col("vec"),
             least(col("_md"),
               sqDist(col("vec"), typedLit(next.head._2))).as("_md")))
@@ -402,7 +402,7 @@ object Similarity {
     require(scale >= 1L, "scale must be positive")
     val base = corpus.select(col("id"),
       col("vec").cast("array<double>").as("vec"))
-    val smp = graft.operators.Dedup.persistForReuse(
+    val smp = graft.GraftSession.persistForReuse(
       if (samplePermille >= 1000) base
       else Sampling.hashSample(base, col("id"), lit(samplePermille)))
     withAqeOff(corpus) {
@@ -419,7 +419,7 @@ object Similarity {
     // one layer at a time, so every weight — and therefore every pick —
     // is bit-identical. Persisting each round's column keeps the executed
     // lineage one layer deep (the materialize job is sample-bounded).
-    var cur = graft.operators.Dedup.persistForReuse(
+    var cur = graft.GraftSession.persistForReuse(
       smp.select(col("id"), col("vec"),
         sqDist(col("vec"), typedLit(first.head._2)).as("_minD")))
     // the PREVIOUS round's frame: kept persisted until the pick job below
@@ -458,7 +458,7 @@ object Similarity {
           s"(${seeds.size} found) — lower k or raise samplePermille")
       seeds = seeds :+ next.head
       if (seeds.size < k) {
-        val upd = graft.operators.Dedup.persistForReuse(
+        val upd = graft.GraftSession.persistForReuse(
           cur.select(col("id"), col("vec"),
             least(col("_minD"),
               sqDist(col("vec"), typedLit(next.head._2))).as("_minD")))
@@ -859,7 +859,7 @@ object Similarity {
         .select(col("id"),
           posexplode(blocksOf(col("vec").cast("array<double>"))))
         .select(col("id"), col("pos").as("block"), col("col").as("sub"))
-      if (iters > 1) graft.operators.Dedup.persistForReuse(lf) else lf
+      if (iters > 1) graft.GraftSession.persistForReuse(lf) else lf
     }
     (1 to iters).foreach { _ =>
       val centDf = spark.createDataFrame(cents).toDF("block", "cid", "csub")
@@ -924,7 +924,7 @@ object Similarity {
       scale: Long = 1L << 20): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val cents = kmeansQuantized(corpus, nCells, coarseIters, scale)
-    val res = graft.operators.Dedup.persistForReuse(
+    val res = graft.GraftSession.persistForReuse(
       residualsFor(corpus, cents))
     val rvecs = res.select(col("id"), col("rvec").as("vec"))
     val cb = pqCodebookTrained(rvecs, dim, m, kSub, pqIters, scale)
@@ -932,7 +932,7 @@ object Similarity {
     // the ADC story keeps resident) and release the big residual cache
     // before the query phase: res (dim doubles/row) served training and
     // this one encode pass, and nothing downstream touches raw residuals.
-    val codes = graft.operators.Dedup.persistForReuse(
+    val codes = graft.GraftSession.persistForReuse(
       res.select(col("id"), col("cell"))
         .join(pqEncodeWith(rvecs, dim, m, cb), Seq("id")))
     codes.count()

@@ -571,7 +571,7 @@ object TextAnalysis {
     // corpus is scanned and exploded once, not once per consumer (without
     // this the final plan carries two FileScan + Generate branches and a
     // 100× corpus pays the tokenize+hash pass twice)
-    val tf = graft.operators.Dedup.persistForReuse(
+    val tf = graft.GraftSession.persistForReuse(
       df.select(col(idCol), explode(tokens(col(textCol))).as("term"))
         .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf")))
     // tf rows are already unique per (doc, term) — a plain count IS the
@@ -658,7 +658,7 @@ object TextAnalysis {
       .select(col(idCol), explode(
         graft.functions.WordShingles.wordShingles(col(textCol), 2)).as("bg"))
       .select(col(idCol), (Shingles.hash60(col("bg")) % lit(buckets.toLong)).as("b"))
-    val rawHits = graft.operators.Dedup.persistForReuse(hits(raw))
+    val rawHits = graft.GraftSession.persistForReuse(hits(raw))
     val tC = hits(target).groupBy(col("b")).agg(count(lit(1)).as("t_b"))
     val qC = rawHits.groupBy(col("b")).agg(count(lit(1)).as("q_b"))
     val ratio = qC.join(tC, Seq("b"), "left_outer")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
+
 /** SentencePiece-style UNIGRAM-LM tokenizer (Kudo 2018, "Subword
   * Regularization") — the second tokenizer family next to BPE
   * ([[Bpe]]): start from a large substring candidate vocabulary, and
@@ -112,7 +114,7 @@ object Unigram {
 
   /** Learn the unigram vocabulary on `df`'s text column. */
   def learn(df: DataFrame, textCol: String, maxWordLen: Int = 16): Trained = {
-    val words = Dedup.persistForReuse(distinctWords(df, textCol))
+    val words = GraftSession.persistForReuse(distinctWords(df, textCol))
     val tooLong = words.filter(length(col("word")) > maxWordLen).count()
     require(tooLong == 0L,
       s"$tooLong distinct words exceed maxWordLen=$maxWordLen — raise it " +

@@ -876,7 +876,7 @@ object IngestQueries {
       val q = spark.readStream.format("graft-hub").option("path", hub).load()
         .writeStream
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          val rows = graft.operators.Dedup.persistForReuse(b)
+          val rows = graft.GraftSession.persistForReuse(b)
           try {
             sizes += rows.count()
             graft.writers.VersionedHub.writeBucketed(rows.sparkSession, rows,

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.GraftSession
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -590,7 +591,7 @@ object PipelineQueries {
     // writeBucketed call otherwise re-runs the batch BPE encode (its own
     // stamped persist is call-scoped) — one encode pass instead of two,
     // result unchanged
-    val batchStats = Dedup.persistForReuse(
+    val batchStats = GraftSession.persistForReuse(
       Bpe.tokenStats(batch, "text", "doc_id", hubMerges))
     VersionedHub.writeBucketed(spark, batchStats, s"$tmp/tokens",
       Seq("doc_id"), 4)
@@ -2436,7 +2437,7 @@ object PipelineQueries {
     // writeBucketed call otherwise re-runs the batch assignment from the
     // corpus (its own stamped persist is call-scoped) — one encode pass
     // instead of two, result unchanged
-    val batchAssigned = Dedup.persistForReuse(
+    val batchAssigned = GraftSession.persistForReuse(
       Similarity.assignToCentroids(batch, hubCents)
         .select(col("id"), col("cell")))
     VersionedHub.writeBucketed(spark, batchAssigned, s"$tmp/index",
@@ -3418,7 +3419,7 @@ object PipelineQueries {
         val q = tok.stat.approxQuantile("n_chars", Array(p), 1e-4)(0)
         math.min(q.floor.toLong, maxC)
       }
-    val surv = graft.operators.Dedup.materialize(
+    val surv = graft.GraftSession.materialize(
       tok.filter(col("n_chars") >= thr))
     val guard = surv.agg(sum(col("n_tokens")).as("_stok"))
     // ≤1024 range buckets over the survivor ordering-key span; every doc of

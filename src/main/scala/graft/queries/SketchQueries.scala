@@ -585,7 +585,7 @@ object SketchQueries {
     // writeBucketed call otherwise re-runs the batch residual+PQ encode
     // (its own stamped persist is call-scoped) — one encode pass instead
     // of two, result unchanged
-    val batchCodes = graft.operators.Dedup.persistForReuse(
+    val batchCodes = graft.GraftSession.persistForReuse(
       Similarity.pqEncodeWith(
         bres.select(col("id"), col("rvec").as("vec")), EmbeddingDim, ResPqM,
         hubCb).join(bres.select(col("id"), col("cell")), Seq("id")))

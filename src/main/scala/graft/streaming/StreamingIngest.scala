@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.GraftSession
+
 /** Structured-Streaming extension of the ingestion engine.
   *
   * The reference plumbs `checkpoint_base` through every layer but never uses
@@ -294,7 +296,8 @@ object StreamingIngest {
         val pos = Dedup.positionalWindowHashes(batch, textCol, idCol, k)
         // ONE per-hash aggregate serves the index probe, the trim's
         // batch-first-occurrence rule, AND the index commit's entries
-        val bf = Dedup.persistForReuse(Dedup.batchWindowFirsts(pos, idCol))
+        val bf =
+          GraftSession.persistForReuse(Dedup.batchWindowFirsts(pos, idCol))
         // Crash-replay guard: the two hub commits below run concurrently,
         // so the index commit may land while the trim commit does not. A
         // replayed batch must then probe the index AS OF the last version
@@ -309,7 +312,7 @@ object StreamingIngest {
           case Some(own) => hist.filter(_.version < own.version).lastOption
           case None => hist.lastOption
         }
-        val index = Dedup.persistForReuse(
+        val index = GraftSession.persistForReuse(
           tip match {
             // bucket-pruned probe: only the index buckets that can hold one
             // of the batch's window hashes are read — O(batch), not O(index)

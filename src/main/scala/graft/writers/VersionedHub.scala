@@ -804,7 +804,7 @@ object VersionedHub {
     // collect, then the snapshot write) — persist so an expensive upstream
     // (a span trim, an LSH verify) runs once per attempt, not once per
     // consumer
-    val stamped = graft.operators.Dedup.persistForReuse(stamp(df))
+    val stamped = graft.GraftSession.persistForReuse(stamp(df))
     try {
       // the touched-bucket set gates which BASE dirs the merge reads; a
       // base-less first commit reads nothing, so the collect (one full
@@ -1842,7 +1842,7 @@ object VersionedHub {
       stageGroups(spark, path, Some(base), rewrite(rows), touched,
         shape = clustered(base.nBuckets))
     if (cand.size == 1) return stage(readGroups(spark, path, base, cand), cand)
-    val tagged = graft.operators.Dedup.persistForReuse(
+    val tagged = graft.GraftSession.persistForReuse(
       readGroups(spark, path, base, cand))
     try {
       val touched = tagged.filter(cond).select(BucketCol).distinct()
@@ -1854,11 +1854,10 @@ object VersionedHub {
     } finally tagged.unpersist()
   }
 
-  /** DV commits are capped at this many positions (per commit) by
-    * default: beyond it, rewriting the touched groups amortizes better
-    * than letting manifests and checkpoints carry ever-larger vectors.
-    * Tune with `spark.graft.hub.dv.maxPositions`; disable DVs entirely
-    * with `spark.graft.hub.dv.enabled = false`.
+  /** DV commits are capped at this many positions (per commit): beyond
+    * it, rewriting the touched groups amortizes better than letting
+    * manifests and checkpoints carry ever-larger vectors. Disable DVs
+    * entirely with `spark.graft.hub.dv.enabled = false`.
     */
   private[graft] val DvMaxPositions = 50000
 
@@ -1889,10 +1888,7 @@ object VersionedHub {
     // every manifest/checkpoint carry the vectors — and a delete that
     // empties whole buckets (TRUNCATE-like) should DROP their dirs, which
     // only the rewrite can express
-    val dvMax = math.min(
-      spark.conf.get("spark.graft.hub.dv.maxPositions",
-        DvMaxPositions.toString).toLong,
-      base.rows / 10).toInt
+    val dvMax = math.min(DvMaxPositions.toLong, base.rows / 10).toInt
     if (dvMax <= 0) return None
     // ONE job (a limit-collect scans growing partition batches in
     // successive jobs): each task ships at most dvMax + 1 positions

@@ -37,6 +37,14 @@ class EntryContractSpec extends SparkTestBase {
       "union lost entries to key collisions")
   }
 
+  test("every Plans.headline name is a SparkEntry query, listed once") {
+    val h = Plans.headline
+    val unknown = h.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"not a query: ${unknown.mkString(", ")}")
+    val dups = h.diff(h.distinct)
+    assert(dups.isEmpty, s"listed more than once: ${dups.mkString(", ")}")
+  }
+
   test("every query runs and returns rows at sf0.001") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, "/root/testdata/sf0.001").count()

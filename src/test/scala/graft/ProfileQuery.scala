@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Test-scope profiling aid: per-Spark-job timings for one SparkEntry
   * query at sf0.1. Usage: sbt "Test/runMain graft.ProfileQuery q_dup_spans"
   *
@@ -13,17 +11,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse("q_dup_spans")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     def execute(): Unit =
       SparkEntry.queries(name)(spark, "/root/testdata/sf0.1")
         .write.format("noop").mode("overwrite").save()

@@ -346,7 +346,7 @@ class StreamingSpec extends SparkTestBase {
       val q = spark.readStream.format("graft-hub").option("path", hub).load()
         .writeStream
         .foreachBatch { (b: DataFrame, id: Long) =>
-          val rows = graft.operators.Dedup.persistForReuse(b)
+          val rows = graft.GraftSession.persistForReuse(b)
           try {
             batchSizes += rows.count()
             VersionedHub.writeBucketed(rows.sparkSession, rows, acc,

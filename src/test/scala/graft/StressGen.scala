@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Test-scope generator for the 10× scale-stress corpus (round-8 verdict
@@ -23,15 +22,7 @@ object StressGen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/graft_stress")
     val copies = args.drop(1).headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     val base = "/root/testdata/sf0.1"
 
     val docs = spark.read.parquet(s"$base/documents.parquet")

@@ -38,7 +38,7 @@ class MergeCacheScopeSpec extends SparkTestBase {
       // the shared test session may carry persistForReuse caches from
       // earlier suites — start from a clean CacheManager so emptiness
       // after the MERGE is attributable to the command's own release
-      graft.operators.Dedup.releaseReuseCaches()
+      graft.GraftSession.releaseReuseCaches()
       spark.catalog.clearCache()
       assert(cacheEmpty, "precondition: nothing cached before the MERGE")
       Seq((2L, 500.0), (3L, 1.0), (99L, 9.0)).toDF("k", "w")
