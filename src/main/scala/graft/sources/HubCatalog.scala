@@ -97,7 +97,7 @@ class HubCatalog extends TableCatalog
 
   override def tableExists(ident: Identifier): Boolean = {
     val p = pathOf(ident)
-    fs(p).exists(new Path(p, "_log"))
+    VersionedHub.isHub(fs(p), new Path(p))
   }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
@@ -106,8 +106,7 @@ class HubCatalog extends TableCatalog
     val f = fs(dir.toString)
     if (!f.exists(dir)) Array.empty
     else f.listStatus(dir).collect {
-      case st if st.isDirectory &&
-          f.exists(new Path(st.getPath, "_log")) =>
+      case st if st.isDirectory && VersionedHub.isHub(f, st.getPath) =>
         Identifier.of(namespace, st.getPath.getName)
     }
   }

@@ -341,28 +341,6 @@ object HubDataSource {
       ldt.atZone(zone).toInstant.toEpochMilli
     }
 
-  /** [[graft.writers.HubWriter.canonicalKey]] rebuilt as a raw Catalyst
-    * tree (the Column API produces UnresolvedFunction nodes that cannot
-    * eval without an analyzer pass). Semantic identity with the writer's
-    * stamp is property-checked in HubDataSourceSpec against the
-    * distributed `stampBuckets` across every routable type.
-    */
-  private def canonicalKeyExpr(l: catalyst.expressions.Expression,
-      dt: DataType): catalyst.expressions.Expression = {
-    import catalyst.expressions.{CaseWhen, Cast, EqualTo => CatEqualTo}
-    dt match {
-      case ByteType | ShortType | IntegerType | LongType => Cast(l, StringType)
-      case _: org.apache.spark.sql.types.NumericType =>
-        val d = Cast(l, DoubleType)
-        val roundTrip = Cast(Cast(d, LongType), DoubleType)
-        CaseWhen(
-          Seq((CatEqualTo(d, roundTrip), Cast(Cast(d, LongType), StringType))),
-          Some(Cast(d, StringType)))
-      case DateType => Cast(Cast(l, TimestampType), StringType)
-      case _ => Cast(l, StringType)
-    }
-  }
-
   /** The bucket a literal routes to, computed DRIVER-LOCALLY: the same
     * `pmod(xxhash64(canonicalKey(...)), n)` expression the writer stamps
     * rows with, built over a literal and evaluated with Catalyst's
@@ -375,7 +353,7 @@ object HubDataSource {
       import catalyst.expressions.{Cast, Literal, Pmod, XxHash64}
       val l = Cast(Literal(value), dt)
       val h = Cast(
-        Pmod(new XxHash64(Seq(canonicalKeyExpr(l, dt))), Literal(n.toLong)),
+        Pmod(new XxHash64(Seq(HubWriter.canonicalKey(l, dt))), Literal(n.toLong)),
         IntegerType)
       val tz = spark.sessionState.conf.sessionLocalTimeZone
       val e = h.transformUp {
@@ -1026,30 +1004,13 @@ private[graft] object HubScan {
       // a 0-row snapshot (catalog CREATE TABLE) may hold no part files;
       // parquet cannot scan an empty dir but the manifest has the schema
       if (scanPaths.isEmpty || snapshotRows == 0L)
-        session.createDataFrame(
-          session.sparkContext.emptyRDD[Row], fullSchema)
+        VersionedHub.emptyFrame(session, fullSchema)
+      // the manifest already records the full-snapshot schema — passing
+      // it to the reader skips parquet schema INFERENCE (a footer-reading
+      // Spark job with mergeSchema) at planning time; files missing
+      // evolved columns read them as null
       else VersionedHub.alignTo(
-        // the manifest already records the full-snapshot schema —
-        // passing it to the reader skips parquet schema INFERENCE (a
-        // footer-reading Spark job with mergeSchema) at planning time;
-        // files missing evolved columns read them as null. Under
-        // column mapping the files spell renamed columns by their
-        // frozen physical names — scan with those, alias back. The
-        // snapshot's DELETION VECTORS filter right behind the scan
-        // (broadcast anti-join on (file, row index); identity when none)
-        {
-          // convertPartitioned adoptions spell partition values in file
-          // NAMES — re-materialize them behind the scan (identity when
-          // the schema carries no path-column marker)
-          val phys = graft.writers.ColumnMapping.physicalSchema(fullSchema)
-          graft.writers.ColumnMapping.toLogical(
-            VersionedHub.applyDv(session,
-              VersionedHub.injectPathCols(
-                session.read.schema(phys).parquet(scanPaths: _*), phys),
-              dvs),
-            fullSchema)
-        },
-        fullSchema)
+        VersionedHub.scanDirs(session, fullSchema, scanPaths, dvs), fullSchema)
     filters.flatMap(HubDataSource.filterToColumn(_, fullSchema))
       .foldLeft(base)(_ filter _)
       .select(required.fieldNames.toIndexedSeq.map(col): _*)

@@ -1,8 +1,10 @@
 package graft.writers
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{CaseWhen, Cast, EqualTo, Expression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 /** The HUB zone's merge kernel: keyed upsert with schema evolution, on
@@ -52,15 +54,24 @@ object HubWriter {
     *   - everything else: string cast (strings are already canonical; a
     *     non-numeric type never widens to numeric).
     */
-  private[graft] def canonicalKey(c: Column, dt: DataType): Column = dt match {
-    case ByteType | ShortType | IntegerType | LongType => c.cast(StringType)
-    case _: NumericType =>
-      val d = c.cast(DoubleType)
-      when(d === d.cast(LongType).cast(DoubleType), d.cast(LongType).cast(StringType))
-        .otherwise(d.cast(StringType))
-    case DateType => c.cast(TimestampType).cast(StringType)
-    case _ => c.cast(StringType)
-  }
+  private[graft] def canonicalKey(c: Column, dt: DataType): Column =
+    ColumnBridge.column(canonicalKey(ColumnBridge.expression(c), dt))
+
+  /** [[canonicalKey]] as a raw Catalyst tree, the one definition both the
+    * writer's routing stamp and the planner's driver-local `bucketOf`
+    * (which evaluates it over a literal with no analyzer pass) build on.
+    */
+  private[graft] def canonicalKey(e: Expression, dt: DataType): Expression =
+    dt match {
+      case ByteType | ShortType | IntegerType | LongType => Cast(e, StringType)
+      case _: NumericType =>
+        val d = Cast(e, DoubleType)
+        val asLong = Cast(d, LongType)
+        CaseWhen(Seq((EqualTo(d, Cast(asLong, DoubleType)),
+          Cast(asLong, StringType))), Some(Cast(d, StringType)))
+      case DateType => Cast(Cast(e, TimestampType), StringType)
+      case _ => Cast(e, StringType)
+    }
 
   /** [[merge]] for BUCKETED commits, computed with ONE exchange instead of
     * two (guide §2.4): both sides arrive already stamped with `bucketCol`

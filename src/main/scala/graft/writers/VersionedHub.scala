@@ -2,13 +2,9 @@ package graft.writers
 
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
-import org.yaml.snakeyaml.{LoaderOptions, Yaml}
-import org.yaml.snakeyaml.constructor.SafeConstructor
 
 /** HUB variant with a transaction log: versioned snapshots, optimistic
   * concurrent writers, and time-travel reads — the plain-Spark analogue of
@@ -931,17 +927,26 @@ object VersionedHub {
   private[graft] def readDirs(spark: SparkSession, v: Version,
       dirs: Seq[String]): DataFrame =
     v.schema match {
-      case Some(s) =>
-        // column mapping: files spell renamed columns by their frozen
-        // PHYSICAL names — scan with those, alias back to the logical view
-        // (identity when the table was never renamed)
-        val phys = ColumnMapping.physicalSchema(s)
-        ColumnMapping.toLogical(applyDv(spark,
-          injectPathCols(spark.read.schema(phys).parquet(dirs: _*), phys),
-          v.dvs), s)
+      case Some(s) => scanDirs(spark, s, dirs, v.dvs)
       case None => applyDv(spark,
         spark.read.option("mergeSchema", "true").parquet(dirs: _*), v.dvs)
     }
+
+  /** The one parquet scan of `dirs` under a recorded snapshot schema `s`,
+    * shared by [[readDirs]] and the DSv2 scan. Column mapping: files
+    * spell renamed columns by their frozen PHYSICAL names — scan with
+    * those, alias back to the logical view (identity when the table was
+    * never renamed). Partition values a [[convertPartitioned]] adoption
+    * spelled in file names are re-materialized ([[injectPathCols]]), and
+    * the deletion vectors `dvs` filter right behind the scan
+    * ([[applyDv]]); both are identity when absent.
+    */
+  private[graft] def scanDirs(spark: SparkSession, s: StructType,
+      dirs: Seq[String], dvs: Map[String, Seq[Long]]): DataFrame = {
+    val phys = ColumnMapping.physicalSchema(s)
+    ColumnMapping.toLogical(applyDv(spark,
+      injectPathCols(spark.read.schema(phys).parquet(dirs: _*), phys), dvs), s)
+  }
 
   /** Schema-metadata marker on columns a [[convertPartitioned]] adoption
     * materialized into FILE NAMES instead of file contents: the adopted
@@ -1114,7 +1119,7 @@ object VersionedHub {
     else readDirs(spark, v, v.dirs.map(resolve(path, _)))
   }
 
-  private def emptyFrame(spark: SparkSession, s: StructType): DataFrame =
+  private[graft] def emptyFrame(spark: SparkSession, s: StructType): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
 
@@ -2400,6 +2405,10 @@ object VersionedHub {
         "(CONVERT TO HUB) first")
   }
 
+  /** Whether `path` holds a hub (its log dir exists). */
+  private[graft] def isHub(fs: FileSystem, path: Path): Boolean =
+    fs.exists(new Path(path, LogDir))
+
   private[graft] def latest(spark: SparkSession, path: String): Option[Version] =
     history(spark, path).lastOption
 
@@ -2524,53 +2533,7 @@ object VersionedHub {
     val log = new Path(path, LogDir)
     fs.mkdirs(log)
     val manifest = new Path(log, f"${v.version}%08d.json")
-    val batchField = v.batchId.map(id => s""", "batchId": $id""").getOrElse("")
-    // file group → its dirs; manifests before the group model carried a
-    // flat `dataDir` or a bucketed `buckets` map instead (readManifest
-    // parses all three)
-    val groupsField = v.groups.toSeq.sortBy(_._1).map { case (g, ds) =>
-      s""""$g": ${ds.map(d => s""""${jsonEscape(d)}"""").mkString("[", ", ", "]")}"""
-    }.mkString(""", "groups": {""", ", ", "}")
-    val bucketFields = v.nBuckets.map { n =>
-      val bc = v.bucketCols.map(cs =>
-        s""", "bucketCols": ${cs.map(c => s""""$c"""").mkString("[", ", ", "]")}""")
-        .getOrElse("")
-      val br =
-        if (v.bucketRows.isEmpty) ""
-        else v.bucketRows.toSeq.sortBy(_._1)
-          .map { case (b, r) => s""""$b": $r""" }
-          .mkString(""", "bucketRows": {""", ", ", "}")
-      s""", "nBuckets": $n$bc$br"""
-    }.getOrElse("")
-    val schemaField = v.schemaJson
-      .map(s => s""", "schema": "${jsonEscape(s)}"""").getOrElse("")
-    // per-file data-skipping stats for THIS COMMIT'S NEW FILES ONLY — the
-    // incremental-log shape (Delta §4.1): a manifest is O(touched files),
-    // carried files reconstruct from the checkpoint + delta chain. Min/max
-    // travel tag-encoded (see FileStats.encodeScalar) so the YAML-safe
-    // parser round-trips them type-exactly.
-    // ALWAYS present, even empty: absence is the LEGACY-manifest marker
-    // (full "fileStats" map, no carried chain), so a zero-new-file commit
-    // (ALTER TABLE, a delete dropping whole buckets) that omitted the
-    // field would read back with NO carried stats at all — skipping and
-    // `t$files` silently blind on that version.
-    val statsField = s""", "statsDelta": ${encodeStatsMap(v.statsNew)}"""
-    // deletion-vector delta: only the files whose DV changed THIS commit
-    // (full updated vector each — replace-on-fold). Absent = no DV change
-    // (no legacy ambiguity: DVs never had a full-map encoding).
-    val dvField =
-      if (v.dvNew.isEmpty) ""
-      else s""", "dvDelta": ${encodeDvMap(v.dvNew)}"""
-    // CHECK constraints in force at this version (name -> predicate SQL)
-    val checksField =
-      if (v.checks.isEmpty) ""
-      else v.checks.toSeq.sortBy(_._1)
-        .map { case (n, sql) =>
-          s""""${jsonEscape(n)}": "${jsonEscape(sql)}"""" }
-        .mkString(""", "checks": {""", ", ", "}")
-    val content =
-      s"""{"version": ${v.version}, "ts": ${v.ts}, "rows": ${v.rows}$batchField$groupsField$bucketFields$schemaField$statsField$dvField$checksField}"""
-        .getBytes("UTF-8")
+    val content = HubLogCodec.encodeManifest(v)
     val won = CommitStore.forScheme(schemeOf(path)).putIfAbsent(
       fs, manifest, content)
     // periodic FULL-stats checkpoint (Delta §4.1): bounds every reader's
@@ -2595,12 +2558,11 @@ object VersionedHub {
   private[graft] val CheckpointInterval = 10
 
   /** Above this many live files, checkpoints are written as PARQUET
-    * (Delta §4.2's columnar checkpoint) instead of JSON. Measured at the
-    * boundary (ProfileManifestScale, SCALE.md §8j): SnakeYAML's object
-    * graph costs ~1 KB of driver heap per entry and parses ~100k entries
-    * in seconds — a 1M-file JSON checkpoint OOMs a default driver — while
-    * the parquet form collects the same maps in bounded batches. Below
-    * the threshold JSON wins: zero Spark jobs on the small-commit path.
+    * (Delta §4.2's columnar checkpoint) instead of JSON: a JSON checkpoint
+    * is decoded whole into one driver-side tree, while the parquet form
+    * collects the same maps in bounded batches. Below the threshold JSON
+    * wins: zero Spark jobs on the small-commit path (load times on both
+    * sides of it: ProfileManifestScale, SCALE.md §8j).
     */
   private[graft] val CheckpointParquetThreshold = 20000
 
@@ -2633,7 +2595,13 @@ object VersionedHub {
       v: Version): Unit = {
     val stats = v.fileStats
     val dvs = v.dvs
-    if (stats.size + dvs.size >= CheckpointParquetThreshold) {
+    val parquet = stats.size + dvs.size >= CheckpointParquetThreshold
+    val target =
+      if (parquet) checkpointParquetPath(path, v.version)
+      else checkpointPath(path, v.version)
+    val tmp = new Path(target.getParent,
+      s"${target.getName}.tmp-${UUID.randomUUID().toString.take(8)}")
+    if (parquet) {
       val spark = SparkSession.active
       import spark.implicits._
       val paths = (stats.keySet ++ dvs.keySet).toSeq.sorted
@@ -2646,36 +2614,23 @@ object VersionedHub {
           }),
           dvs.get(p))
       }
-      val target = checkpointParquetPath(path, v.version)
-      val tmp = new Path(target.getParent,
-        s"${target.getName}.tmp-${UUID.randomUUID().toString.take(8)}")
       spark.createDataset(rows)
         .repartition(math.max(1, rows.size / 500000))
         .write.mode("overwrite").parquet(tmp.toString)
-      // delete any stale target BEFORE renaming: HDFS rename(dir,
-      // existingDir) "succeeds" by NESTING src inside dst, so a torn
-      // checkpoint left by a crashed writer would never be repaired (the
-      // local-FS failure-then-retry shape hides this). Content is
-      // deterministic for a committed version and the checkpoint is
-      // best-effort — a reader probing mid-replace falls back to the
-      // JSON sibling or the delta fold, never errors.
-      if (fs.exists(target)) fs.delete(target, true)
-      if (!fs.rename(tmp, target)) fs.delete(tmp, true)
-      return
+    } else {
+      val out = fs.create(tmp, /* overwrite = */ true)
+      try out.write(HubLogCodec.encodeCheckpoint(v.version, stats, dvs))
+      finally out.close()
     }
-    val target = checkpointPath(path, v.version)
-    val tmp = new Path(target.getParent,
-      s"${target.getName}.tmp-${UUID.randomUUID().toString.take(8)}")
-    val content =
-      s"""{"version": ${v.version}, "fileStats": ${encodeStatsMap(stats)}, "dvs": ${encodeDvMap(dvs)}}"""
-        .getBytes("UTF-8")
-    val out = fs.create(tmp, /* overwrite = */ true)
-    try out.write(content) finally out.close()
-    if (!fs.rename(tmp, target)) {
-      // some filesystems refuse rename-onto-existing: replace explicitly
-      fs.delete(target, false)
-      if (!fs.rename(tmp, target)) fs.delete(tmp, false)
-    }
+    // delete any stale target BEFORE renaming: HDFS rename(dir,
+    // existingDir) "succeeds" by NESTING src inside dst, and some
+    // filesystems refuse rename-onto-existing, so a torn checkpoint left
+    // by a crashed writer would never be repaired. Content is
+    // deterministic for a committed version and the checkpoint is
+    // best-effort — a reader probing mid-replace falls back to the
+    // other form or the delta fold, never errors.
+    if (fs.exists(target)) fs.delete(target, true)
+    if (!fs.rename(tmp, target)) fs.delete(tmp, true)
   }
 
   /** The checkpointed full (stats, dvs) maps at `version`, or None when
@@ -2705,20 +2660,8 @@ object VersionedHub {
       } catch { case scala.util.control.NonFatal(_) => None }
     if (fromParquet.isDefined) return fromParquet
     val p = checkpointPath(path, version)
-    if (!fs.exists(p)) return None
-    val in = fs.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val parsed =
-      try new Yaml(new SafeConstructor(logLoaderOptions()))
-        .load[java.util.Map[String, AnyRef]](text)
-      catch { case _: Exception => null }
-    if (parsed == null) None
-    else Option(parsed.get("fileStats")).map(raw =>
-      (decodeStatsMap(raw),
-        Option(parsed.get("dvs")).map(decodeDvMap)
-          .getOrElse(Map.empty[String, Seq[Long]])))
+    if (!fs.exists(p)) None
+    else HubLogCodec.decodeCheckpoint(readBytes(fs, p))
   }
 
   /** Carried-file stats for version `n` as READERS reconstruct them: the
@@ -2737,116 +2680,32 @@ object VersionedHub {
       n: Int): Carried = {
     val fs = fileSystem(spark, path)
     val log = new Path(path, LogDir)
-    if (!fs.exists(log)) return Carried(Map.empty, Map.empty)
+    val empty = Carried(Map.empty, Map.empty)
+    if (!fs.exists(log)) return empty
     val names = fs.listStatus(log).map(_.getPath.getName)
     val ckVersions = names.collect {
       case CheckpointName(v) if v.toInt <= n => v.toInt
       case CheckpointParquetName(v) if v.toInt <= n => v.toInt
     }.distinct.sorted.reverse
-    var anchor = 0
-    var acc = Map.empty[String, FileStats.FileStat]
-    var dvAcc = Map.empty[String, Seq[Long]]
     // newest parseable checkpoint wins; a torn/corrupt one falls through
-    ckVersions.iterator
+    val (anchor, fromCheckpoint) = ckVersions.iterator
       .map(c => c -> readCheckpoint(spark, fs, path, c))
-      .collectFirst { case (c, Some(m)) => (c, m) }
-      .foreach { case (c, (m, d)) => anchor = c; acc = m; dvAcc = d }
-    if (anchor == n) return Carried(acc, dvAcc)
-    val manifestVersions = names.collect {
+      .collectFirst { case (c, Some((m, d))) => (c, Carried(m, d)) }
+      .getOrElse((0, empty))
+    names.collect {
       case ManifestName(v) if v.toInt > anchor && v.toInt < n => v.toInt
-    }.sorted
-    for (i <- manifestVersions; m <- readManifest(spark, path, i)) {
-      acc = acc ++ m.statsNew
-      // whole-vector replacement per file: a commit that deepens a file's
-      // DV writes the file's FULL updated vector, so last-writer-wins
-      dvAcc = dvAcc ++ m.dvNew
-    }
-    Carried(acc, dvAcc)
+    }.sorted.flatMap(readManifest(spark, path, _))
+      .foldLeft(fromCheckpoint) { (acc, m) =>
+        // whole-vector replacement per file: a commit that deepens a
+        // file's DV writes the file's FULL updated vector, so
+        // last-writer-wins
+        Carried(acc.stats ++ m.statsNew, acc.dvs ++ m.dvNew)
+      }
   }
 
   private val ManifestName = """(\d+)\.json""".r
   private val CheckpointName = """(\d+)\.checkpoint\.json""".r
   private val CheckpointParquetName = """(\d+)\.checkpoint\.parquet""".r
-
-  /** `{path: {rows, bytes, cols: {c: {mn, mx, nc}}}}` as manifest JSON —
-    * shared by the per-commit `statsDelta` field and the checkpoint file.
-    */
-  private def encodeStatsMap(
-      stats: Map[String, FileStats.FileStat]): String =
-    stats.toSeq.sortBy(_._1).map { case (p, f) =>
-      val cols = f.cols.toSeq.sortBy(_._1).map { case (c, s) =>
-        val parts =
-          s.min.map(x =>
-            s""""mn": "${jsonEscape(FileStats.encodeScalar(x))}"""").toSeq ++
-          s.max.map(x =>
-            s""""mx": "${jsonEscape(FileStats.encodeScalar(x))}"""") ++
-          s.nullCount.map(n => s""""nc": $n""")
-        s""""${jsonEscape(c)}": ${parts.mkString("{", ", ", "}")}"""
-      }.mkString("{", ", ", "}")
-      s""""${jsonEscape(p)}": {"rows": ${f.rows}, "bytes": ${f.bytes}, "cols": $cols}"""
-    }.mkString("{", ", ", "}")
-
-  /** `{path: [pos, pos, ...]}` — ascending physical row indices deleted
-    * from the file. Plain JSON longs: a DV commit is capped at
-    * [[DvMaxPositions]] positions (larger deletes rewrite), so the field
-    * stays small by construction.
-    */
-  private def encodeDvMap(dvs: Map[String, Seq[Long]]): String =
-    dvs.toSeq.sortBy(_._1).map { case (p, ps) =>
-      s""""${jsonEscape(p)}": ${ps.mkString("[", ", ", "]")}"""
-    }.mkString("{", ", ", "}")
-
-  private def decodeDvMap(raw: AnyRef): Map[String, Seq[Long]] = raw match {
-    case fm: java.util.Map[_, _] =>
-      fm.asScala.map { case (k, v0) =>
-        k.toString -> (v0 match {
-          case l: java.util.List[_] =>
-            l.asScala.map(_.toString.toLong).toIndexedSeq: Seq[Long]
-          case _ => Seq.empty[Long]
-        })
-      }.toMap
-    case _ => Map.empty
-  }
-
-  private def decodeStatsMap(raw: AnyRef): Map[String, FileStats.FileStat] =
-    raw match {
-      case fm: java.util.Map[_, _] =>
-        fm.asScala.map { case (k, e0) =>
-          val e = e0.asInstanceOf[java.util.Map[String, AnyRef]].asScala
-          val cols = e.get("cols") match {
-            case Some(cm: java.util.Map[_, _]) =>
-              cm.asScala.map { case (c, s0) =>
-                val s = s0.asInstanceOf[java.util.Map[String, AnyRef]].asScala
-                c.toString -> FileStats.ColStat(
-                  s.get("mn").flatMap(x => FileStats.decodeScalar(x.toString)),
-                  s.get("mx").flatMap(x => FileStats.decodeScalar(x.toString)),
-                  s.get("nc").map(_.toString.toLong))
-              }.toMap
-            case _ => Map.empty[String, FileStats.ColStat]
-          }
-          k.toString -> FileStats.FileStat(
-            e("rows").toString.toLong, e("bytes").toString.toLong, cols)
-        }.toMap
-      case _ => Map.empty
-    }
-
-  /** Minimal JSON string escape for the embedded schema record (the schema
-    * is itself JSON, so quotes and backslashes must survive the round-trip
-    * through the YAML-safe manifest parser).
-    */
-  private def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 16)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '"' => sb.append("\\\"")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < ' ' => sb.append("\\u%04x".format(c.toInt))
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
 
   /** A manifest file becomes VISIBLE at the create-exclusive claim, a few
     * microseconds before its JSON content lands — a concurrent reader can
@@ -2859,54 +2718,33 @@ object VersionedHub {
   private val ManifestWaitMs = 10L
   private val ManifestWaitAttempts = 100
 
-  /** One parse attempt, no wait. Manifests are JSON this writer produced, but
-    * the table path is writable by anyone with table access — parse with
-    * snakeyaml's SafeConstructor (scalars/maps/lists only; YAML tags that
-    * would instantiate arbitrary classes are rejected), the JVM analogue of
-    * `yaml.safe_load`.
-    */
   /** Instrumentation for the manifest-cache contract (spec-gated): how
     * many times a manifest file was actually opened and parsed.
     */
   private[graft] val manifestParses = new java.util.concurrent.atomic.AtomicLong
 
-  /** One read+parse attempt. `Left(io)` = the READ failed (on schemes with
-    * a claim-then-content window this can be a torn in-flight read, on any
-    * scheme a transient fault — retried, but NEVER silently treated as
-    * "version absent" once retries exhaust: a persistent IO failure must
-    * surface loudly, or readers would serve stale snapshots and repair
-    * could delete a live manifest). `Right(None)` = the content read fine
-    * but does not parse — the claimed-not-committed / dead-writer state.
+  /** One read+parse attempt, no wait. `Left(io)` = the READ failed (on
+    * schemes with a claim-then-content window this can be a torn in-flight
+    * read, on any scheme a transient fault — retried, but NEVER silently
+    * treated as "version absent" once retries exhaust: a persistent IO
+    * failure must surface loudly, or readers would serve stale snapshots
+    * and repair could delete a live manifest). `Right(None)` = the content
+    * read fine but is not a manifest — the claimed-not-committed /
+    * dead-writer state. The table path is writable by anyone with table
+    * access; [[HubLogCodec]] decodes plain JSON values only.
     */
-  /** SafeConstructor options for OUR OWN log files. SnakeYAML's default
-    * code-point limit (3 MB, a YAML-bomb guard for untrusted input)
-    * would silently null-parse any manifest/checkpoint past ~15k files —
-    * a BULK initial load of a large table writes exactly that, and a
-    * "parsed null" manifest reads as ABSENT, so the version would look
-    * stuck/corrupt. The log is trusted engine-written content; bound it
-    * at 1 GiB instead (a true runaway still fails closed).
-    */
-  private def logLoaderOptions(): LoaderOptions = {
-    val o = new LoaderOptions()
-    o.setCodePointLimit(1 << 30)
-    o
+  private def parseManifestAttempt(fs: FileSystem, manifest: Path)
+      : Either[java.io.IOException, Option[Version]] = {
+    manifestParses.incrementAndGet()
+    val bytes =
+      try readBytes(fs, manifest)
+      catch { case e: java.io.IOException => return Left(e) }
+    Right(HubLogCodec.decodeManifest(bytes))
   }
 
-  private def parseManifestAttempt(fs: FileSystem, manifest: Path)
-      : Either[java.io.IOException, Option[scala.collection.Map[String, AnyRef]]] = {
-    manifestParses.incrementAndGet()
-    val text =
-      try {
-        val in = fs.open(manifest)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      } catch { case e: java.io.IOException => return Left(e) }
-    val parsed =
-      try new Yaml(new SafeConstructor(logLoaderOptions()))
-        .load[java.util.Map[String, AnyRef]](text)
-      catch { case _: Exception => null }
-    if (parsed != null && parsed.containsKey("version")) Right(Some(parsed.asScala))
-    else Right(None)
+  private def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
   }
 
   /** A commit loser whose winning version number has an UNREADABLE manifest
@@ -3005,7 +2843,7 @@ object VersionedHub {
     val cacheKey = s"$path#$n"
     val cached = manifestCache.get(cacheKey)
     if (cached != null) return Some(cached)
-    var m: scala.collection.Map[String, AnyRef] = null
+    var m: Version = null
     var attempt = 0
     var lastIo: Option[java.io.IOException] = None
     while (m == null && attempt < ManifestWaitAttempts) {
@@ -3020,66 +2858,17 @@ object VersionedHub {
     // window is an infrastructure fault, not an in-flight commit — loud
     for (io <- lastIo if m == null) throw io
     if (m == null) return None // in-flight too long or corrupt: treat as absent
-    val groups: Map[Int, Seq[String]] = (m.get("groups"), m.get("buckets")) match {
-      case (Some(gm: java.util.Map[_, _]), _) =>
-        gm.asScala.map { case (k, ds) => k.toString.toInt ->
-          ds.asInstanceOf[java.util.List[_]].asScala.map(_.toString).toSeq
-        }.toMap
-      // manifests before the group model: bucket → its one dir ...
-      case (_, Some(bm: java.util.Map[_, _])) =>
-        bm.asScala.map { case (k, d) => k.toString.toInt -> Seq(d.toString) }
-          .toMap
-      // ... or a flat table's one snapshot dir
-      case _ => Map(FlatGroup -> Seq(m("dataDir").toString))
-    }
-    val bucketCols = m.get("bucketCols") match {
-      case Some(l: java.util.List[_]) => Some(l.asScala.map(_.toString).toSeq)
-      case _ => None
-    }
-    val bucketRows = m.get("bucketRows") match {
-      case Some(bm: java.util.Map[_, _]) =>
-        bm.asScala.map { case (k, v) => k.toString.toInt -> v.toString.toLong }
-          .toMap
-      case _ => Map.empty[Int, Long]
-    }
-    val version = m("version").toString.toInt
-    // two stats encodings coexist: "statsDelta" (incremental — this
-    // commit's files, carried files fold lazily from checkpoint + chain)
-    // and legacy "fileStats" (a full snapshot map per manifest — parses as
-    // statsNew wholesale and needs no carried chain, acting as an anchor)
-    // ONE lazy fold serves both carried thunks — stats and dvs come out
-    // of the same checkpoint + delta-chain walk
-    lazy val carriedState = loadCarried(spark, path, version)
-    val (statsNew, statsCarried, dvCarried) = m.get("statsDelta") match {
-      case Some(raw) =>
-        (decodeStatsMap(raw),
-          () => carriedState.stats,
-          () => carriedState.dvs)
-      case None => (m.get("fileStats").map(decodeStatsMap).getOrElse(
-        Map.empty[String, FileStats.FileStat]),
-        () => Map.empty[String, FileStats.FileStat],
-        Version.NoDvCarried)
-    }
-    val parsed = Version(
-      version,
-      m("ts").toString.toLong,
-      m("rows").toString.toLong,
-      m.get("batchId").map(_.toString.toLong),
-      m.get("nBuckets").map(_.toString.toInt),
-      groups,
-      bucketCols,
-      bucketRows,
-      m.get("schema").map(_.toString),
-      statsNew,
-      statsCarried,
-      m.get("dvDelta").map(decodeDvMap).getOrElse(Map.empty),
-      dvCarried,
-      m.get("checks") match {
-        case Some(cm: java.util.Map[_, _]) =>
-          cm.asScala.map { case (k, v) => k.toString -> v.toString }.toMap
-        case _ => Map.empty[String, String]
-      },
-      legacyStats = m.get("statsDelta").isEmpty)
+    // an incremental manifest carries only this commit's files: carried
+    // stats and DVs fold lazily from checkpoint + delta chain, ONE fold
+    // serving both thunks. A legacy full-`fileStats` manifest needs no
+    // chain and acts as an anchor.
+    val parsed =
+      if (m.legacyStats) m
+      else {
+        lazy val carried = loadCarried(spark, path, m.version)
+        m.copy(statsCarried = () => carried.stats,
+          dvCarried = () => carried.dvs)
+      }
     manifestCache.put(cacheKey, parsed)
     Some(parsed)
   }

@@ -118,7 +118,8 @@ class FlatGroupSpec extends SparkTestBase {
   private val legacyRows = (1L to 12L).map(k => (k, s"v$k"))
 
   for ((name, keys) <- Seq("flat" -> Seq.empty[String],
-      "bucketed" -> Seq("k"), "bucketed_nostats" -> Seq("k")))
+      "bucketed" -> Seq("k"), "bucketed_nostats" -> Seq("k"),
+      "groups_flat" -> Seq.empty[String], "groups_bucketed" -> Seq("k")))
     test(s"legacy manifests read and take new commits: $name") {
       val path = legacyHub(name)
       val hist = VersionedHub.history(spark, path)

@@ -3,11 +3,12 @@ package graft
 import graft.writers.VersionedHub
 import org.apache.spark.sql.functions.{col, concat, lit}
 
-/** Seeded random op sequences over flat hubs, checked against a
+/** Seeded random op sequences over hubs, checked against a
   * driver-side model: after every op, every retained version must read
   * back the model's rows for that version (order-insensitive hash and
-  * count), and its manifest `rows` must equal the read count. Runs on a
-  * keyless hub and on a keyed hub adopted by `convert`.
+  * count), and its manifest `rows` (and a bucketed manifest's per-bucket
+  * rows) must equal the read count. Runs on a keyless hub, on a keyed hub
+  * adopted by `convert` and on a 4-bucket keyed hub.
   */
 class FlatModelSpec extends SparkTestBase {
   import spark.implicits._
@@ -30,11 +31,16 @@ class FlatModelSpec extends SparkTestBase {
           s"extra ${got.diff(want).take(3)} missing ${want.diff(got).take(3)}")
       assert(v.rows == got.size, s"$step: v${v.version} manifest rows " +
         s"${v.rows} != read ${got.size}")
+      // a bucketed manifest's per-bucket rows (what pruned counts and
+      // the next commit's carried buckets use) add up to the same
+      if (v.nBuckets.isDefined)
+        assert(v.bucketRows.values.sum == got.size, s"$step: v${v.version} " +
+          s"bucketRows ${v.bucketRows} != read ${got.size}")
     }
 
   /** Runs the ops; returns how many DELETEs committed deletion vectors. */
   private def run(path: String, keys: Seq[String], v1: Rows, seed: Long,
-      nOps: Int): Int = {
+      nOps: Int, bucketed: Boolean = false): Int = {
     var dvCommits = 0
     val rnd = new scala.util.Random(seed)
     val model = collection.mutable.Map(1 -> v1)
@@ -105,7 +111,8 @@ class FlatModelSpec extends SparkTestBase {
           }
         case "optimize" =>
           val before = rows
-          commit(VersionedHub.optimize(spark, path), before)
+          commit(if (bucketed) VersionedHub.compactBuckets(spark, path)
+            else VersionedHub.optimize(spark, path), before)
         case "purge" =>
           val before = rows
           commit(VersionedHub.purge(spark, path), before)
@@ -122,6 +129,16 @@ class FlatModelSpec extends SparkTestBase {
     val v1 = (1L to 400L).map(k => (k % 150, s"s$k")).toVector
     VersionedHub.write(spark, v1.toDF("k", "v"), path, Seq.empty)
     assert(run(path, Seq.empty, v1, seed = 11L, nOps = 30) >= 2)
+  }
+
+  test("model: random ops on a 4-bucket keyed hub") {
+    val path = tmpDir("bucket_model") + "/t"
+    val v1 = (1L to 400L).map(k => (k, s"s$k")).toVector
+    VersionedHub.writeBucketed(spark, v1.toDF("k", "v"), path, Seq("k"), 4)
+    assert(run(path, Seq("k"), v1, seed = 13L, nOps = 30, bucketed = true) >= 2)
+    // the model checked reads folded from the JSON checkpoints at v10, v20
+    val hist = VersionedHub.history(spark, path)
+    assert(hist.forall(_.nBuckets.contains(4)) && hist.last.version >= 20)
   }
 
   test("model: random ops on a keyed flat hub adopted by convert") {

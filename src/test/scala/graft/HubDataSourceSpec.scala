@@ -190,6 +190,41 @@ class HubDataSourceSpec extends SparkTestBase {
     }
   }
 
+  test("bucketOf names the bucket writeBucketed puts each row in, across the widen ladder") {
+    import org.apache.spark.sql.types._
+    val n = 8
+    val cases: Seq[(DataType, Seq[Any])] = Seq(
+      ByteType -> Seq(1.toByte, (-3).toByte, 100.toByte),
+      ShortType -> Seq(0.toShort, (-12).toShort, 3000.toShort),
+      IntegerType -> Seq(5, -3, Int.MaxValue),
+      LongType -> Seq(0L, -7L, 123456789012L),
+      FloatType -> Seq(1.5f, -0.5f, 5.0f),
+      DoubleType -> Seq(5.0, 5.5, -2.25, 1e18),
+      DecimalType(10, 2) -> Seq(new java.math.BigDecimal("123.45"),
+        new java.math.BigDecimal("5.00"), new java.math.BigDecimal("-0.50")),
+      DateType -> Seq(java.sql.Date.valueOf("2024-02-29"),
+        java.sql.Date.valueOf("1969-12-31")),
+      TimestampType -> Seq(java.sql.Timestamp.valueOf("2024-02-29 12:34:56.789"),
+        java.sql.Timestamp.valueOf("1970-01-01 00:00:00")),
+      StringType -> Seq("", "a", "ключ", "multi word key"))
+    for ((dt, vals) <- cases) {
+      val path = tmpDir(s"bucket_of_${dt.typeName.replaceAll("\\W", "_")}")
+      val schema = StructType(Seq(StructField("c", dt), StructField("i", IntegerType)))
+      val rows = vals.zipWithIndex.map { case (v, i) => org.apache.spark.sql.Row(v, i) }
+      VersionedHub.writeBucketed(spark, spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 2), schema), path, Seq("c"), n)
+      val tip = VersionedHub.history(spark, path).last
+      val placed = tip.groups.toSeq.flatMap { case (b, dirs) =>
+        spark.read.parquet(dirs.map(VersionedHub.resolve(path, _)): _*)
+          .select("i").as[Int].collect().map(_ -> b)
+      }.toMap
+      assert(placed.size == vals.size, s"$dt: $placed")
+      for ((v, i) <- vals.zipWithIndex)
+        assert(graft.sources.HubDataSource.bucketOf(spark, v, dt, n)
+          .contains(placed(i)), s"$dt value $v: written to bucket ${placed(i)}")
+    }
+  }
+
   test("planning a pruned+skipped read launches ZERO Spark jobs") {
     val path = mkHub("dsv2_nojobs")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)

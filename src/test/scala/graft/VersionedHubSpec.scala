@@ -511,6 +511,43 @@ class VersionedHubSpec extends SparkTestBase {
         "bill the whole table to one version")
   }
 
+  test("non-printable and widened-bound string stats commit, read back and never wedge the hub") {
+    val path = tmpDir("vhub_wedge")
+    // U+0080; a 68-char value whose 64th char is '~' (the max bound's
+    // widening bumps it to DEL, U+007F); U+FFFE
+    val values = Seq("a\u0080b", ("x" * 63) + "~tail", "c\uFFFEd")
+    assert(values(1).length == 68 && values(1).charAt(63) == '~')
+    for (((s, i), next) <- values.zipWithIndex.zip(Seq("y", "y", "z"))) {
+      val n = VersionedHub.write(spark, Seq((i.toLong, s)).toDF("k", "v"),
+        path, Seq("k"))
+      assert(VersionedHub.history(spark, path).map(_.version).contains(n),
+        s"v$n missing from history after writing value $i")
+      assert(VersionedHub.read(spark, path).filter($"k" === i.toLong)
+        .select($"v").as[String].collect().toSeq == Seq(s))
+      // the next write commits on top
+      val m = VersionedHub.write(spark, Seq((100L + i, next)).toDF("k", "v"),
+        path, Seq("k"))
+      assert(m == n + 1 && VersionedHub.history(spark, path).last.version == m)
+    }
+    assert(VersionedHub.read(spark, path).count() == 6L)
+    // a manifest in the earlier writer's shape, which wrote such
+    // characters raw, parses too
+    val old = tmpDir("vhub_wedge_old")
+    new java.io.File(s"$old/_log").mkdirs()
+    val raw = values.head
+    val manifest =
+      s"""{"version": 1, "ts": 1, "rows": 1, "groups": {"0": ["data/1-aa"]},
+        | "statsDelta": {"data/1-aa/f.parquet": {"rows": 1, "bytes": 10,
+        | "cols": {"v": {"mn": "S:$raw", "mx": "S:$raw", "nc": 0}}}}}"""
+        .stripMargin
+    assert(manifest.contains('\u0080'))
+    java.nio.file.Files.write(java.nio.file.Paths.get(s"$old/_log/00000001.json"),
+      manifest.getBytes("UTF-8"))
+    val v1 = VersionedHub.history(spark, old).last
+    assert(v1.version == 1 && !v1.legacyStats)
+    assert(v1.fileStats("data/1-aa/f.parquet").cols("v").max.contains(raw))
+  }
+
   private def parquetFiles(path: String): Long = {
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
     try s.filter(p => p.toString.endsWith(".parquet")).count()
